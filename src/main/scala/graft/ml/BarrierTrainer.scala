@@ -22,8 +22,8 @@ import scala.collection.mutable.ArrayBuffer
   *     (`xgboost_core.py:423-425`);
   *   - traffic per level is O(nodes·features·bins), independent of row
   *     count — Rabit's asymptotics; fine for the tested worker counts,
-  *     while [[DistTrainer]] (treeAggregate) remains the default
-  *     large-cluster path (SURVEY §7.1 step 7 option b).
+  *     while [[DistTrainer]] (driver-summed level jobs) remains the
+  *     default large-cluster path (SURVEY §7.1 step 7 option b).
   *
   * Determinism: split finding runs on bit-identical global histograms on
   * every worker (the coordinator broadcasts one sum), and feature
@@ -31,7 +31,7 @@ import scala.collection.mutable.ArrayBuffer
   * randomness leaks into the model structure.
   */
 object BarrierTrainer {
-  private val MaxBins = 256
+  import DistTrainer.{MaxBins, addTreeMargins, initMargins, sampleFeaturesSeeded}
 
   def train(projected: DataFrame, hasW: Boolean, hasV: Boolean, hasM: Boolean,
       p0: BoosterParams, numWorkers: Int, forceRepartition: Boolean,
@@ -90,27 +90,13 @@ object BarrierTrainer {
     val weights = DistTrainer.effectiveWeights(mat, p)
     val baseMargin = obj.baseMargin(p.baseScore)
 
-    def initMargins(t: TrainMatrix): Array[Float] = {
-      val out = new Array[Float](t.numRows * k)
-      java.util.Arrays.fill(out, baseMargin)
-      if (t.baseMargins != null) {
-        var r = 0
-        while (r < t.numRows) {
-          var c = 0
-          while (c < k) { out(r * k + c) += t.baseMargins(r); c += 1 }
-          r += 1
-        }
-      }
-      out
-    }
-
-    val margins = initMargins(mat)
-    val evalMargins = if (eval != null) initMargins(eval) else null
+    val margins = initMargins(mat, baseMargin, k)
+    val evalMargins = if (eval != null) initMargins(eval, baseMargin, k) else null
     // warm start: fold init trees into local margins (identical on all
     // workers — no collective needed)
     initTrees.zipWithIndex.foreach { case (t, i) =>
-      updateMargins(mat, t, margins, k, i % k, p.missing)
-      if (eval != null) updateMargins(eval, t, evalMargins, k, i % k, p.missing)
+      addTreeMargins(mat, t, margins, k, i % k, p.missing)
+      if (eval != null) addTreeMargins(eval, t, evalMargins, k, i % k, p.missing)
     }
     val g = new Array[Float](n * k)
     val h = new Array[Float](n * k)
@@ -139,12 +125,12 @@ object BarrierTrainer {
             while (i < n) { gk(i) = g(i * k + cls); hk(i) = h(i * k + cls); i += 1 }
           }
         }
-        val features = sampleFeatures(m, p.colsampleBytree, frng)
+        val features = sampleFeaturesSeeded(m, p.colsampleBytree, frng)
         val sampled = sampleRows(pid, n, round, p)
         trees += growTreeCollective(coll, binned, n, m, cuts, gk, hk, sampled, features, p, round, cls)
         val tree = trees.last
-        updateMargins(mat, tree, margins, k, cls, p.missing)
-        if (eval != null) updateMargins(eval, tree, evalMargins, k, cls, p.missing)
+        addTreeMargins(mat, tree, margins, k, cls, p.missing)
+        if (eval != null) addTreeMargins(eval, tree, evalMargins, k, cls, p.missing)
         cls += 1
       }
       if (hasEval) {
@@ -326,41 +312,6 @@ object BarrierTrainer {
         i += 1
       }
       out
-    }
-  }
-
-  private def sampleFeatures(m: Int, colsample: Double, rng: java.util.Random): Array[Int] = {
-    if (colsample >= 1.0) Array.range(0, m)
-    else {
-      val take = math.max(1, math.round(m * colsample).toInt)
-      val idx = Array.range(0, m)
-      var i = 0
-      while (i < take) {
-        val j = i + rng.nextInt(m - i)
-        val t = idx(i); idx(i) = idx(j); idx(j) = t
-        i += 1
-      }
-      java.util.Arrays.sort(idx, 0, take)
-      idx.take(take)
-    }
-  }
-
-  /** Adds one tree's contribution to class column `cls` (raw values, all
-    * rows — same as the single-node trainer). */
-  private def updateMargins(mat: TrainMatrix, tree: Tree, margins: Array[Float],
-      k: Int, cls: Int, missing: Float): Unit = {
-    val m = mat.numCols
-    if (mat.numRows == 0) return
-    val row = new Array[Float](m)
-    var i = 0
-    while (i < mat.numRows) {
-      System.arraycopy(mat.values, i * m, row, 0, m)
-      if (!missing.isNaN) {
-        var f = 0
-        while (f < m) { if (row(f) == missing) row(f) = Float.NaN; f += 1 }
-      }
-      margins(i * k + cls) += tree.predict(row)
-      i += 1
     }
   }
 }

@@ -1,5 +1,6 @@
 package graft.ml
 
+import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
@@ -13,8 +14,8 @@ import scala.collection.mutable.ArrayBuffer
   * The reference's distributed path gang-schedules N barrier tasks that run
   * a Rabit allreduce ring (reference `xgboost_core.py:379-430`,
   * `utils.py:64-126`). The idiomatic Spark re-expression (SURVEY §7.1
-  * step 7, option b) keeps ONE global model on the driver and aggregates
-  * per-partition gradient histograms with `treeAggregate` per tree level
+  * step 7, option b) keeps ONE global model on the driver and sums
+  * per-partition gradient histograms on it, one Spark job per tree level
   * ([[BarrierTrainer]] is the gang-scheduled faithful alternative):
   *
   *   - data: ONE cached RDD[PartState] (binned matrix per partition),
@@ -23,22 +24,32 @@ import scala.collection.mutable.ArrayBuffer
   *     broadcast tree prefix if a partition is evicted or recomputed, so
   *     there is no per-round lineage growth, no re-persist churn, and no
   *     per-round materialization job;
-  *   - per level: one treeAggregate of (node × feature × bin) grad/hess
-  *     sums (zero value is lazily allocated on the executors — a null
-  *     zero keeps multi-MB arrays out of the job closure) → driver finds
-  *     splits with the same [[SplitFinder]] as the single-node path →
-  *     every worker sees the identical tree, the invariant Rabit provided;
+  *   - per level: one single-stage `sc.runJob` of a [[LevelJob]], which
+  *     accumulates (node × feature × bin) grad/hess sums per partition.
+  *     The job function is a named class, not a closure, so
+  *     `SparkContext.clean` has nothing to parse, and the partial tree
+  *     and the level's features ride in the task binary as its fields
+  *     (no per-level broadcasts). A [[SumInto]] result handler adds each
+  *     partition's histogram into one driver buffer as its task finishes
+  *     → driver finds splits with the same [[SplitFinder]] as the
+  *     single-node path → every worker sees the identical tree, the
+  *     invariant Rabit provided;
   *   - gradients: computed once per round from ROUND-START margins for
   *     all K classes (xgboost semantics — numWorkers must not change the
   *     model), memoized on the PartState;
-  *   - cuts: driver-side quantile sketch over a bounded sample, broadcast.
+  *   - cuts: distributed quantile sketch ([[QuantileCuts]]), broadcast.
+  *
+  * Trade-off of the single-stage level job: the driver receives all N
+  * partition histograms per level, streamed into one buffer. A
+  * `treeAggregate` sends it about √N of them for N ≥ 6, through an extra
+  * shuffle stage per level. The `q_ml_*` queries train with N = 2-8.
   *
   * At scale this shuffles the training set once (the repartition), then
   * only moves O(nodes·features·bins) histograms per level — independent of
   * row count, the property that makes histogram GBT viable at 100 TB.
   */
 object DistTrainer {
-  private val MaxBins = 256
+  private[ml] val MaxBins = 256
 
   /** Per-partition training state. The matrix/binned payload is the only
     * serialized state; margins and gradients are @transient caches,
@@ -127,53 +138,36 @@ object DistTrainer {
     var round = 0
     var stop = false
     val rng = new java.util.Random(p.seed)
-    var lastBc: Broadcast[Array[Tree]] = null
+    // Round-start tree prefix: gradients for ALL K class trees of the
+    // round derive from these margins (xgboost computes grad/hess once
+    // per round; advancing margins between classes would train a
+    // different multi:softprob model than the single-node path).
+    var prefixBc = sc.broadcast(trees.toArray)
 
     while (round < p.numRounds && !stop) {
-      // Round-start tree prefix: gradients for ALL K class trees of the
-      // round derive from these margins (xgboost computes grad/hess once
-      // per round; advancing margins between classes would train a
-      // different multi:softprob model than the single-node path).
-      val prefixBc = sc.broadcast(trees.toArray)
-      if (lastBc != null) lastBc.destroy()
       var cls = 0
       while (cls < k) {
         val features = sampleFeaturesSeeded(numFeatures, p.colsampleBytree, rng)
         trees += growTree(state, prefixBc, cutsBc, numFeatures, k, cls, round, p, obj, features)
         cls += 1
       }
-      lastBc = prefixBc
+      // margins incl. this round: the eval pass's and the next round's prefix
+      prefixBc.destroy()
+      prefixBc = sc.broadcast(trees.toArray)
 
       if (hasEval) {
-        val fullBc = sc.broadcast(trees.toArray) // margins incl. this round
-        val mSize = metricSize(metric)
-        val agg = state.treeAggregate(null: Array[Double])(
-          seqOp = { (acc, ps) =>
-            ensureMargins(ps, fullBc.value, k, p, obj, baseMargin)
-            val a = if (acc == null) new Array[Double](mSize) else acc
-            if (ps.eval != null && ps.eval.numRows > 0)
-              metricAccum(metric, ps.evalMargins, ps.eval.labels,
-                ps.eval.weights, math.max(k, 2), a)
-            a
-          },
-          combOp = { (x, y) =>
-            if (x == null) y else if (y == null) x
-            else {
-              var i = 0
-              while (i < x.length) { x(i) += y(i); i += 1 }
-              x
-            }
-          })
-        val s = if (agg == null) Double.NaN else finishMetricArr(metric, agg)
+        val sum = new SumInto
+        sc.runJob(state, new EvalJob(prefixBc, k, p, obj, baseMargin, metric),
+          state.partitions.indices, sum)
+        val s = if (sum.total == null) Double.NaN else finishMetricArr(metric, sum.total)
         val improved = if (EvalMetric.lowerIsBetter(metric)) s < bestScore else s > bestScore
         if (improved) { bestScore = s; bestIter = round }
         else if (p.earlyStoppingRounds > 0 && round - bestIter >= p.earlyStoppingRounds)
           stop = true
-        fullBc.destroy()
       }
       round += 1
     }
-    if (lastBc != null) lastBc.destroy()
+    prefixBc.destroy()
     state.unpersist(blocking = false)
 
     val model = new BoosterModel(obj.name, p.numClass, numFeatures, baseMargin,
@@ -186,20 +180,24 @@ object DistTrainer {
     ModelJson.toJson(model)
   }
 
-  // ---- one tree, depth-wise; one treeAggregate per level ----
+  // ---- one tree, depth-wise; one single-stage level job per level ----
   //
   // Histogram-subtraction trick (the standard hist-GBT optimization):
   // only the LIGHTER child of each split accumulates its histogram on
   // the workers; the sibling's histogram is derived on the driver as
   // parent - child. Workers touch at most half the rows per level past
-  // the root, and the aggregate moves histograms for only ~half the
+  // the root, and the level job moves histograms for only ~half the
   // nodes - worker CPU and network both halve at scale.
+  //
+  // The level job is submitted here, in growTree itself: its call site
+  // names the job in Spark's UI and event log.
   private def growTree(state: RDD[PartState], prefixBc: Broadcast[Array[Tree]],
       cutsBc: Broadcast[BinCuts], m: Int, k: Int, cls: Int, round: Int,
       p: BoosterParams, obj: Objective, features: Array[Int]): Tree = {
     val sc = state.sparkContext
     val baseMargin = obj.baseMargin(p.baseScore)
     val unit = m * MaxBins * 2
+    val partitions = state.partitions.indices
     val feature = new ArrayBuffer[Int]
     val binIdx = new ArrayBuffer[Int]
     val defaultLeft = new ArrayBuffer[Boolean]
@@ -262,40 +260,13 @@ object DistTrainer {
           i += 1
         }
       }
-      val partial = (feature.toArray, binIdx.toArray, defaultLeft.toArray,
-        left.toArray, right.toArray, computeSlot)
-      val partialBc = sc.broadcast(partial)
-      val featuresBc = sc.broadcast(levelFeats)
       val histLen = nCompute * unit
-      val isRootLevel = depth == 0
-      // null zero: the (possibly multi-MB) histogram buffers are
-      // allocated executor-side, not serialized into the closure
-      val agg = state.treeAggregate(null: (Array[Double], Array[Double], Array[Double]))(
-        seqOp = { (acc, ps) =>
-          ensureMargins(ps, prefixBc.value, k, p, obj, baseMargin)
-          ensureGrads(ps, round, k, p, obj)
-          val a = if (acc == null)
-            (new Array[Double](histLen), new Array[Double](1), new Array[Double](1))
-          else acc
-          val (pf, pb, pd, pl, pr, cs) = partialBc.value
-          accumulateLevel(ps, pf, pb, pd, pl, pr, cs, isRootLevel, featuresBc.value,
-            levelStart, levelEnd, k, cls, round, p, a._1, a._2, a._3)
-          a
-        },
-        combOp = { (x, y) =>
-          if (x == null) y else if (y == null) x
-          else {
-            var i = 0
-            while (i < x._1.length) { x._1(i) += y._1(i); i += 1 }
-            x._2(0) += y._2(0); x._3(0) += y._3(0)
-            x
-          }
-        })
-      partialBc.destroy()
-      featuresBc.destroy()
-      val (compHist, rootG, rootH) =
-        if (agg == null) (new Array[Double](histLen), new Array[Double](1), new Array[Double](1))
-        else agg
+      val sum = new SumInto
+      sc.runJob(state, new LevelJob(prefixBc, k, cls, round, p, obj, baseMargin,
+        feature.toArray, binIdx.toArray, defaultLeft.toArray, left.toArray, right.toArray,
+        computeSlot, levelFeats, levelStart, levelEnd, histLen), partitions, sum)
+      // computed nodes' histograms, then the root's g/h sums
+      val compHist = if (sum.total == null) new Array[Double](histLen + 2) else sum.total
 
       // assemble the FULL level histogram: computed nodes copy in,
       // derived nodes = parent - sibling
@@ -323,7 +294,7 @@ object DistTrainer {
         }
       }
 
-      if (depth == 0) { gSum(0) = rootG(0); hSum(0) = rootH(0) }
+      if (depth == 0) { gSum(0) = compHist(histLen); hSum(0) = compHist(histLen + 1) }
       // (child g/h sums were recorded exactly at addNode from the
       // parent's split stats - no aggregation needed past the root)
 
@@ -412,74 +383,119 @@ object DistTrainer {
     }
   }
 
-  /** Worker-side: route rows through the partial tree on binned values,
-    * accumulate histograms ONLY for the level's compute-designated nodes
-    * (the lighter child of each split; siblings are derived driver-side
-    * by subtraction). Root level also aggregates the node g/h sums. */
-  private def accumulateLevel(ps: PartState,
+  /** Adds each task's `Array[Double]` into the first one received, as
+    * tasks finish (the order `fold`'s merge used under `treeAggregate`):
+    * the driver holds one buffer, not N. Spark calls it on one thread. */
+  private final class SumInto extends ((Int, Array[Double]) => Unit) {
+    var total: Array[Double] = _
+    def apply(partition: Int, a: Array[Double]): Unit =
+      if (total == null) total = a
+      else {
+        var i = 0
+        while (i < a.length) { total(i) += a(i); i += 1 }
+      }
+  }
+
+  /** One level's pass over a partition: route rows through the partial
+    * tree on binned values, accumulate histograms ONLY for the level's
+    * compute-designated nodes (the lighter child of each split; siblings
+    * are derived driver-side by subtraction). Returns those `histLen`
+    * histogram entries, then the root's g and h sums (filled on the root
+    * level only). A named class rather than a closure: `SparkContext.clean`
+    * skips it, and its fields are the partial tree and level features. */
+  private final class LevelJob(prefixBc: Broadcast[Array[Tree]], k: Int, cls: Int,
+      round: Int, p: BoosterParams, obj: Objective, baseMargin: Float,
       tFeature: Array[Int], tBinIdx: Array[Int], tDefaultLeft: Array[Boolean],
       tLeft: Array[Int], tRight: Array[Int], computeSlot: Array[Int],
-      isRootLevel: Boolean, features: Array[Int],
-      levelStart: Int, levelEnd: Int, k: Int, cls: Int,
-      round: Int, p: BoosterParams,
-      hist: Array[Double], rootG: Array[Double], rootH: Array[Double]): Unit = {
-    val mat = ps.train
-    val n = mat.numRows
-    if (n == 0) return
-    val m = mat.numCols
-    val g = ps.gCache
-    val h = ps.hCache
-    // position cache for the tree under growth (see PartState.nodePos):
-    // reset to the root when a new (round, cls) tree starts
-    if (ps.nodePos == null || ps.nodePos.length != n) ps.nodePos = new Array[Int](n)
-    if (ps.posRound != round || ps.posCls != cls) {
-      java.util.Arrays.fill(ps.nodePos, 0)
-      ps.posRound = round; ps.posCls = cls
-    }
-    val pos = ps.nodePos
+      features: Array[Int], levelStart: Int, levelEnd: Int, histLen: Int)
+      extends ((TaskContext, Iterator[PartState]) => Array[Double]) with Serializable {
 
-    var i = 0
-    while (i < n) {
-      if (p.subsample >= 1.0 || sampledRow(p.seed, round, i, mat, p.subsample)) {
-        // resume routing from the stored node: only the steps the levels
-        // since the last visit appended are walked (amortized one step
-        // per level instead of a root walk)
-        var node = pos(i)
-        var depth = 0
-        while (tLeft(node) >= 0 && depth < 64) {
-          val b = ps.binned(i * m + tFeature(node)) & 0xff
-          val goLeft =
-            if (b == BinCuts.MissingBin) tDefaultLeft(node)
-            else b <= tBinIdx(node)
-          node = if (goLeft) tLeft(node) else tRight(node)
-          depth += 1
-        }
-        pos(i) = node
-        if (node >= levelStart && node < levelEnd) {
-          val gi = g(i * k + cls)
-          val hi = h(i * k + cls)
-          if (isRootLevel) { rootG(0) += gi; rootH(0) += hi }
-          val slot = computeSlot(node - levelStart)
-          if (slot >= 0) {
-            val histBase = slot * m * MaxBins * 2
-            var fi = 0
-            while (fi < features.length) {
-              val f = features(fi)
-              val b = ps.binned(i * m + f) & 0xff
-              if (b != BinCuts.MissingBin) {
-                val idx = histBase + (f * MaxBins + b) * 2
-                hist(idx) += gi
-                hist(idx + 1) += hi
+    def apply(ctx: TaskContext, it: Iterator[PartState]): Array[Double] = {
+      val out = new Array[Double](histLen + 2)
+      it.foreach { ps =>
+        ensureMargins(ps, prefixBc.value, k, p, obj, baseMargin)
+        ensureGrads(ps, round, k, p, obj)
+        accumulate(ps, out)
+      }
+      out
+    }
+
+    private def accumulate(ps: PartState, hist: Array[Double]): Unit = {
+      val mat = ps.train
+      val n = mat.numRows
+      if (n == 0) return
+      val m = mat.numCols
+      val g = ps.gCache
+      val h = ps.hCache
+      val isRootLevel = levelStart == 0
+      // position cache for the tree under growth (see PartState.nodePos):
+      // reset to the root when a new (round, cls) tree starts
+      if (ps.nodePos == null || ps.nodePos.length != n) ps.nodePos = new Array[Int](n)
+      if (ps.posRound != round || ps.posCls != cls) {
+        java.util.Arrays.fill(ps.nodePos, 0)
+        ps.posRound = round; ps.posCls = cls
+      }
+      val pos = ps.nodePos
+
+      var i = 0
+      while (i < n) {
+        if (p.subsample >= 1.0 || sampledRow(p.seed, round, i, mat, p.subsample)) {
+          // resume routing from the stored node: only the steps the levels
+          // since the last visit appended are walked (amortized one step
+          // per level instead of a root walk)
+          var node = pos(i)
+          var depth = 0
+          while (tLeft(node) >= 0 && depth < 64) {
+            val b = ps.binned(i * m + tFeature(node)) & 0xff
+            val goLeft =
+              if (b == BinCuts.MissingBin) tDefaultLeft(node)
+              else b <= tBinIdx(node)
+            node = if (goLeft) tLeft(node) else tRight(node)
+            depth += 1
+          }
+          pos(i) = node
+          if (node >= levelStart && node < levelEnd) {
+            val gi = g(i * k + cls)
+            val hi = h(i * k + cls)
+            if (isRootLevel) { hist(histLen) += gi; hist(histLen + 1) += hi }
+            val slot = computeSlot(node - levelStart)
+            if (slot >= 0) {
+              val histBase = slot * m * MaxBins * 2
+              var fi = 0
+              while (fi < features.length) {
+                val f = features(fi)
+                val b = ps.binned(i * m + f) & 0xff
+                if (b != BinCuts.MissingBin) {
+                  val idx = histBase + (f * MaxBins + b) * 2
+                  hist(idx) += gi
+                  hist(idx + 1) += hi
+                }
+                fi += 1
               }
-              fi += 1
             }
           }
         }
+        i += 1
       }
-      i += 1
     }
   }
 
+  /** The per-round eval pass over a partition: its weighted metric parts
+    * ([[metricSize]] entries) under the margins of `treesBc`. */
+  private final class EvalJob(treesBc: Broadcast[Array[Tree]], k: Int, p: BoosterParams,
+      obj: Objective, baseMargin: Float, metric: String)
+      extends ((TaskContext, Iterator[PartState]) => Array[Double]) with Serializable {
+
+    def apply(ctx: TaskContext, it: Iterator[PartState]): Array[Double] = {
+      val a = new Array[Double](metricSize(metric))
+      it.foreach { ps =>
+        ensureMargins(ps, treesBc.value, k, p, obj, baseMargin)
+        if (ps.eval != null && ps.eval.numRows > 0)
+          metricAccum(metric, ps.evalMargins, ps.eval.labels, ps.eval.weights, math.max(k, 2), a)
+      }
+      a
+    }
+  }
 
   private[ml] def effectiveWeights(mat: TrainMatrix, p: BoosterParams): Array[Float] = {
     if (p.scalePosWeight != 1.0 && p.objective == "binary:logistic") {
@@ -503,7 +519,7 @@ object DistTrainer {
     ((x >>> 11).toDouble / (1L << 53).toDouble) < subsample
   }
 
-  private def initMargins(mat: TrainMatrix, base: Float, k: Int): Array[Float] = {
+  private[ml] def initMargins(mat: TrainMatrix, base: Float, k: Int): Array[Float] = {
     val out = new Array[Float](mat.numRows * k)
     java.util.Arrays.fill(out, base)
     if (mat.baseMargins != null) {
@@ -519,7 +535,7 @@ object DistTrainer {
 
   /** Folds one tree's contribution into class column `cls` in place (all
     * rows, raw feature values — same as the single-node trainer). */
-  private def addTreeMargins(mat: TrainMatrix, tree: Tree, margins: Array[Float],
+  private[ml] def addTreeMargins(mat: TrainMatrix, tree: Tree, margins: Array[Float],
       k: Int, cls: Int, missing: Float): Unit = {
     val m = mat.numCols
     if (mat.numRows == 0) return
@@ -536,7 +552,7 @@ object DistTrainer {
     }
   }
 
-  private def sampleFeaturesSeeded(m: Int, colsample: Double, rng: java.util.Random): Array[Int] = {
+  private[ml] def sampleFeaturesSeeded(m: Int, colsample: Double, rng: java.util.Random): Array[Int] = {
     if (colsample >= 1.0) Array.range(0, m)
     else {
       val take = math.max(1, math.round(m * colsample).toInt)

@@ -3,7 +3,7 @@ package graft.ml
 import scala.collection.mutable.ArrayBuffer
 
 /** Split search over accumulated histograms — shared by the local trainer
-  * and the distributed (treeAggregate) trainer, which produce identical
+  * and the distributed trainers, which produce identical
   * histogram layouts. All math is XGBoost-style second-order:
   * score(G,H) = T(G)²/(H+λ) with T the L1 soft-threshold, leaf weight
   * −T(G)/(H+λ), split gain ½(scoreL+scoreR−scoreP) − γ.

@@ -87,7 +87,7 @@ trait XGBoostParams extends Params with org.apache.spark.internal.Logging {
   final val useBarrierMode = new BooleanParam(this, "useBarrierMode",
     "distributed training runs as gang-scheduled barrier tasks with an " +
     "allGather-based histogram allreduce (the reference's Rabit shape, " +
-    "xgboost_core.py:379-430) instead of driver-coordinated treeAggregate")
+    "xgboost_core.py:379-430) instead of driver-coordinated per-level histogram jobs")
   final val externalStoragePrecision = new IntParam(this, "externalStoragePrecision",
     "significant digits for spilled values", ParamValidators.gt(0))
 

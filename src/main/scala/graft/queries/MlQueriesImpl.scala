@@ -181,7 +181,7 @@ object MlQueriesImpl {
       FROM embeddings ORDER BY vec_id"""))
 
   /** Distributed training at table scale: 8 workers over the full
-    * lineitem table (~600k rows at sf0.1) — the treeAggregate histogram
+    * lineitem table (~600k rows at sf0.1) — the DistTrainer histogram
     * path whose per-level traffic is independent of row count. Output is
     * a 3-row summary so the bench measures training, not result
     * materialization — now driver-checked: per-group row counts replay
@@ -230,7 +230,7 @@ object MlQueriesImpl {
   /** C2+C8 faithful path, driver-checked: gang-scheduled barrier
     * training (socket-collective histogram allreduce, partition 0 =
     * tracker, bootstrap via ONE allGather) must produce the SAME model
-    * as the treeAggregate path — the invariant Rabit gave the reference
+    * as the DistTrainer path — the invariant Rabit gave the reference
     * and BarrierTrainerSpec pins at 1e-6. The query emits the per-row
     * parity witness so the driver hash re-checks it every round. */
   val trainPredictBarrier = Q(
@@ -241,7 +241,7 @@ object MlQueriesImpl {
         .setFeaturesCol("embedding").setLabelCol("label")
         .setNumWorkers(2).setNEstimators(10).setMaxDepth(4)
       // both sides of the parity check are independent jobs (the barrier
-      // gang needs 2 of local[32]'s slots, the treeAggregate path any) —
+      // gang needs 2 of local[32]'s slots, the DistTrainer path any) —
       // fit them concurrently from two threads
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
@@ -302,10 +302,10 @@ object MlQueriesImpl {
     *     label classes and `prediction` is its argmax (the same
     *     margin→softmax→argmax contract q_ml_train_predict_cls pins for
     *     the single-node tier);
-    *   - barrier-vs-treeAggregate parity at numWorkers=2: per-row max
+    *   - barrier-vs-DistTrainer parity at numWorkers=2: per-row max
     *     probability divergence < 1e-6 (BarrierTrainerSpec's bound —
     *     with 2 workers every histogram merge is one commutative add,
-    *     so gang-scheduled collectives and treeAggregate must agree). */
+    *     so gang-scheduled collectives and DistTrainer must agree). */
   val trainPredictClsDist = Q(
     "q_ml_train_predict_cls_dist",
     (s, dir) => {
@@ -315,7 +315,7 @@ object MlQueriesImpl {
         .setFeaturesCol("embedding").setLabelCol("label")
         .setNumWorkers(2).setNEstimators(10).setMaxDepth(4)
       // both fits are independent Spark jobs (the barrier gang needs 2
-      // of local[32]'s slots, the treeAggregate path any) — run them
+      // of local[32]'s slots, the DistTrainer path any) — run them
       // concurrently like the regressor parity queries
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global

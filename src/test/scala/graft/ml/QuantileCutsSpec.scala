@@ -2,10 +2,14 @@ package graft.ml
 
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.util.QuantileSummaries
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Distributed quantile-sketch bin cuts: equivalence with the exact
-  * per-feature construction at small N, and sanity at larger N.
+  * per-feature construction at small N, sanity at larger N, and the
+  * one-walk quantile extraction against Spark's per-quantile query.
   */
 class QuantileCutsSpec extends AnyFunSuite {
   lazy val spark = graft.SparkTestSession.spark
@@ -46,5 +50,72 @@ class QuantileCutsSpec extends AnyFunSuite {
     val cuts = QuantileCuts.fromRdd(rowsRdd(data), -999.0f)
     assert(cuts.cuts(0).forall(_ != -999.0f))
     assert(cuts.binOf(0, Float.NaN) == BinCuts.MissingBin)
+  }
+
+  // ---- evenQuantiles == (1 to budget).map(j => sk.query(j / (budget + 1.0))) ----
+
+  private val Budgets = Seq(1, 15, 254)
+
+  private def rowsIn(values: Seq[Array[Double]], partitions: Int) =
+    spark.sparkContext.parallelize(values.map(v => Row(Vectors.dense(v), 0.0)), partitions)
+
+  /** Bit-identical Float quantiles, and identical cuts, for every budget. */
+  private def assertWalkMatchesQuery(sketches: Array[QuantileSummaries], what: String): Unit =
+    for ((sk, f) <- sketches.zipWithIndex if sk.count > 0; budget <- Budgets) {
+      val want = (1 to budget).map(j => sk.query(j / (budget + 1.0)).get.toFloat).toArray
+      val got = QuantileCuts.evenQuantiles(sk, budget).map(_.toFloat)
+      val bits = (a: Array[Float]) => a.map(java.lang.Float.floatToRawIntBits).toSeq
+      assert(bits(got) == bits(want),
+        s"$what, feature $f, budget $budget: first difference at j=" +
+          s"${got.indices.find(i => bits(got)(i) != bits(want)(i)).map(_ + 1)}")
+      val minV = sk.query(0.0).get.toFloat
+      val wantCuts = want.filter(c => c > minV && !c.isNaN).distinct.sorted
+      assert(QuantileCuts.cutsOf(sk, budget).toSeq == wantCuts.toSeq, s"$what, feature $f, budget $budget")
+    }
+
+  test("cut walk == per-quantile query: random data of random shape (fixed-seed scalacheck)") {
+    val column: Gen[Int => Double] = Gen.chooseNum(1L, 1000L).flatMap { seed =>
+      val r = new scala.util.Random(seed)
+      Gen.oneOf[Int => Double](
+        (_: Int) => r.nextGaussian(),
+        (_: Int) => r.nextDouble() * 100,
+        (_: Int) => math.exp(r.nextGaussian() * 3), // long right tail
+        (i: Int) => (i * 7919 % (seed % 39 + 2)).toDouble) // low cardinality
+    }
+    val dataset = for {
+      rows <- Gen.chooseNum(1, 30000)
+      parts <- Gen.chooseNum(1, 8)
+      cols <- Gen.listOfN(3, column)
+    } yield (rows, parts, cols)
+    Gen.listOfN(8, dataset).pureApply(Gen.Parameters.default, Seed(20261017L)).foreach {
+      case (rows, parts, cols) =>
+        val data = Seq.tabulate(rows)(i => cols.map(c => c(i)).toArray)
+        assertWalkMatchesQuery(QuantileCuts.sketch(rowsIn(data, parts), Float.NaN),
+          s"$rows rows in $parts partitions")
+    }
+  }
+
+  test("cut walk == per-quantile query: all-equal, 5-value and heavily tied columns") {
+    val rng = new scala.util.Random(5)
+    val data = Seq.tabulate(20000) { i =>
+      Array(3.25, (i % 5).toDouble,
+        if (rng.nextDouble() < 0.9) 1.0 else rng.nextDouble(),
+        if (i % 100 < 60) 0.0 else (i % 7).toDouble)
+    }
+    assertWalkMatchesQuery(QuantileCuts.sketch(rowsIn(data, 4), Float.NaN), "tied columns")
+  }
+
+  test("cut walk == per-quantile query: single-row partitions") {
+    val rng = new scala.util.Random(7)
+    val data = Seq.fill(48)(Array(rng.nextGaussian(), (rng.nextInt(3)).toDouble))
+    assertWalkMatchesQuery(QuantileCuts.sketch(rowsIn(data, 48), Float.NaN), "single-row partitions")
+  }
+
+  test("cut walk == per-quantile query: the missing sentinel stays out") {
+    val rng = new scala.util.Random(9)
+    val data = Seq.tabulate(10000)(i => Array(if (i % 3 == 0) -999.0 else rng.nextDouble() * 10))
+    val sketches = QuantileCuts.sketch(rowsIn(data, 4), -999.0f)
+    assert(sketches(0).count == data.count(_(0) != -999.0))
+    assertWalkMatchesQuery(sketches, "missing sentinel")
   }
 }

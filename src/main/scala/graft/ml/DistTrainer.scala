@@ -40,9 +40,13 @@ import scala.collection.mutable.ArrayBuffer
   *   - cuts: distributed quantile sketch ([[QuantileCuts]]), broadcast.
   *
   * Trade-off of the single-stage level job: the driver receives all N
-  * partition histograms per level, streamed into one buffer. A
-  * `treeAggregate` sends it about √N of them for N ≥ 6, through an extra
-  * shuffle stage per level. The `q_ml_*` queries train with N = 2-8.
+  * partition histograms per level, streamed into one buffer, where a
+  * `treeAggregate` sends it about √N of them for N ≥ 6 through an extra
+  * shuffle stage. Spark aborts a job whose results together exceed
+  * spark.driver.maxResultSize (1g by default), so a level whose N
+  * histograms would pass half of it (e.g. 500 features at depth 6 and
+  * N = 64, ~33 MB each) sums them on executors instead ([[treeSum]]),
+  * sending the driver one. The `q_ml_*` queries train with N = 2-8.
   *
   * At scale this shuffles the training set once (the repartition), then
   * only moves O(nodes·features·bins) histograms per level — independent of
@@ -143,12 +147,14 @@ object DistTrainer {
     // per round; advancing margins between classes would train a
     // different multi:softprob model than the single-node path).
     var prefixBc = sc.broadcast(trees.toArray)
+    val maxResultSize = sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
 
     while (round < p.numRounds && !stop) {
       var cls = 0
       while (cls < k) {
         val features = sampleFeaturesSeeded(numFeatures, p.colsampleBytree, rng)
-        trees += growTree(state, prefixBc, cutsBc, numFeatures, k, cls, round, p, obj, features)
+        trees += growTree(state, prefixBc, cutsBc, numFeatures, k, cls, round, p, obj, features,
+          maxResultSize)
         cls += 1
       }
       // margins incl. this round: the eval pass's and the next round's prefix
@@ -156,10 +162,14 @@ object DistTrainer {
       prefixBc = sc.broadcast(trees.toArray)
 
       if (hasEval) {
-        val sum = new SumInto
-        sc.runJob(state, new EvalJob(prefixBc, k, p, obj, baseMargin, metric),
-          state.partitions.indices, sum)
-        val s = if (sum.total == null) Double.NaN else finishMetricArr(metric, sum.total)
+        val job = new EvalJob(prefixBc, k, p, obj, baseMargin, metric)
+        val total =
+          if (resultsFit(state, metricSize(metric), maxResultSize)) {
+            val sum = new SumInto
+            sc.runJob(state, job, state.partitions.indices, sum)
+            sum.total
+          } else treeSum(state, job)
+        val s = if (total == null) Double.NaN else finishMetricArr(metric, total)
         val improved = if (EvalMetric.lowerIsBetter(metric)) s < bestScore else s > bestScore
         if (improved) { bestScore = s; bestIter = round }
         else if (p.earlyStoppingRounds > 0 && round - bestIter >= p.earlyStoppingRounds)
@@ -189,15 +199,14 @@ object DistTrainer {
   // the root, and the level job moves histograms for only ~half the
   // nodes - worker CPU and network both halve at scale.
   //
-  // The level job is submitted here, in growTree itself: its call site
-  // names the job in Spark's UI and event log.
+  // The single-stage level job is submitted here, in growTree itself: its
+  // call site names the job in Spark's UI and event log.
   private def growTree(state: RDD[PartState], prefixBc: Broadcast[Array[Tree]],
       cutsBc: Broadcast[BinCuts], m: Int, k: Int, cls: Int, round: Int,
-      p: BoosterParams, obj: Objective, features: Array[Int]): Tree = {
+      p: BoosterParams, obj: Objective, features: Array[Int], maxResultSize: Long): Tree = {
     val sc = state.sparkContext
     val baseMargin = obj.baseMargin(p.baseScore)
     val unit = m * MaxBins * 2
-    val partitions = state.partitions.indices
     val feature = new ArrayBuffer[Int]
     val binIdx = new ArrayBuffer[Int]
     val defaultLeft = new ArrayBuffer[Boolean]
@@ -261,12 +270,16 @@ object DistTrainer {
         }
       }
       val histLen = nCompute * unit
-      val sum = new SumInto
-      sc.runJob(state, new LevelJob(prefixBc, k, cls, round, p, obj, baseMargin,
+      val job = new LevelJob(prefixBc, k, cls, round, p, obj, baseMargin,
         feature.toArray, binIdx.toArray, defaultLeft.toArray, left.toArray, right.toArray,
-        computeSlot, levelFeats, levelStart, levelEnd, histLen), partitions, sum)
+        computeSlot, levelFeats, levelStart, levelEnd, histLen)
       // computed nodes' histograms, then the root's g/h sums
-      val compHist = if (sum.total == null) new Array[Double](histLen + 2) else sum.total
+      val compHist = Option(
+        if (resultsFit(state, histLen + 2, maxResultSize)) {
+          val sum = new SumInto
+          sc.runJob(state, job, state.partitions.indices, sum)
+          sum.total
+        } else treeSum(state, job)).getOrElse(new Array[Double](histLen + 2))
 
       // assemble the FULL level histogram: computed nodes copy in,
       // derived nodes = parent - sibling
@@ -383,18 +396,39 @@ object DistTrainer {
     }
   }
 
+  /** Whether one job's N per-partition results of `len` doubles fit in
+    * half of spark.driver.maxResultSize (`maxResultSize`, 0 = no limit):
+    * Spark aborts a job whose task results together exceed it. If they
+    * do, the caller runs one single-stage job whose [[SumInto]] streams
+    * them into one driver buffer; if not, [[treeSum]]. */
+  private def resultsFit(rdd: RDD[_], len: Int, maxResultSize: Long): Boolean =
+    maxResultSize <= 0 || rdd.getNumPartitions * (8L * len + 1024) <= maxResultSize / 2
+
   /** Adds each task's `Array[Double]` into the first one received, as
-    * tasks finish (the order `fold`'s merge used under `treeAggregate`):
-    * the driver holds one buffer, not N. Spark calls it on one thread. */
+    * tasks finish (the order `fold`'s merge uses): the driver holds one
+    * buffer, not N. Spark calls it on one thread. */
   private final class SumInto extends ((Int, Array[Double]) => Unit) {
     var total: Array[Double] = _
-    def apply(partition: Int, a: Array[Double]): Unit =
-      if (total == null) total = a
-      else {
-        var i = 0
-        while (i < a.length) { total(i) += a(i); i += 1 }
-      }
+    def apply(partition: Int, a: Array[Double]): Unit = total = addInto(total, a)
   }
+
+  /** The sum of `job`'s per-partition arrays when their N results would not
+    * fit the driver (many partitions or wide histograms): a `treeAggregate`
+    * sums them on executors and only the final sum reaches the driver, at
+    * the cost of shuffle stages and closure cleaning. */
+  private def treeSum[T](rdd: RDD[T],
+      job: (TaskContext, Iterator[T]) => Array[Double]): Array[Double] =
+    rdd.mapPartitions(it => Iterator.single(job(TaskContext.get(), it)))
+      .treeAggregate(null: Array[Double], addInto, addInto, 2, finalAggregateOnExecutor = true)
+
+  private def addInto(a: Array[Double], b: Array[Double]): Array[Double] =
+    if (a == null) b
+    else if (b == null) a
+    else {
+      var i = 0
+      while (i < a.length) { a(i) += b(i); i += 1 }
+      a
+    }
 
   /** One level's pass over a partition: route rows through the partial
     * tree on binned values, accumulate histograms ONLY for the level's

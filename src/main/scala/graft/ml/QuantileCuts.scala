@@ -19,9 +19,10 @@ import org.apache.spark.sql.catalyst.util.QuantileSummaries
   * This is xgboost-hist's own recipe (approximate quantile sketch →
   * fixed bin budget).
   *
-  * The driver reads each feature's quantiles in one walk over the merged
-  * summary ([[evenQuantiles]]) rather than one `QuantileSummaries.query`
-  * per quantile, each of which rescans the summary from its head.
+  * The driver reads each feature's quantiles with one batched
+  * `QuantileSummaries.query(Seq)`, a single walk over the merged summary,
+  * rather than one `query` per quantile, each of which folds the whole
+  * summary for its error bound and rescans it from its head.
   */
 object QuantileCuts {
   val RelativeError = 0.001
@@ -63,51 +64,11 @@ object QuantileCuts {
     if (sk.count == 0) Array.empty[Float]
     else {
       val minV = sk.query(0.0).get.toFloat
-      val distinct = evenQuantiles(sk, budget).map(_.toFloat)
+      val distinct = sk.query((1 to budget).map(j => j / (budget + 1.0))).get
+        .map(_.toFloat).toArray
         .filter(c => c > minV && !c.isNaN)
         .distinct
       java.util.Arrays.sort(distinct)
       distinct
     }
-
-  /** `(1 to budget).map(j => sk.query(j / (budget + 1.0)).get)` in one walk.
-    *
-    * `query(q)` returns the first sample `i < last` whose rank interval
-    * fits the target rank r within the summary's error e — `minRank(i) >=
-    * r - e` and `maxRank(i) <= r + e`, where `minRank(i)` sums `g` over
-    * samples 0..i (so it starts at `sampled(0).g`) and `maxRank(i) =
-    * minRank(i) + delta(i)` — else the last sample. `minRank` never
-    * decreases and r grows with j, so the first sample meeting the lower
-    * bound only moves forward; the answer is the first sample from there
-    * that meets the upper bound (past sample 0, that sample itself).
-    * Each scan starts there, not at the previous answer, so the result
-    * equals the per-quantile query by construction. */
-  private[ml] def evenQuantiles(sk: QuantileSummaries, budget: Int): Array[Double] = {
-    val s = sk.sampled
-    val last = s.length - 1
-    var maxSpan = Long.MinValue
-    var t = 0
-    while (t <= last) { maxSpan = math.max(maxSpan, s(t).g + s(t).delta); t += 1 }
-    val e = (maxSpan / 2).toDouble
-    val out = new Array[Double](budget)
-    var lo = 0 // first sample whose minRank reaches r - e
-    var loMin = s(0).g
-    var j = 1
-    while (j <= budget) {
-      val q = j / (budget + 1.0)
-      out(j - 1) =
-        if (q <= sk.relativeError) s(0).value
-        else if (q >= 1 - sk.relativeError) s(last).value
-        else {
-          val r = math.ceil(q * sk.count).toLong.toDouble
-          while (lo < last && r > loMin + e) { lo += 1; loMin += s(lo).g }
-          var i = lo
-          var minRank = loMin
-          while (i < last && (minRank + s(i).delta) - e > r) { i += 1; minRank += s(i).g }
-          s(i).value
-        }
-      j += 1
-    }
-    out
-  }
 }

@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.collection.mutable
 
-/** The job shape of the DistTrainer path and the parity of its per-round
-  * eval pass with the barrier path's allreduce. */
+/** The job shape of the DistTrainer path, its fallback when the level
+  * histograms would overrun spark.driver.maxResultSize, and the parity of
+  * its per-round eval pass with the barrier path's allreduce. */
 class DistTrainerSpec extends AnyFunSuite {
   lazy val spark = graft.SparkTestSession.spark
 
@@ -118,6 +119,29 @@ class DistTrainerSpec extends AnyFunSuite {
       m.transform(df).select("probability").collect().map(_.getAs[Vector](0).toArray)
     probs(dist).zip(probs(bar)).foreach { case (x, y) =>
       x.zip(y).foreach { case (a, b) => assert(math.abs(a - b) < 1e-6, s"DistTrainer $a vs barrier $b") }
+    }
+  }
+
+  test("level histograms too large for spark.driver.maxResultSize are summed on executors, " +
+    "and the model matches the direct fit") {
+    val rng = new scala.util.Random(37)
+    val m = 20
+    val rows = Seq.fill(200)({
+      val f = Array.fill(m)(math.round(rng.nextDouble() * 4 * 1e4) / 1e4)
+      (Vectors.dense(f), f(0) * 2 + (if (f(1) > 2.0) 1.0 else 0.0))
+    })
+    val df = spark.createDataFrame(rows).toDF("features", "label")
+    def fit() = new XgboostRegressor().setNumWorkers(8).setNEstimators(2).setMaxDepth(3).fit(df)
+    val limit = 400L << 10
+    // the root level alone: 8 partition histograms of m features x 256 bins x (g, h)
+    assert(8L * m * 256 * 2 * 8 > limit, "the single-stage level job must overrun the limit")
+    val direct = fit()
+    val summed = org.apache.spark.LiveConf.withSetting(spark.sparkContext,
+      "spark.driver.maxResultSize", limit.toString)(fit())
+    def preds(model: XgboostRegressorModel) =
+      model.transform(df).select("prediction").collect().map(_.getDouble(0))
+    preds(direct).zip(preds(summed)).foreach { case (a, b) =>
+      assert(math.abs(a - b) < 1e-6, s"direct $a vs executor-summed $b")
     }
   }
 }

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Distributed quantile-sketch bin cuts: equivalence with the exact
   * per-feature construction at small N, sanity at larger N, and the
-  * one-walk quantile extraction against Spark's per-quantile query.
+  * batched quantile query the cuts use against Spark's per-quantile query.
   */
 class QuantileCutsSpec extends AnyFunSuite {
   lazy val spark = graft.SparkTestSession.spark
@@ -52,7 +52,7 @@ class QuantileCutsSpec extends AnyFunSuite {
     assert(cuts.binOf(0, Float.NaN) == BinCuts.MissingBin)
   }
 
-  // ---- evenQuantiles == (1 to budget).map(j => sk.query(j / (budget + 1.0))) ----
+  // ---- batched query == (1 to budget).map(j => sk.query(j / (budget + 1.0))) ----
 
   private val Budgets = Seq(1, 15, 254)
 
@@ -60,10 +60,10 @@ class QuantileCutsSpec extends AnyFunSuite {
     spark.sparkContext.parallelize(values.map(v => Row(Vectors.dense(v), 0.0)), partitions)
 
   /** Bit-identical Float quantiles, and identical cuts, for every budget. */
-  private def assertWalkMatchesQuery(sketches: Array[QuantileSummaries], what: String): Unit =
+  private def assertBatchedMatchesQuery(sketches: Array[QuantileSummaries], what: String): Unit =
     for ((sk, f) <- sketches.zipWithIndex if sk.count > 0; budget <- Budgets) {
       val want = (1 to budget).map(j => sk.query(j / (budget + 1.0)).get.toFloat).toArray
-      val got = QuantileCuts.evenQuantiles(sk, budget).map(_.toFloat)
+      val got = sk.query((1 to budget).map(j => j / (budget + 1.0))).get.map(_.toFloat).toArray
       val bits = (a: Array[Float]) => a.map(java.lang.Float.floatToRawIntBits).toSeq
       assert(bits(got) == bits(want),
         s"$what, feature $f, budget $budget: first difference at j=" +
@@ -73,7 +73,7 @@ class QuantileCutsSpec extends AnyFunSuite {
       assert(QuantileCuts.cutsOf(sk, budget).toSeq == wantCuts.toSeq, s"$what, feature $f, budget $budget")
     }
 
-  test("cut walk == per-quantile query: random data of random shape (fixed-seed scalacheck)") {
+  test("batched query == per-quantile query: random data of random shape (fixed-seed scalacheck)") {
     val column: Gen[Int => Double] = Gen.chooseNum(1L, 1000L).flatMap { seed =>
       val r = new scala.util.Random(seed)
       Gen.oneOf[Int => Double](
@@ -90,32 +90,32 @@ class QuantileCutsSpec extends AnyFunSuite {
     Gen.listOfN(8, dataset).pureApply(Gen.Parameters.default, Seed(20261017L)).foreach {
       case (rows, parts, cols) =>
         val data = Seq.tabulate(rows)(i => cols.map(c => c(i)).toArray)
-        assertWalkMatchesQuery(QuantileCuts.sketch(rowsIn(data, parts), Float.NaN),
+        assertBatchedMatchesQuery(QuantileCuts.sketch(rowsIn(data, parts), Float.NaN),
           s"$rows rows in $parts partitions")
     }
   }
 
-  test("cut walk == per-quantile query: all-equal, 5-value and heavily tied columns") {
+  test("batched query == per-quantile query: all-equal, 5-value and heavily tied columns") {
     val rng = new scala.util.Random(5)
     val data = Seq.tabulate(20000) { i =>
       Array(3.25, (i % 5).toDouble,
         if (rng.nextDouble() < 0.9) 1.0 else rng.nextDouble(),
         if (i % 100 < 60) 0.0 else (i % 7).toDouble)
     }
-    assertWalkMatchesQuery(QuantileCuts.sketch(rowsIn(data, 4), Float.NaN), "tied columns")
+    assertBatchedMatchesQuery(QuantileCuts.sketch(rowsIn(data, 4), Float.NaN), "tied columns")
   }
 
-  test("cut walk == per-quantile query: single-row partitions") {
+  test("batched query == per-quantile query: single-row partitions") {
     val rng = new scala.util.Random(7)
     val data = Seq.fill(48)(Array(rng.nextGaussian(), (rng.nextInt(3)).toDouble))
-    assertWalkMatchesQuery(QuantileCuts.sketch(rowsIn(data, 48), Float.NaN), "single-row partitions")
+    assertBatchedMatchesQuery(QuantileCuts.sketch(rowsIn(data, 48), Float.NaN), "single-row partitions")
   }
 
-  test("cut walk == per-quantile query: the missing sentinel stays out") {
+  test("batched query == per-quantile query: the missing sentinel stays out") {
     val rng = new scala.util.Random(9)
     val data = Seq.tabulate(10000)(i => Array(if (i % 3 == 0) -999.0 else rng.nextDouble() * 10))
     val sketches = QuantileCuts.sketch(rowsIn(data, 4), -999.0f)
     assert(sketches(0).count == data.count(_(0) != -999.0))
-    assertWalkMatchesQuery(sketches, "missing sentinel")
+    assertBatchedMatchesQuery(sketches, "missing sentinel")
   }
 }

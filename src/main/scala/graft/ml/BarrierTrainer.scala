@@ -295,23 +295,10 @@ object BarrierTrainer {
       hSum.map(_.toFloat).toArray)
   }
 
-  /** Deterministic per-(partition, round, row) subsample mask — stable
-    * under barrier-stage retries. */
+  /** The round's subsample mask ([[DistTrainer.sampledRow]]'s draws), or
+    * null when every row is used. */
   private def sampleRows(partitionId: Int, n: Int, round: Int,
-      p: BoosterParams): Array[Boolean] = {
+      p: BoosterParams): Array[Boolean] =
     if (p.subsample >= 1.0) null
-    else {
-      val out = new Array[Boolean](n)
-      var i = 0
-      while (i < n) {
-        var x = p.seed * 6364136223846793005L +
-          partitionId.toLong * 9632455465461L +
-          round.toLong * 1442695040888963407L + i.toLong * 2862933555777941757L
-        x ^= (x >>> 33); x *= 0xff51afd7ed558ccdL; x ^= (x >>> 33)
-        out(i) = ((x >>> 11).toDouble / (1L << 53).toDouble) < p.subsample
-        i += 1
-      }
-      out
-    }
-  }
+    else Array.tabulate(n)(i => DistTrainer.sampledRow(p.seed, partitionId, round, i, p.subsample))
 }

@@ -128,15 +128,26 @@ final class Tree(
 
   def numNodes: Int = feature.length
 
-  /** Margin contribution for a dense feature row (NaN = missing). */
+  /** `left(i)` and `right(i)` at 2i and 2i + 1, so a step indexes by the
+    * comparison instead of branching on it. Built on first use and not
+    * serialized: the model's serialized form is the six arrays above. */
+  @transient private lazy val kids: Array[Int] = {
+    val k = new Array[Int](2 * numNodes)
+    var i = 0
+    while (i < numNodes) { k(2 * i) = left(i); k(2 * i + 1) = right(i); i += 1 }
+    k
+  }
+
+  /** Margin contribution for a dense feature row (NaN = missing, routed
+    * to the node's default side). The one tree walk: scoring and the
+    * trainers' margin updates both call it. */
   def predict(x: Array[Float]): Float = {
+    val kids = this.kids
     var node = 0
-    while (left(node) >= 0) {
+    while (kids(2 * node) >= 0) {
       val v = x(feature(node))
-      node =
-        if (v != v) { if (defaultLeft(node)) left(node) else right(node) }
-        else if (v < threshold(node)) left(node)
-        else right(node)
+      val goRight = if (v != v) !defaultLeft(node) else !(v < threshold(node))
+      node = kids(2 * node + (if (goRight) 1 else 0))
     }
     weight(node)
   }

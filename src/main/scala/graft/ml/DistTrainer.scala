@@ -449,12 +449,12 @@ object DistTrainer {
       it.foreach { ps =>
         ensureMargins(ps, prefixBc.value, k, p, obj, baseMargin)
         ensureGrads(ps, round, k, p, obj)
-        accumulate(ps, out)
+        accumulate(ps, ctx.partitionId(), out)
       }
       out
     }
 
-    private def accumulate(ps: PartState, hist: Array[Double]): Unit = {
+    private def accumulate(ps: PartState, pid: Int, hist: Array[Double]): Unit = {
       val mat = ps.train
       val n = mat.numRows
       if (n == 0) return
@@ -473,7 +473,7 @@ object DistTrainer {
 
       var i = 0
       while (i < n) {
-        if (p.subsample >= 1.0 || sampledRow(p.seed, round, i, mat, p.subsample)) {
+        if (p.subsample >= 1.0 || sampledRow(p.seed, pid, round, i, p.subsample)) {
           // resume routing from the stored node: only the steps the levels
           // since the last visit appended are walked (amortized one step
           // per level instead of a root walk)
@@ -544,11 +544,14 @@ object DistTrainer {
     } else mat.weights
   }
 
-  /** Deterministic per-(seed, round, row) Bernoulli draw so recomputed
-    * partitions sample identically. */
-  private def sampledRow(seed: Long, round: Int, i: Int, mat: TrainMatrix,
+  /** The row-subsampling draw of both distributed paths: a deterministic
+    * Bernoulli(subsample) keyed by (seed, partition, round, row within the
+    * partition), so recomputed partitions and retried barrier stages
+    * sample identically, and row i of each partition draws its own coin. */
+  private[ml] def sampledRow(seed: Long, partitionId: Int, round: Int, i: Int,
       subsample: Double): Boolean = {
-    var x = seed * 6364136223846793005L + round * 1442695040888963407L + i * 2862933555777941757L
+    var x = seed * 6364136223846793005L + partitionId.toLong * 9632455465461L +
+      round.toLong * 1442695040888963407L + i.toLong * 2862933555777941757L
     x ^= (x >>> 33); x *= 0xff51afd7ed558ccdL; x ^= (x >>> 33)
     ((x >>> 11).toDouble / (1L << 53).toDouble) < subsample
   }

@@ -2,7 +2,6 @@ package graft.ml
 
 import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.ml.util._
 import org.apache.spark.sql.{DataFrame, Dataset}
@@ -35,9 +34,10 @@ private[ml] object FitSupport extends org.apache.spark.internal.Logging {
         "will wait for resources (reference warns identically)")
   }
 
-  /** Normalizes the features column to VectorUDT (accepts array<numeric>
-    * via array_to_vector — reference uses vector_to_array for the inverse
-    * trip; both are codegen'd Catalyst expressions, not UDFs). */
+  /** Normalizes the training features column to VectorUDT (accepts
+    * array<numeric> via array_to_vector; the reference uses
+    * vector_to_array for the inverse trip). Scoring reads both forms
+    * directly ([[Scorer]]). */
   def featuresAsVector(df: Dataset[_], colName: String): org.apache.spark.sql.Column = {
     df.schema(colName).dataType match {
       case dt if dt == org.apache.spark.ml.linalg.SQLDataTypes.VectorType => col(colName)
@@ -184,13 +184,6 @@ private[ml] object FitSupport extends org.apache.spark.internal.Logging {
         est.getOrDefault(est.forceRepartition), useExt, esp, initTrees)
     ModelJson.fromJson(json)
   }
-
-  /** Scoring UDF input: densified float row from a Vector. */
-  def toFloatRow(v: Vector): Array[Float] = {
-    val out = new Array[Float](v.size)
-    v.foreachActive((i, x) => out(i) = x.toFloat)
-    out
-  }
 }
 
 // =========================================================================
@@ -264,36 +257,18 @@ class XgboostRegressorModel(override val uid: String, val booster: BoosterModel)
   def setBaseMarginCol(v: String): this.type = set(baseMarginCol, v)
   def setTreeLimit(v: Int): this.type = set(treeLimit, v)
 
-  /** Batch inference: broadcast model, pipelined scan→UDF→project plan, no
-    * shuffle, no action (reference §3.3; mapInPandas there, in-JVM here).
-    * When baseMarginCol is set and present, the per-row margin is added to
-    * the predicted margin — the reference's predict-time base margin
-    * (xgboost_core.py predict_udf base-margin variant), matching how
-    * training seeds margins with base + user margin. */
+  /** Batch inference: one codegen'd [[ScoreExpression]] per row over a
+    * broadcast model, pipelined with the scan: no shuffle, no action
+    * (reference §3.3; mapInPandas there, in-JVM here). The margin-space
+    * result maps to prediction space per objective (identity for squared
+    * error, sigmoid for reg:logistic, exp for count:poisson) AFTER a set
+    * and present baseMarginCol is added: xgboost's PredTransform order,
+    * and the reference's predict-time base margin (xgboost_core.py
+    * predict_udf base-margin variant). A null features or base margin
+    * value fails the task, naming its column. */
   override def transform(dataset: Dataset[_]): DataFrame = {
     transformSchema(dataset.schema)
-    val sc = dataset.sparkSession.sparkContext
-    val bc = sc.broadcast(booster)
-    val limit = $(treeLimit)
-    val features = FitSupport.featuresAsVector(dataset, $(featuresCol))
-    // the margin-space result is transformed to prediction space per
-    // objective (identity for squared error, sigmoid for reg:logistic,
-    // exp for count:poisson) AFTER the base margin is added — xgboost's
-    // PredTransform order
-    if (hasNonEmpty(baseMarginCol) && dataset.columns.contains($(baseMarginCol))) {
-      val predictUdf = udf { (v: Vector, bm: Double) =>
-        bc.value.objective.predictTransform(
-          bc.value.predictMarginWithMissing(FitSupport.toFloatRow(v), limit)(0).toDouble + bm)
-      }
-      dataset.withColumn($(predictionCol),
-        predictUdf(features, col($(baseMarginCol)).cast(DoubleType)))
-    } else {
-      val predictUdf = udf { (v: Vector) =>
-        bc.value.objective.predictTransform(
-          bc.value.predictMarginWithMissing(FitSupport.toFloatRow(v), limit)(0).toDouble)
-      }
-      dataset.withColumn($(predictionCol), predictUdf(features))
-    }
+    dataset.withColumn($(predictionCol), Scorer.column(this, booster, classifier = false, dataset))
   }
 
   override def copy(extra: ParamMap): XgboostRegressorModel =
@@ -416,50 +391,18 @@ class XgboostClassifierModel(override val uid: String, val booster: BoosterModel
     * multiclass: raw=margins, probs=softmax; prediction=argmax(probs).
     * A set baseMarginCol shifts every class margin BEFORE the
     * sigmoid/softmax, mirroring training's margin initialization.
-    * One UDF computes the (raw, prediction, probability) struct which is
-    * then split via array_to_vector / nested-field projection / drop —
-    * the reference's S10+S11+S12 plan shape (xgboost_core.py:723-756). */
+    * One codegen'd [[ScoreExpression]] computes the non-null
+    * struct<raw, prediction, probability> once per row; its fields become
+    * the output columns and the struct is dropped: the reference's
+    * S10+S11+S12 plan shape (xgboost_core.py:723-756). A null features or
+    * base margin value fails the task, naming its column. */
   override def transform(dataset: Dataset[_]): DataFrame = {
     transformSchema(dataset.schema)
-    val sc = dataset.sparkSession.sparkContext
-    val bc = sc.broadcast(booster)
-    val limit = $(treeLimit)
-    def score(v: Vector, bm: Double): (Array[Double], Double, Array[Double]) = {
-      val margins = bc.value.predictMarginWithMissing(FitSupport.toFloatRow(v), limit)
-      if (margins.length == 1) {
-        val m = margins(0).toDouble + bm
-        val p = Objective.sigmoid(m)
-        val probs = Array(1.0 - p, p)
-        val pred = if (probs(1) > probs(0)) 1.0 else 0.0
-        (Array(-m, m), pred, probs)
-      } else {
-        val raw = margins.map(_.toDouble + bm)
-        val mx = raw.max
-        val exp = raw.map(x => math.exp(x - mx))
-        val s = exp.sum
-        val probs = exp.map(_ / s)
-        var best = 0
-        var i = 1
-        while (i < probs.length) { if (probs(i) > probs(best)) best = i; i += 1 }
-        (raw, best.toDouble, probs)
-      }
-    }
-    val features = FitSupport.featuresAsVector(dataset, $(featuresCol))
     val tmp = s"_graft_pred_${uid.takeRight(8)}"
-    var out =
-      if (hasNonEmpty(baseMarginCol) && dataset.columns.contains($(baseMarginCol))) {
-        val scoreUdf = udf { (v: Vector, bm: Double) => score(v, bm) }
-        dataset.withColumn(tmp, scoreUdf(features, col($(baseMarginCol)).cast(DoubleType)))
-      } else {
-        val scoreUdf = udf { (v: Vector) => score(v, 0.0) }
-        dataset.withColumn(tmp, scoreUdf(features))
-      }
-    if (hasNonEmpty(rawPredictionCol))
-      out = out.withColumn($(rawPredictionCol), array_to_vector(col(s"$tmp._1")))
-    if (hasNonEmpty(predictionCol))
-      out = out.withColumn($(predictionCol), col(s"$tmp._2"))
-    if (hasNonEmpty(probabilityCol))
-      out = out.withColumn($(probabilityCol), array_to_vector(col(s"$tmp._3")))
+    var out = dataset.withColumn(tmp, Scorer.column(this, booster, classifier = true, dataset))
+    if (hasNonEmpty(rawPredictionCol)) out = out.withColumn($(rawPredictionCol), col(s"$tmp.raw"))
+    if (hasNonEmpty(predictionCol)) out = out.withColumn($(predictionCol), col(s"$tmp.prediction"))
+    if (hasNonEmpty(probabilityCol)) out = out.withColumn($(probabilityCol), col(s"$tmp.probability"))
     out.drop(tmp)
   }
 

@@ -246,6 +246,8 @@ object FeatureSampling {
   * same histogram layout, aggregating per-partition histograms instead.
   */
 object Trainer {
+  import DistTrainer.addTreeMargins
+
   private val MaxBins = 256
 
   /** Mutable per-tree growth state, depth-wise. */
@@ -321,8 +323,8 @@ object Trainer {
     // them at the head of the ensemble (reference xgb_model semantics —
     // nEstimators more rounds are added on top)
     initTrees.zipWithIndex.foreach { case (t, i) =>
-      updateMargins(trainM, t, margins, k, i % k, p.missing)
-      evalM.zip(evalMargins).foreach { case (e, em) => updateMargins(e, t, em, k, i % k, p.missing) }
+      addTreeMargins(trainM, t, margins, k, i % k, p.missing)
+      evalM.zip(evalMargins).foreach { case (e, em) => addTreeMargins(e, t, em, k, i % k, p.missing) }
     }
 
     val g = new Array[Float](n * k)
@@ -353,9 +355,9 @@ object Trainer {
             buildTreeLossGuide(binned, n, m, cuts, gk, hk, sampled, features, p, round, cls)
           else buildTree(binned, n, m, cuts, gk, hk, sampled, features, p, round, cls)
         trees += tree
-        updateMargins(trainM, tree, margins, k, cls, p.missing)
+        addTreeMargins(trainM, tree, margins, k, cls, p.missing)
         evalM.zip(evalMargins).foreach { case (e, em) =>
-          updateMargins(e, tree, em, k, cls, p.missing)
+          addTreeMargins(e, tree, em, k, cls, p.missing)
         }
         cls += 1
       }
@@ -621,24 +623,5 @@ object Trainer {
       }
     }
     growth.toTree(p)
-  }
-
-  /** Adds a new tree's predictions into the running margins (all rows,
-    * including unsampled ones — raw feature values, not bins). */
-  private def updateMargins(
-      mat: TrainMatrix, tree: Tree, margins: Array[Float],
-      k: Int, cls: Int, missing: Float): Unit = {
-    val m = mat.numCols
-    val row = new Array[Float](m)
-    var i = 0
-    while (i < mat.numRows) {
-      System.arraycopy(mat.values, i * m, row, 0, m)
-      if (!missing.isNaN) {
-        var f = 0
-        while (f < m) { if (row(f) == missing) row(f) = Float.NaN; f += 1 }
-      }
-      margins(i * k + cls) += tree.predict(row)
-      i += 1
-    }
   }
 }

@@ -83,6 +83,22 @@ class BarrierTrainerSpec extends AnyFunSuite {
     }
   }
 
+  test("barrier and treeAggregate subsample the same rows (subsample=0.5, 3 workers)") {
+    val df = mkDf(300, 29)
+    def build(barrier: Boolean) = {
+      val e = new XgboostRegressor().setNEstimators(5).setNumWorkers(3).setSubsample(0.5)
+      if (barrier) e.setUseBarrierMode(true)
+      e.fit(df)
+    }
+    val ma = build(barrier = false)
+    val mb = build(barrier = true)
+    val pa = ma.transform(df).select("prediction").collect().map(_.getDouble(0))
+    val pb = mb.transform(df).select("prediction").collect().map(_.getDouble(0))
+    pa.zip(pb).foreach { case (x, y) =>
+      assert(math.abs(x - y) < 1e-6, s"treeAggregate $x vs barrier $y")
+    }
+  }
+
   test("barrier multiclass classifier learns the replicated fixture") {
     val base = Seq(
       (Vectors.dense(1.0, 2.0, 3.0), 0.0),

@@ -1,6 +1,10 @@
 package graft.ml
 
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.collection.mutable.ArrayBuffer
 
 /** Booster-core tests mirroring the reference's golden-fixture pattern
   * (FIXTURES.md F1–F3, F7) under semantic tolerance: saturated predictions
@@ -349,5 +353,69 @@ class BoosterSpec extends AnyFunSuite {
     assert(math.abs(g(0) - (1.0 / 3 - 1)) < 1e-6)
     assert(math.abs(g(1) - 1.0 / 3) < 1e-6)
     assert(h.forall(_ > 0))
+  }
+
+  /** The tree walk before the interleaved child array: a three-way branch
+    * per step. The oracle for [[Tree.predict]]. */
+  private def branchingWalk(t: Tree, x: Array[Float]): Float = {
+    var node = 0
+    while (t.left(node) >= 0) {
+      val v = x(t.feature(node))
+      node =
+        if (v != v) { if (t.defaultLeft(node)) t.left(node) else t.right(node) }
+        else if (v < t.threshold(node)) t.left(node)
+        else t.right(node)
+    }
+    t.weight(node)
+  }
+
+  /** A random tree over `m` features whose thresholds come from `cuts`;
+    * children are appended after their parent, as the growers do. */
+  private def randomTree(rng: java.util.Random, m: Int, maxDepth: Int, cuts: Array[Float]): Tree = {
+    val feature, left, right = ArrayBuffer.empty[Int]
+    val threshold, weight = ArrayBuffer.empty[Float]
+    val defaultLeft = ArrayBuffer.empty[Boolean]
+    def grow(depth: Int): Int = {
+      val id = feature.length
+      feature += rng.nextInt(m); threshold += cuts(rng.nextInt(cuts.length))
+      defaultLeft += rng.nextBoolean(); left += -1; right += -1
+      weight += rng.nextFloat() * 2 - 1
+      if (depth < maxDepth && rng.nextInt(5) != 0) {
+        left(id) = grow(depth + 1)
+        right(id) = grow(depth + 1)
+      }
+      id
+    }
+    grow(0)
+    new Tree(feature.toArray, threshold.toArray, defaultLeft.toArray,
+      left.toArray, right.toArray, weight.toArray)
+  }
+
+  test("Tree.predict's interleaved walk == the branching walk: random trees, " +
+      "NaN inputs, both default directions, inputs on the thresholds") {
+    val cuts = Array(-2.5f, -1f, -0.0f, 0f, 0.5f, 1f, 3.25f, Float.MinPositiveValue)
+    val cases = Gen.listOfN(300, Gen.zip(Gen.choose(1L, Long.MaxValue), Gen.choose(1, 8),
+      Gen.choose(0, 10))).pureApply(Gen.Parameters.default, Seed(20261018L))
+    var nanLeft, nanRight = 0
+    cases.foreach { case (seed, m, depth) =>
+      val rng = new java.util.Random(seed)
+      val tree = randomTree(rng, m, depth, cuts)
+      (1 to 50).foreach { _ =>
+        val x = Array.fill(m)(rng.nextInt(6) match {
+          case 0 => Float.NaN
+          case 1 => cuts(rng.nextInt(cuts.length))
+          case 2 => Math.nextUp(cuts(rng.nextInt(cuts.length)))
+          case 3 => if (rng.nextBoolean()) Float.PositiveInfinity else Float.NegativeInfinity
+          case _ => rng.nextFloat() * 8 - 4
+        })
+        val want = branchingWalk(tree, x)
+        val got = tree.predict(x)
+        assert(java.lang.Float.floatToRawIntBits(got) == java.lang.Float.floatToRawIntBits(want),
+          s"seed $seed: predict $got, branching walk $want on ${x.mkString(",")}")
+        if (tree.left(0) >= 0 && x(tree.feature(0)).isNaN)
+          if (tree.defaultLeft(0)) nanLeft += 1 else nanRight += 1
+      }
+    }
+    assert(nanLeft > 0 && nanRight > 0, s"NaN routed left $nanLeft, right $nanRight times at roots")
   }
 }

@@ -1,10 +1,12 @@
 package graft.ml
 
-import org.apache.spark.ml.{Pipeline, PipelineModel}
+import org.apache.spark.ml.{Model, Pipeline, PipelineModel}
 import org.apache.spark.ml.evaluation.RegressionEvaluator
-import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.ml.linalg.{SQLDataTypes, Vector, Vectors}
 import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Estimator/Model end-to-end tests over the FIXTURES.md schemas: mixed
@@ -426,6 +428,51 @@ class EstimatorSpec extends AnyFunSuite {
     val model = new XgboostRegressor().setNEstimators(50).fit(df)
     val preds = model.transform(df).select("prediction").collect().map(_.getDouble(0))
     assert(math.abs(preds(0)) < 0.05 && math.abs(preds(1) - 1.0) < 0.05)
+  }
+
+  test("transform's schema == transformSchema, nullability included: regressor and " +
+      "classifier (binary, K=3), with and without baseMarginCol, vector and array<float> features") {
+    val k3 = spark.createDataFrame(Seq.tabulate(60)(i =>
+      (Vectors.dense(i % 3 * 2.0, (i * 7) % 5 * 1.0, 1.0), (i % 3).toDouble, 0.1 * (i % 4))))
+      .toDF("features", "label", "margin")
+    val bin = k3.withColumn("label", (col("label") > 1).cast("double"))
+    val arr = Seq((Array(1.0f, 2.0f, 3.0f), 0.0, 0.5), (Array(0.0f, 1.0f, 5.5f), 1.0, -0.5))
+      .toDF("features", "label", "margin")
+    val models: Seq[(String, Model[_] with XGBoostParams, DataFrame)] = Seq(
+      ("regressor", new XgboostRegressor().setNEstimators(3).fit(k3), k3),
+      ("binary", new XgboostClassifier().setNEstimators(3).fit(bin), bin),
+      ("K=3", new XgboostClassifier().setNEstimators(3).fit(k3), k3),
+      ("array regressor", new XgboostRegressor().setNEstimators(3).fit(arr), arr),
+      ("array binary", new XgboostClassifier().setNEstimators(3).fit(arr), arr))
+    models.foreach { case (name, m, df) =>
+      Seq(false, true).foreach { margin =>
+        m.set(m.baseMarginCol, if (margin) "margin" else "")
+        val out = m.transform(df)
+        assert(out.schema == m.transformSchema(df.schema), s"$name, baseMarginCol=$margin")
+        assert(out.count() == df.count())
+      }
+    }
+  }
+
+  test("a null features or base margin value fails scoring with the column's name") {
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(Vectors.dense(1.0, 2.0, 3.0), 0.0, 1.0),
+      Row(null, 1.0, 1.0),
+      Row(Vectors.dense(4.0, 5.0, 6.0), 1.0, null)), 1),
+      StructType(Seq(StructField("feats", SQLDataTypes.VectorType),
+        StructField("label", DoubleType), StructField("bm", DoubleType))))
+    val train = df.na.drop()
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    val cls = new XgboostClassifier().setFeaturesCol("feats").setNEstimators(2).fit(train)
+    val reg = new XgboostRegressor().setFeaturesCol("feats").setNEstimators(2).fit(train)
+    Seq[Model[_] with XGBoostParams](cls, reg).foreach { m =>
+      val e = intercept[Exception](m.transform(df.limit(2)).collect())
+      assert(messages(e).contains("null in features column 'feats'"), messages(e))
+      m.set(m.baseMarginCol, "bm")
+      val e2 = intercept[Exception](m.transform(df.filter("feats is not null")).collect())
+      assert(messages(e2).contains("null in base margin column 'bm'"), messages(e2))
+    }
   }
 
   test("distributed (numWorkers=2) regressor agrees with single-node") {

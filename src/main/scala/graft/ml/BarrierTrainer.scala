@@ -50,10 +50,7 @@ object BarrierTrainer {
     // distributed quantile sketch -> bin cuts, broadcast — the same
     // sketch as DistTrainer so both distributed paths bin identically
     val rowsRdd = input.rdd
-    val cuts =
-      try QuantileCuts.fromRdd(rowsRdd, p.missing, BinCuts.cutBudget(p.maxBin))
-      catch { case _: UnsupportedOperationException => // empty RDD
-        throw new IllegalArgumentException("empty training input") }
+    val cuts = QuantileCuts.fromRdd(rowsRdd, p.missing, BinCuts.cutBudget(p.maxBin))
     val cutsBc = sc.broadcast(cuts)
 
     val jsons = rowsRdd.barrier().mapPartitions { it =>
@@ -126,7 +123,7 @@ object BarrierTrainer {
           }
         }
         val features = sampleFeaturesSeeded(m, p.colsampleBytree, frng)
-        val sampled = sampleRows(pid, n, round, p)
+        val sampled = DistTrainer.sampleMask(p, pid, round, n)
         trees += growTreeCollective(coll, binned, n, m, cuts, gk, hk, sampled, features, p, round, cls)
         val tree = trees.last
         addTreeMargins(mat, tree, margins, k, cls, p.missing)
@@ -294,11 +291,4 @@ object BarrierTrainer {
       left.toArray, right.toArray, w, gain.toArray,
       hSum.map(_.toFloat).toArray)
   }
-
-  /** The round's subsample mask ([[DistTrainer.sampledRow]]'s draws), or
-    * null when every row is used. */
-  private def sampleRows(partitionId: Int, n: Int, round: Int,
-      p: BoosterParams): Array[Boolean] =
-    if (p.subsample >= 1.0) null
-    else Array.tabulate(n)(i => DistTrainer.sampledRow(p.seed, partitionId, round, i, p.subsample))
 }

@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.TaskContext
+import org.apache.spark.{SparkContext, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
@@ -112,10 +112,7 @@ object DistTrainer {
 
     // ---- distributed per-feature quantile sketch -> bin cuts ----
     val rowsRdd = input.rdd
-    val cuts =
-      try QuantileCuts.fromRdd(rowsRdd, p.missing, BinCuts.cutBudget(p.maxBin))
-      catch { case _: UnsupportedOperationException => // empty RDD
-        throw new IllegalArgumentException("empty training input") }
+    val cuts = QuantileCuts.fromRdd(rowsRdd, p.missing, BinCuts.cutBudget(p.maxBin))
     val numFeatures = cuts.numFeatures
     val cutsBc = sc.broadcast(cuts)
 
@@ -147,7 +144,7 @@ object DistTrainer {
     // per round; advancing margins between classes would train a
     // different multi:softprob model than the single-node path).
     var prefixBc = sc.broadcast(trees.toArray)
-    val maxResultSize = sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    val maxResultSize = resultSizeLimit(sc)
 
     while (round < p.numRounds && !stop) {
       var cls = 0
@@ -164,7 +161,7 @@ object DistTrainer {
       if (hasEval) {
         val job = new EvalJob(prefixBc, k, p, obj, baseMargin, metric)
         val total =
-          if (resultsFit(state, metricSize(metric), maxResultSize)) {
+          if (resultsFit(state.getNumPartitions, metricSize(metric), maxResultSize)) {
             val sum = new SumInto
             sc.runJob(state, job, state.partitions.indices, sum)
             sum.total
@@ -275,7 +272,7 @@ object DistTrainer {
         computeSlot, levelFeats, levelStart, levelEnd, histLen)
       // computed nodes' histograms, then the root's g/h sums
       val compHist = Option(
-        if (resultsFit(state, histLen + 2, maxResultSize)) {
+        if (resultsFit(state.getNumPartitions, histLen + 2, maxResultSize)) {
           val sum = new SumInto
           sc.runJob(state, job, state.partitions.indices, sum)
           sum.total
@@ -396,13 +393,18 @@ object DistTrainer {
     }
   }
 
-  /** Whether one job's N per-partition results of `len` doubles fit in
+  /** spark.driver.maxResultSize in bytes, 0 = no limit. */
+  private[ml] def resultSizeLimit(sc: SparkContext): Long =
+    sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+
+  /** Whether one job's `numPartitions` results of `len` doubles each fit in
     * half of spark.driver.maxResultSize (`maxResultSize`, 0 = no limit):
     * Spark aborts a job whose task results together exceed it. If they
     * do, the caller runs one single-stage job whose [[SumInto]] streams
-    * them into one driver buffer; if not, [[treeSum]]. */
-  private def resultsFit(rdd: RDD[_], len: Int, maxResultSize: Long): Boolean =
-    maxResultSize <= 0 || rdd.getNumPartitions * (8L * len + 1024) <= maxResultSize / 2
+    * them into one driver buffer; if not, [[treeSum]]. [[QuantileCuts]]
+    * applies the same rule to its summaries. */
+  private[ml] def resultsFit(numPartitions: Int, len: Long, maxResultSize: Long): Boolean =
+    maxResultSize <= 0 || numPartitions * (8L * len + 1024) <= maxResultSize / 2
 
   /** Adds each task's `Array[Double]` into the first one received, as
     * tasks finish (the order `fold`'s merge uses): the driver holds one
@@ -544,7 +546,8 @@ object DistTrainer {
     } else mat.weights
   }
 
-  /** The row-subsampling draw of both distributed paths: a deterministic
+  /** The row-subsampling draw of all three training paths (the
+    * single-node `Trainer` is partition 0): a deterministic
     * Bernoulli(subsample) keyed by (seed, partition, round, row within the
     * partition), so recomputed partitions and retried barrier stages
     * sample identically, and row i of each partition draws its own coin. */
@@ -555,6 +558,13 @@ object DistTrainer {
     x ^= (x >>> 33); x *= 0xff51afd7ed558ccdL; x ^= (x >>> 33)
     ((x >>> 11).toDouble / (1L << 53).toDouble) < subsample
   }
+
+  /** One partition's [[sampledRow]] draws for a round, or null when every
+    * row is used. */
+  private[ml] def sampleMask(p: BoosterParams, partitionId: Int, round: Int,
+      n: Int): Array[Boolean] =
+    if (p.subsample >= 1.0) null
+    else Array.tabulate(n)(i => sampledRow(p.seed, partitionId, round, i, p.subsample))
 
   private[ml] def initMargins(mat: TrainMatrix, base: Float, k: Int): Array[Float] = {
     val out = new Array[Float](mat.numRows * k)

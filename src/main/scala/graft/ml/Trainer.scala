@@ -341,7 +341,7 @@ object Trainer {
 
     while (round < p.numRounds && !stop) {
       obj.gradHess(margins, trainM.labels, weights, k, g, h)
-      val sampled = sampleRows(n, p.subsample, rng)
+      val sampled = DistTrainer.sampleMask(p, 0, round, n)
       var cls = 0
       while (cls < k) {
         if (k == 1) { System.arraycopy(g, 0, gk, 0, n); System.arraycopy(h, 0, hk, 0, n) }
@@ -397,11 +397,6 @@ object Trainer {
       }
     }
     out
-  }
-
-  private def sampleRows(n: Int, subsample: Double, rng: java.util.Random): Array[Boolean] = {
-    if (subsample >= 1.0) null
-    else Array.fill(n)(rng.nextDouble() < subsample)
   }
 
   private def sampleFeatures(m: Int, colsample: Double, rng: java.util.Random): Array[Int] = {

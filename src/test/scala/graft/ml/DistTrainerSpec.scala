@@ -144,4 +144,29 @@ class DistTrainerSpec extends AnyFunSuite {
       assert(math.abs(a - b) < 1e-6, s"direct $a vs executor-summed $b")
     }
   }
+
+  test("a subsample=0.5 single-node fit trains on the distributed paths' rows: " +
+    "it equals DistTrainer on one partition") {
+    val rng = new scala.util.Random(41)
+    // 8 evenly spread values per feature: exact and sketch cuts coincide
+    val rows = Seq.fill(300)({
+      val f = Array.fill(3)(rng.nextInt(8).toDouble)
+      (Vectors.dense(f), f(0) * 2 + f(1) - f(2) * 0.5 + rng.nextGaussian())
+    })
+    // one input partition: both paths see the rows in the same order
+    val df = spark.createDataFrame(rows).toDF("features", "label").coalesce(1)
+    val est = new XgboostRegressor().setNEstimators(6).setMaxDepth(3).setSubsample(0.5)
+    val single = est.fit(df).booster
+    val (projected, hasW, hasV, hasM) = FitSupport.projectTrain(est, df)
+    val dist = ModelJson.fromJson(DistTrainer.train(projected, hasW, hasV, hasM,
+      est.boosterParams("reg:squarederror", 0), 1, forceRepartition = false))
+    assert(single.trees.length == dist.trees.length)
+    single.trees.zip(dist.trees).zipWithIndex.foreach { case ((s, d), t) =>
+      assert(s.feature.toSeq == d.feature.toSeq && s.threshold.toSeq == d.threshold.toSeq,
+        s"tree $t: single-node and DistTrainer split differently")
+      s.weight.zip(d.weight).foreach { case (a, b) =>
+        assert(math.abs(a - b) < 1e-5, s"tree $t: node weight $a vs $b")
+      }
+    }
+  }
 }

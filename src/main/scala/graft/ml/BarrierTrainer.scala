@@ -99,6 +99,7 @@ object BarrierTrainer {
     val h = new Array[Float](n * k)
     val gk = new Array[Float](n)
     val hk = new Array[Float](n)
+    val levels = new LevelHistograms(m * MaxBins * 2)
     val trees = new ArrayBuffer[Tree]
     trees ++= initTrees
     val metric = p.evalMetric.getOrElse(obj.defaultMetric(p.numClass))
@@ -124,7 +125,8 @@ object BarrierTrainer {
         }
         val features = sampleFeaturesSeeded(m, p.colsampleBytree, frng)
         val sampled = DistTrainer.sampleMask(p, pid, round, n)
-        trees += growTreeCollective(coll, binned, n, m, cuts, gk, hk, sampled, features, p, round, cls)
+        trees += growTreeCollective(coll, binned, n, m, cuts, gk, hk, sampled, features, p, round,
+          cls, levels)
         val tree = trees.last
         addTreeMargins(mat, tree, margins, k, cls, p.missing)
         if (eval != null) addTreeMargins(eval, tree, evalMargins, k, cls, p.missing)
@@ -153,13 +155,17 @@ object BarrierTrainer {
     ModelJson.toJson(model)
   }
 
-  /** Depth-wise growth with one histogram allreduce per level. All
-    * workers execute the same control flow (level counts derive from the
-    * shared global splits), so collective calls stay aligned. */
+  /** Depth-wise growth with one histogram allreduce per level, of the
+    * nodes that `levels` computes (past the root, the lighter child of
+    * each split; [[LevelHistograms]] derives the siblings). All workers
+    * execute the same control flow (level counts and the computed
+    * children derive from the shared global splits), so collective calls
+    * stay aligned. */
   private def growTreeCollective(coll: Collective, binned: Array[Byte],
       n: Int, m: Int, cuts: BinCuts, g: Array[Float], h: Array[Float],
       sampled: Array[Boolean], features: Array[Int], p: BoosterParams,
-      round: Int, cls: Int): Tree = {
+      round: Int, cls: Int, levels: LevelHistograms): Tree = {
+    val unit = m * MaxBins * 2
 
     val feature = new ArrayBuffer[Int]
     val threshold = new ArrayBuffer[Float]
@@ -207,14 +213,16 @@ object BarrierTrainer {
       // subset as DistTrainer, keeping the two distributed paths in parity
       val levelFeats = FeatureSampling.subsample(features, p.colsampleBylevel,
         FeatureSampling.levelKey(p.seed, round, cls, depth))
-      val localHist = new Array[Double](nActive * m * MaxBins * 2)
+      val computeSlot = levels.begin(depth, nActive, subtract = p.colsampleBylevel >= 1.0)
+      // only the computed nodes' histograms are accumulated and allreduced;
+      // every worker derives their siblings from the same global sums
+      val localHist = new Array[Double](levels.numComputed * unit)
       i = 0
       while (i < n) {
-        val node = positions(i)
-        if (node >= levelStart && node < levelEnd) {
-          val slot = node - levelStart
+        val slot = positions(i) - levelStart
+        if (slot >= 0 && slot < nActive && computeSlot(slot) >= 0) {
           val rowBase = i * m
-          val histBase = slot * m * MaxBins * 2
+          val histBase = computeSlot(slot) * unit
           var fi = 0
           while (fi < levelFeats.length) {
             val f = levelFeats(fi)
@@ -229,7 +237,8 @@ object BarrierTrainer {
         }
         i += 1
       }
-      val hist = coll.allreduce(localHist) // the Rabit-equivalent step
+      levels.fill(coll.allreduce(localHist)) // the Rabit-equivalent step
+      val hist = levels.hist
 
       val splits = new Array[SplitFinder.Split](nActive)
       var s = 0
@@ -237,10 +246,8 @@ object BarrierTrainer {
         val node = levelStart + s
         val nodeFeats = FeatureSampling.subsample(levelFeats, p.colsampleBynode,
           FeatureSampling.nodeKey(p.seed, round, cls, node))
-        val slice = java.util.Arrays.copyOfRange(
-          hist, s * m * MaxBins * 2, (s + 1) * m * MaxBins * 2)
         if (p.maxLeaves <= 0 || leaves < p.maxLeaves)
-          SplitFinder.findBest(slice, MaxBins, cuts, nodeFeats,
+          SplitFinder.findBest(hist, s * unit, MaxBins, cuts, nodeFeats,
             gSum(node), hSum(node), p, loB(node), hiB(node), allowedB(node)).foreach { sp =>
             splits(s) = sp
             feature(node) = sp.feature
@@ -253,6 +260,7 @@ object BarrierTrainer {
               else SplitFinder.Interactions.childMask(allowedB(node), um, sp.feature)
             left(node) = addNode(sp.gl, sp.hl, ll, lh, cm)
             right(node) = addNode(sp.gr, sp.hr, rl, rh, cm)
+            levels.split(s, sp.hl, sp.hr)
             leaves += 1
           }
         s += 1

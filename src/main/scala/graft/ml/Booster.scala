@@ -1,7 +1,5 @@
 package graft.ml
 
-import scala.collection.mutable.ArrayBuffer
-
 /** Per-feature histogram cut points.
   *
   * Bin semantics (XGBoost-hist style): for feature f with cuts c_0<…<c_{k-1},
@@ -15,18 +13,8 @@ final class BinCuts(val cuts: Array[Array[Float]]) extends Serializable {
 
   def numBins(f: Int): Int = cuts(f).length + 1
 
-  def binOf(f: Int, v: Float): Int = {
-    if (v != v) return BinCuts.MissingBin // NaN
-    val c = cuts(f)
-    // first index with v < c(idx)  (binary search upper bound)
-    var lo = 0
-    var hi = c.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (v < c(mid)) hi = mid else lo = mid + 1
-    }
-    lo
-  }
+  def binOf(f: Int, v: Float): Int =
+    if (v != v) BinCuts.MissingBin else BinCuts.upperBound(cuts(f), v)
 }
 
 object BinCuts {
@@ -37,63 +25,79 @@ object BinCuts {
     * layout (255 = missing) caps cuts at [[MaxCuts]]. */
   def cutBudget(maxBin: Int): Int = math.min(math.max(maxBin - 1, 1), MaxCuts)
 
-  /** Builds cuts from per-feature sampled values. Candidate thresholds are
-    * the distinct sorted values minus the minimum (a threshold at the min
-    * separates nothing); > maxCuts distincts → evenly-spaced quantiles. */
-  def fromColumnSamples(cols: Array[Array[Float]], maxCuts: Int = MaxCuts): BinCuts = {
+  /** First index `b` with `v < c(b)`, else `c.length`, for non-NaN `v` and
+    * ascending `c`: the bin of `v`. Each step halves the range and moves
+    * its base with a select rather than a branch, because which way a
+    * value falls is unpredictable; `c` has at most [[MaxCuts]] entries, so
+    * at most 8 steps. */
+  @inline def upperBound(c: Array[Float], v: Float): Int = {
+    var base = 0
+    var len = c.length
+    while (len > 1) {
+      val half = len >>> 1
+      base = if (c(base + half) <= v) base + half else base
+      len -= half
+    }
+    if (len == 1 && c(base) <= v) base + 1 else base
+  }
+
+  /** Exact cuts of a matrix: per feature, the distinct sorted non-missing
+    * values minus the minimum (a threshold at the min separates nothing);
+    * more than `maxCuts` of them → evenly-spaced picks. Each column is
+    * copied into one primitive array, sorted and de-duplicated in place
+    * (equal runs, −0.0 and 0.0 included, keep their first value). */
+  def fromMatrix(m: TrainMatrix, missing: Float, maxCuts: Int = MaxCuts): BinCuts = {
     val budget = math.min(math.max(maxCuts, 1), MaxCuts)
-    val cuts = cols.map { raw =>
-      val clean = raw.filter(v => v == v) // drop NaN
-      java.util.Arrays.sort(clean)
-      val distinct = new ArrayBuffer[Float]()
+    val n = m.numRows
+    val col = new Array[Float](n)
+    val cuts = Array.tabulate(m.numCols) { f =>
+      var len = 0
       var i = 0
-      while (i < clean.length) {
-        if (distinct.isEmpty || clean(i) != distinct.last) distinct += clean(i)
+      while (i < n) {
+        val v = m.values(i * m.numCols + f)
+        if (v == v && (missing.isNaN || v != missing)) { col(len) = v; len += 1 }
         i += 1
       }
-      if (distinct.length <= 1) Array.empty[Float]
+      java.util.Arrays.sort(col, 0, len)
+      var d = 0 // distinct values kept in col(0 until d)
+      i = 0
+      while (i < len) {
+        if (d == 0 || col(i) != col(d - 1)) { col(d) = col(i); d += 1 }
+        i += 1
+      }
+      val cand = d - 1 // candidates: col(1 until d), the minimum excluded
+      if (cand <= 0) Array.empty[Float]
+      else if (cand <= budget) java.util.Arrays.copyOfRange(col, 1, d)
       else {
-        val cand = distinct.drop(1) // exclude min
-        if (cand.length <= budget) cand.toArray
-        else {
-          val out = new Array[Float](budget)
-          var j = 0
-          while (j < budget) {
-            out(j) = cand(((j + 1).toLong * cand.length / (budget + 1)).toInt)
-            j += 1
-          }
-          out.distinct
+        // picks are ascending, so repeats of one index are adjacent
+        val out = new Array[Float](budget)
+        var k = 0
+        var j = 0
+        while (j < budget) {
+          val v = col(1 + ((j + 1).toLong * cand / (budget + 1)).toInt)
+          if (k == 0 || out(k - 1) != v) { out(k) = v; k += 1 }
+          j += 1
         }
+        java.util.Arrays.copyOf(out, k)
       }
     }
     new BinCuts(cuts)
   }
 
-  def fromMatrix(m: TrainMatrix, missing: Float, maxCuts: Int = MaxCuts): BinCuts = {
-    val cols = Array.tabulate(m.numCols) { f =>
-      val a = new Array[Float](m.numRows)
-      var i = 0
-      while (i < m.numRows) {
-        val v = m(i, f)
-        a(i) = if (!missing.isNaN && v == missing) Float.NaN else v
-        i += 1
-      }
-      a
-    }
-    fromColumnSamples(cols, maxCuts)
-  }
-
   /** Row-major byte matrix of bin indices (0xff = missing). */
   def binMatrix(m: TrainMatrix, cuts: BinCuts, missing: Float): Array[Byte] = {
     val out = new Array[Byte](m.numRows * m.numCols)
+    val values = m.values
+    val cs = cuts.cuts
+    val remap = !missing.isNaN
     var i = 0
     while (i < m.numRows) {
       var f = 0
       val base = i * m.numCols
       while (f < m.numCols) {
-        var v = m.values(base + f)
-        if (!missing.isNaN && v == missing) v = Float.NaN
-        out(base + f) = cuts.binOf(f, v).toByte
+        val v = values(base + f)
+        out(base + f) =
+          (if (v != v || (remap && v == missing)) MissingBin else upperBound(cs(f), v)).toByte
         f += 1
       }
       i += 1

@@ -145,13 +145,14 @@ object DistTrainer {
     // different multi:softprob model than the single-node path).
     var prefixBc = sc.broadcast(trees.toArray)
     val maxResultSize = resultSizeLimit(sc)
+    val levels = new LevelHistograms(numFeatures * MaxBins * 2)
 
     while (round < p.numRounds && !stop) {
       var cls = 0
       while (cls < k) {
         val features = sampleFeaturesSeeded(numFeatures, p.colsampleBytree, rng)
         trees += growTree(state, prefixBc, cutsBc, numFeatures, k, cls, round, p, obj, features,
-          maxResultSize)
+          maxResultSize, levels)
         cls += 1
       }
       // margins incl. this round: the eval pass's and the next round's prefix
@@ -189,18 +190,18 @@ object DistTrainer {
 
   // ---- one tree, depth-wise; one single-stage level job per level ----
   //
-  // Histogram-subtraction trick (the standard hist-GBT optimization):
-  // only the LIGHTER child of each split accumulates its histogram on
-  // the workers; the sibling's histogram is derived on the driver as
-  // parent - child. Workers touch at most half the rows per level past
-  // the root, and the level job moves histograms for only ~half the
-  // nodes - worker CPU and network both halve at scale.
+  // Histogram subtraction ([[LevelHistograms]]): past the root only the
+  // LIGHTER child of each split accumulates its histogram on the workers,
+  // and the driver derives its sibling as parent - child. Workers touch
+  // at most half the rows per level past the root, and the level job
+  // moves histograms for only ~half the nodes.
   //
   // The single-stage level job is submitted here, in growTree itself: its
   // call site names the job in Spark's UI and event log.
   private def growTree(state: RDD[PartState], prefixBc: Broadcast[Array[Tree]],
       cutsBc: Broadcast[BinCuts], m: Int, k: Int, cls: Int, round: Int,
-      p: BoosterParams, obj: Objective, features: Array[Int], maxResultSize: Long): Tree = {
+      p: BoosterParams, obj: Objective, features: Array[Int], maxResultSize: Long,
+      levels: LevelHistograms): Tree = {
     val sc = state.sparkContext
     val baseMargin = obj.baseMargin(p.baseScore)
     val unit = m * MaxBins * 2
@@ -229,11 +230,6 @@ object DistTrainer {
     }
     addNode(Double.NaN, Double.NaN) // root stats discovered by level-0 aggregate
 
-    // per-level subtraction bookkeeping (driver-side)
-    var prevHist: Array[Double] = null         // full hist of the previous level
-    var pairParentSlot: Array[Int] = null      // per child pair: parent slot in prev level
-    var pairComputeLeft: Array[Boolean] = null // per pair: which child accumulates
-
     var levelStart = 0
     var levelEnd = 1
     var depth = 0
@@ -242,31 +238,8 @@ object DistTrainer {
       val nActive = levelEnd - levelStart
       val levelFeats = FeatureSampling.subsample(features, p.colsampleBylevel,
         FeatureSampling.levelKey(p.seed, round, cls, depth))
-      // Histogram subtraction derives a sibling as parent − child, which
-      // requires parent and child LEVELS to have accumulated the same
-      // feature columns. colsample_bylevel draws a different set per
-      // level, so under it every node accumulates directly instead.
-      val noSubtract = p.colsampleBylevel < 1.0
-      // children were appended in (left, right) pairs, so slots 2i/2i+1
-      // of this level belong to pair i
-      val computeSlot = new Array[Int](nActive)
-      var nCompute = 0
-      if (depth == 0) { computeSlot(0) = 0; nCompute = 1 }
-      else if (noSubtract) {
-        var i = 0
-        while (i < nActive) { computeSlot(i) = i; i += 1 }
-        nCompute = nActive
-      } else {
-        var i = 0
-        while (i < nActive / 2) {
-          val cSlot = if (pairComputeLeft(i)) 2 * i else 2 * i + 1
-          val dSlot = if (pairComputeLeft(i)) 2 * i + 1 else 2 * i
-          computeSlot(cSlot) = nCompute; nCompute += 1
-          computeSlot(dSlot) = -1
-          i += 1
-        }
-      }
-      val histLen = nCompute * unit
+      val computeSlot = levels.begin(depth, nActive, subtract = p.colsampleBylevel >= 1.0)
+      val histLen = levels.numComputed * unit
       val job = new LevelJob(prefixBc, k, cls, round, p, obj, baseMargin,
         feature.toArray, binIdx.toArray, defaultLeft.toArray, left.toArray, right.toArray,
         computeSlot, levelFeats, levelStart, levelEnd, histLen)
@@ -277,47 +250,20 @@ object DistTrainer {
           sc.runJob(state, job, state.partitions.indices, sum)
           sum.total
         } else treeSum(state, job)).getOrElse(new Array[Double](histLen + 2))
-
-      // assemble the FULL level histogram: computed nodes copy in,
-      // derived nodes = parent - sibling
-      val hist = new Array[Double](nActive * unit)
-      var s = 0
-      while (s < nActive) {
-        if (computeSlot(s) >= 0)
-          System.arraycopy(compHist, computeSlot(s) * unit, hist, s * unit, unit)
-        s += 1
-      }
-      if (depth > 0 && !noSubtract) {
-        var i = 0
-        while (i < nActive / 2) {
-          val cSlot = if (pairComputeLeft(i)) 2 * i else 2 * i + 1
-          val dSlot = if (pairComputeLeft(i)) 2 * i + 1 else 2 * i
-          val pBase = pairParentSlot(i) * unit
-          val cBase = cSlot * unit
-          val dBase = dSlot * unit
-          var j = 0
-          while (j < unit) {
-            hist(dBase + j) = prevHist(pBase + j) - hist(cBase + j)
-            j += 1
-          }
-          i += 1
-        }
-      }
+      levels.fill(compHist)
+      val hist = levels.hist
 
       if (depth == 0) { gSum(0) = compHist(histLen); hSum(0) = compHist(histLen + 1) }
       // (child g/h sums were recorded exactly at addNode from the
       // parent's split stats - no aggregation needed past the root)
 
-      val nextParents = new ArrayBuffer[Int]
-      val nextComputeLeft = new ArrayBuffer[Boolean]
-      s = 0
+      var s = 0
       while (s < nActive) {
         val node = levelStart + s
         val nodeFeats = FeatureSampling.subsample(levelFeats, p.colsampleBynode,
           FeatureSampling.nodeKey(p.seed, round, cls, node))
-        val slice = java.util.Arrays.copyOfRange(hist, s * unit, (s + 1) * unit)
         if (p.maxLeaves <= 0 || leaves < p.maxLeaves)
-          SplitFinder.findBest(slice, MaxBins, cutsBc.value, nodeFeats,
+          SplitFinder.findBest(hist, s * unit, MaxBins, cutsBc.value, nodeFeats,
             gSum(node), hSum(node), p, loB(node), hiB(node), allowedB(node)).foreach { sp =>
             feature(node) = sp.feature
             binIdx(node) = sp.binIdx
@@ -329,15 +275,11 @@ object DistTrainer {
               else SplitFinder.Interactions.childMask(allowedB(node), um, sp.feature)
             left(node) = addNode(sp.gl, sp.hl, ll, lh, cm)
             right(node) = addNode(sp.gr, sp.hr, rl, rh, cm)
-            nextParents += s
-            nextComputeLeft += (sp.hl <= sp.hr) // accumulate the lighter child
+            levels.split(s, sp.hl, sp.hr)
             leaves += 1
           }
         s += 1
       }
-      prevHist = hist
-      pairParentSlot = nextParents.toArray
-      pairComputeLeft = nextComputeLeft.toArray
       levelStart = levelEnd
       levelEnd = feature.length
       depth += 1

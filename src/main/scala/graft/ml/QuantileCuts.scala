@@ -38,8 +38,10 @@ import org.apache.spark.sql.catalyst.util.QuantileSummaries.Stats
   * row count.
   *
   * Cuts are the 254 evenly-spaced quantiles, de-duplicated, excluding the
-  * global minimum (a threshold at the min separates nothing) — mirroring
-  * `BinCuts.fromColumnSamples` semantics. This is xgboost-hist's own recipe
+  * global minimum (a threshold at the min separates nothing) — the rule
+  * of the single-node path's exact cuts, `BinCuts.fromMatrix`, which
+  * takes every distinct value while there are at most 254 of them. This
+  * is xgboost-hist's own recipe
   * (approximate quantile sketch → fixed bin budget). The driver reads each
   * feature's quantiles with one batched `QuantileSummaries.query(Seq)`, a
   * single walk over the merged summary.

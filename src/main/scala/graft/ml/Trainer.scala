@@ -58,14 +58,15 @@ object SplitFinder {
     * clamped into the node's inherited [lo, hi] bound — see
     * [[childBounds]] for how bounds propagate.
     *
-    * @param hist flat histogram for this node: ((f * maxBins + b) * 2)
-    *             holds Σg, +1 holds Σh over non-missing rows with bin b
+    * @param hist a level's histograms; this node's starts at `off`, where
+    *             off + (f * maxBins + b) * 2 holds Σg and +1 holds Σh over
+    *             its non-missing rows with bin b (read in place, not copied)
     * @param features candidate feature indices (colsample subset)
     * @param lo lower weight bound inherited from monotone ancestors
     * @param hi upper weight bound
     */
   def findBest(
-      hist: Array[Double], maxBins: Int, cuts: BinCuts,
+      hist: Array[Double], off: Int, maxBins: Int, cuts: BinCuts,
       features: Array[Int], gNode: Double, hNode: Double,
       p: BoosterParams, lo: Double = Double.NegativeInfinity,
       hi: Double = Double.PositiveInfinity,
@@ -78,7 +79,7 @@ object SplitFinder {
       val cons = if (mono != null && f < mono.length) mono(f) else 0
       val nCuts = cuts.cuts(f).length
       if (nCuts > 0 && (allowed == null || Interactions.bit(allowed, f))) {
-        val base = f * maxBins * 2
+        val base = off + f * maxBins * 2
         // non-missing totals for this feature → derive missing-row stats
         var gSum = 0.0
         var hSum = 0.0
@@ -196,6 +197,115 @@ object SplitFinder {
   }
 }
 
+/** Histogram subtraction for depth-wise growth, the one copy that all
+  * three growers call (the standard hist-GBT trick, as in LightGBM and
+  * XGBoost's `hist`). Past the root, only the lighter child of each split
+  * accumulates its histogram; the sibling is derived as parent − child,
+  * so per level the rows of at most half the nodes are scanned and, on
+  * the distributed paths, only their histograms move. The level's
+  * histograms live in one buffer, node slot s at s × `unit`, and the
+  * previous level's in a second one; the two swap at each level and are
+  * reused from tree to tree.
+  *
+  * A grower calls, per level:
+  *   1. [[begin]]: per node slot, the index of its histogram among the
+  *      level's computed ones, or -1 where it is derived; the computed
+  *      slots of [[hist]] come back zeroed;
+  *   2. either accumulates the computed slots into [[hist]] and calls
+  *      [[derive]], or hands [[fill]] the computed histograms packed in
+  *      index order (a level job's sum, an allreduce);
+  *   3. searches [[hist]] and calls [[split]] for each accepted split in
+  *      slot order, whose two children are the next level's next two
+  *      slots.
+  *
+  * A derived sibling is only right when parent and child accumulated the
+  * same feature columns. colsample_bylevel < 1 draws a new set per level,
+  * so then every node accumulates (`subtract = false`).
+  */
+private[ml] final class LevelHistograms(unit: Int) {
+  private var cur = Array.empty[Double]
+  private var prev = Array.empty[Double]
+  private var computeOf = Array.empty[Int]
+  private var computed = 0
+  // per child pair of this level: its parent's slot in the previous level,
+  // and whether its left child is the computed one
+  private var pairParent = Array.empty[Int]
+  private var pairLeft = Array.empty[Boolean]
+  // the same, for the splits of the level being searched
+  private val splitSlot = new ArrayBuffer[Int]
+  private val splitLeft = new ArrayBuffer[Boolean]
+
+  /** This level's histograms, node slot s at s × `unit`. */
+  def hist: Array[Double] = cur
+
+  /** How many of this level's histograms are computed, not derived. */
+  def numComputed: Int = computed
+
+  /** Starts a level of `nActive` nodes (depth 0 is a new tree's root). */
+  def begin(depth: Int, nActive: Int, subtract: Boolean): Array[Int] = {
+    val t = prev; prev = cur; cur = t
+    if (cur.length < nActive * unit) cur = new Array[Double](nActive * unit)
+    if (depth > 0 && subtract) {
+      require(nActive == 2 * splitSlot.length, "a level holds the children of the last splits")
+      pairParent = splitSlot.toArray
+      pairLeft = splitLeft.toArray
+    } else {
+      pairParent = Array.empty
+      pairLeft = Array.empty
+    }
+    splitSlot.clear()
+    splitLeft.clear()
+    computeOf = new Array[Int](nActive)
+    computed = 0
+    var s = 0
+    while (s < nActive) {
+      if (pairParent.isEmpty || pairLeft(s / 2) == (s % 2 == 0)) {
+        computeOf(s) = computed
+        computed += 1
+        java.util.Arrays.fill(cur, s * unit, (s + 1) * unit, 0.0)
+      } else computeOf(s) = -1
+      s += 1
+    }
+    computeOf
+  }
+
+  /** Derives each sibling that [[begin]] marked -1: parent − the computed
+    * child, from the previous level's histograms. */
+  def derive(): Unit = {
+    var i = 0
+    while (i < pairParent.length) {
+      val c = if (pairLeft(i)) 2 * i else 2 * i + 1
+      val dBase = (4 * i + 1 - c) * unit // the pair's other slot
+      val cBase = c * unit
+      val pBase = pairParent(i) * unit
+      var j = 0
+      while (j < unit) {
+        cur(dBase + j) = prev(pBase + j) - cur(cBase + j)
+        j += 1
+      }
+      i += 1
+    }
+  }
+
+  /** Copies the computed histograms, packed in [[begin]]'s index order,
+    * into their slots, then [[derive]]s the rest. */
+  def fill(packed: Array[Double]): Unit = {
+    var s = 0
+    while (s < computeOf.length) {
+      if (computeOf(s) >= 0) System.arraycopy(packed, computeOf(s) * unit, cur, s * unit, unit)
+      s += 1
+    }
+    derive()
+  }
+
+  /** Records that slot `slot` split with child hessian sums `hl` and `hr`:
+    * the lighter child accumulates at the next level. */
+  def split(slot: Int, hl: Double, hr: Double): Unit = {
+    splitSlot += slot
+    splitLeft += (hl <= hr)
+  }
+}
+
 /** Keyed (stateless) feature subsampling for colsample_bylevel /
   * colsample_bynode: the subset is a pure function of (seed, round,
   * class, depth/node), so every worker — driver-coordinated or barrier —
@@ -242,13 +352,12 @@ object FeatureSampling {
 /** Single-machine histogram GBT trainer — the kernel behind the reference's
   * single-node path (reference `xgboost_core.py:479-513`): runs inside one
   * task after `repartition(1)`, or on the driver over a collected matrix.
-  * The distributed path ([[DistTrainer]]) reuses [[SplitFinder]] and the
-  * same histogram layout, aggregating per-partition histograms instead.
+  * The distributed paths ([[DistTrainer]], [[BarrierTrainer]]) reuse
+  * [[SplitFinder]], [[LevelHistograms]] and the same histogram layout,
+  * summing per-partition histograms instead.
   */
 object Trainer {
-  import DistTrainer.addTreeMargins
-
-  private val MaxBins = 256
+  import DistTrainer.{MaxBins, addTreeMargins, initMargins, sampleFeaturesSeeded}
 
   /** Mutable per-tree growth state, depth-wise. */
   private final class Growth {
@@ -302,22 +411,10 @@ object Trainer {
     val cuts = BinCuts.fromMatrix(trainM, p.missing, BinCuts.cutBudget(p.maxBin))
     val binned = BinCuts.binMatrix(trainM, cuts, p.missing)
     val rng = new java.util.Random(p.seed)
-
-    // scale_pos_weight folds into per-row weights for the logistic objective
-    val weights: Array[Float] =
-      if (p.scalePosWeight != 1.0 && p.objective == "binary:logistic") {
-        val w = new Array[Float](n)
-        var i = 0
-        while (i < n) {
-          val base = if (trainM.weights == null) 1.0f else trainM.weights(i)
-          w(i) = if (trainM.labels(i) == 1.0f) (base * p.scalePosWeight).toFloat else base
-          i += 1
-        }
-        w
-      } else trainM.weights
-
-    val margins = initMargins(trainM, obj, p, k)
-    val evalMargins = evalM.map(e => initMargins(e, obj, p, k))
+    val weights = DistTrainer.effectiveWeights(trainM, p)
+    val baseMargin = obj.baseMargin(p.baseScore)
+    val margins = initMargins(trainM, baseMargin, k)
+    val evalMargins = evalM.map(e => initMargins(e, baseMargin, k))
 
     // warm start: fold the init booster's trees into the margins and keep
     // them at the head of the ensemble (reference xgb_model semantics —
@@ -331,6 +428,7 @@ object Trainer {
     val h = new Array[Float](n * k)
     val gk = new Array[Float](n)
     val hk = new Array[Float](n)
+    val levels = new LevelHistograms(m * MaxBins * 2)
     val trees = new ArrayBuffer[Tree]
     trees ++= initTrees
     val metric = p.evalMetric.getOrElse(obj.defaultMetric(p.numClass))
@@ -349,11 +447,11 @@ object Trainer {
           var i = 0
           while (i < n) { gk(i) = g(i * k + cls); hk(i) = h(i * k + cls); i += 1 }
         }
-        val features = sampleFeatures(m, p.colsampleBytree, rng)
+        val features = sampleFeaturesSeeded(m, p.colsampleBytree, rng)
         val tree =
           if (p.growPolicy == "lossguide")
             buildTreeLossGuide(binned, n, m, cuts, gk, hk, sampled, features, p, round, cls)
-          else buildTree(binned, n, m, cuts, gk, hk, sampled, features, p, round, cls)
+          else buildTree(binned, n, m, cuts, gk, hk, sampled, features, p, round, cls, levels)
         trees += tree
         addTreeMargins(trainM, tree, margins, k, cls, p.missing)
         evalM.zip(evalMargins).foreach { case (e, em) =>
@@ -371,7 +469,7 @@ object Trainer {
       round += 1
     }
 
-    new BoosterModel(obj.name, p.numClass, m, obj.baseMargin(p.baseScore),
+    new BoosterModel(obj.name, p.numClass, m, baseMargin,
       trees.toArray, p.missing,
       if (evalM.isDefined) Some(bestScore) else None,
       // best_iteration is recorded only when early stopping is enabled —
@@ -382,51 +480,24 @@ object Trainer {
         Some(initTrees.length / k + bestIter) else None)
   }
 
-  private def initMargins(mat: TrainMatrix, obj: Objective, p: BoosterParams, k: Int): Array[Float] = {
-    val out = new Array[Float](mat.numRows * k)
-    val base = obj.baseMargin(p.baseScore)
-    var i = 0
-    while (i < out.length) { out(i) = base; i += 1 }
-    if (mat.baseMargins != null) {
-      // user base margin is added to the global bias, one value per row
-      var r = 0
-      while (r < mat.numRows) {
-        var c = 0
-        while (c < k) { out(r * k + c) = (out(r * k + c) + mat.baseMargins(r)); c += 1 }
-        r += 1
-      }
-    }
-    out
-  }
-
-  private def sampleFeatures(m: Int, colsample: Double, rng: java.util.Random): Array[Int] = {
-    if (colsample >= 1.0) Array.range(0, m)
-    else {
-      val take = math.max(1, math.round(m * colsample).toInt)
-      val idx = Array.range(0, m)
-      // Fisher–Yates prefix shuffle
-      var i = 0
-      while (i < take) {
-        val j = i + rng.nextInt(m - i)
-        val t = idx(i); idx(i) = idx(j); idx(j) = t
-        i += 1
-      }
-      java.util.Arrays.sort(idx, 0, take)
-      idx.take(take)
-    }
-  }
-
-  /** Depth-wise growth: one histogram pass over all rows per level.
-    * colsample_bylevel narrows the accumulated feature set per depth;
-    * colsample_bynode narrows each node's SEARCH set within the level's
-    * accumulated set; max_leaves (when > 0) caps total leaves — nodes
-    * past the budget stay leaves. */
+  /** Depth-wise growth, one level at a time. Per level, one pass over the
+    * rows accumulates the histograms of the nodes that `levels` computes
+    * (past the root, the lighter child of each split), `levels` derives
+    * their siblings by subtraction, every node's split is searched in
+    * place in the level buffer, and one more pass routes each row to its
+    * child. colsample_bylevel narrows the accumulated feature set per
+    * depth (and turns subtraction off, see [[LevelHistograms]]);
+    * colsample_bynode narrows each node's SEARCH set within it; max_leaves
+    * (when > 0) caps total leaves — nodes past the budget stay leaves. */
   private def buildTree(
       binned: Array[Byte], n: Int, m: Int, cuts: BinCuts,
       g: Array[Float], h: Array[Float], sampled: Array[Boolean],
-      features: Array[Int], p: BoosterParams, round: Int, cls: Int): Tree = {
+      features: Array[Int], p: BoosterParams, round: Int, cls: Int,
+      levels: LevelHistograms): Tree = {
 
     val growth = new Growth
+    val unit = m * MaxBins * 2
+    // the row's node; -1 = not sampled this round, -2 = settled in a leaf
     val positions = new Array[Int](n)
     var gRoot = 0.0
     var hRoot = 0.0
@@ -447,40 +518,42 @@ object Trainer {
       val nActive = levelEnd - levelStart
       val levelFeats = FeatureSampling.subsample(features, p.colsampleBylevel,
         FeatureSampling.levelKey(p.seed, round, cls, depth))
-      val hist = new Array[Double](nActive * m * MaxBins * 2)
-      // single pass over rows: accumulate (g,h) into per-node histograms
+      val computeOf = levels.begin(depth, nActive, subtract = p.colsampleBylevel >= 1.0)
+      val hist = levels.hist
       i = 0
       while (i < n) {
-        val node = positions(i)
-        if (node >= levelStart && node < levelEnd) {
-          val slot = node - levelStart
+        val slot = positions(i) - levelStart
+        if (slot >= 0 && slot < nActive && computeOf(slot) >= 0) {
           val rowBase = i * m
-          val histBase = slot * m * MaxBins * 2
+          val histBase = slot * unit
+          val gi = g(i)
+          val hi = h(i)
           var fi = 0
           while (fi < levelFeats.length) {
             val f = levelFeats(fi)
             val b = binned(rowBase + f) & 0xff
             if (b != BinCuts.MissingBin) {
               val idx = histBase + (f * MaxBins + b) * 2
-              hist(idx) += g(i)
-              hist(idx + 1) += h(i)
+              hist(idx) += gi
+              hist(idx + 1) += hi
             }
             fi += 1
           }
         }
         i += 1
       }
-      // split decisions for this level
+      levels.derive()
+      // split decisions; per slot the split and its left child's id (the
+      // right one's is the next), which the routing pass reads unboxed
       val splits = new Array[SplitFinder.Split](nActive)
+      val leftKid = new Array[Int](nActive)
       var s = 0
       while (s < nActive) {
         val node = levelStart + s
         val nodeFeats = FeatureSampling.subsample(levelFeats, p.colsampleBynode,
           FeatureSampling.nodeKey(p.seed, round, cls, node))
-        val slice = java.util.Arrays.copyOfRange(
-          hist, s * m * MaxBins * 2, (s + 1) * m * MaxBins * 2)
         if (p.maxLeaves <= 0 || leaves < p.maxLeaves)
-          SplitFinder.findBest(slice, MaxBins, cuts, nodeFeats,
+          SplitFinder.findBest(hist, s * unit, MaxBins, cuts, nodeFeats,
             growth.gSum(node), growth.hSum(node), p,
             growth.lo(node), growth.hi(node), growth.allowed(node)).foreach { sp =>
             splits(s) = sp
@@ -493,6 +566,8 @@ object Trainer {
               else SplitFinder.Interactions.childMask(growth.allowed(node), um, sp.feature)
             growth.left(node) = growth.addNode(sp.gl, sp.hl, depth + 1, ll, lh, cm)
             growth.right(node) = growth.addNode(sp.gr, sp.hr, depth + 1, rl, rh, cm)
+            leftKid(s) = growth.left(node)
+            levels.split(s, sp.hl, sp.hr)
             leaves += 1
           }
         s += 1
@@ -500,16 +575,16 @@ object Trainer {
       // route rows to children
       i = 0
       while (i < n) {
-        val node = positions(i)
-        if (node >= levelStart && node < levelEnd) {
-          val sp = splits(node - levelStart)
+        val slot = positions(i) - levelStart
+        if (slot >= 0 && slot < nActive) {
+          val sp = splits(slot)
           if (sp == null) positions(i) = -2 // settled in a leaf
           else {
             val b = binned(i * m + sp.feature) & 0xff
             val goLeft =
               if (b == BinCuts.MissingBin) sp.defaultLeft
               else b <= sp.binIdx
-            positions(i) = if (goLeft) growth.left(node) else growth.right(node)
+            positions(i) = if (goLeft) leftKid(slot) else leftKid(slot) + 1
           }
         }
         i += 1
@@ -578,7 +653,7 @@ object Trainer {
         FeatureSampling.levelKey(p.seed, round, cls, growth.depth(node)))
       val nodeFeats = FeatureSampling.subsample(levelFeats, p.colsampleBynode,
         FeatureSampling.nodeKey(p.seed, round, cls, node))
-      SplitFinder.findBest(nodeHist(node, levelFeats), MaxBins, cuts, nodeFeats,
+      SplitFinder.findBest(nodeHist(node, levelFeats), 0, MaxBins, cuts, nodeFeats,
         growth.gSum(node), growth.hSum(node), p,
         growth.lo(node), growth.hi(node), growth.allowed(node)).map(sp => (sp.gain, node, sp))
     }

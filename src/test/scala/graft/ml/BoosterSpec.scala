@@ -418,4 +418,103 @@ class BoosterSpec extends AnyFunSuite {
     }
     assert(nanLeft > 0 && nanRight > 0, s"NaN routed left $nanLeft, right $nanRight times at roots")
   }
+
+  /** The bin search before the branchless one: a branching binary search
+    * for the first cut above `v`. The oracle for [[BinCuts.binOf]]. */
+  private def branchingBinOf(c: Array[Float], v: Float): Int = {
+    if (v != v) return BinCuts.MissingBin
+    var lo = 0
+    var hi = c.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (v < c(mid)) hi = mid else lo = mid + 1
+    }
+    lo
+  }
+
+  /** The exact cuts before the primitive column path: boxed distinct
+    * values, evenly-spaced picks and `distinct`. The oracle for
+    * [[BinCuts.fromMatrix]]. */
+  private def boxedCuts(m: TrainMatrix, missing: Float, maxCuts: Int): Array[Array[Float]] = {
+    val budget = math.min(math.max(maxCuts, 1), BinCuts.MaxCuts)
+    Array.tabulate(m.numCols) { f =>
+      val raw = Array.tabulate(m.numRows) { i =>
+        val v = m(i, f)
+        if (!missing.isNaN && v == missing) Float.NaN else v
+      }
+      val clean = raw.filter(v => v == v)
+      java.util.Arrays.sort(clean)
+      val distinct = new ArrayBuffer[Float]()
+      clean.foreach(v => if (distinct.isEmpty || v != distinct.last) distinct += v)
+      if (distinct.length <= 1) Array.empty[Float]
+      else {
+        val cand = distinct.drop(1)
+        if (cand.length <= budget) cand.toArray
+        else Array.tabulate(budget)(j =>
+          cand(((j + 1).toLong * cand.length / (budget + 1)).toInt)).distinct
+      }
+    }
+  }
+
+  private def bits(a: Array[Float]): Seq[Int] = a.toSeq.map(java.lang.Float.floatToRawIntBits)
+
+  private val specials = Array(0.0f, -0.0f, Float.PositiveInfinity, Float.NegativeInfinity)
+
+  test("binOf's branchless search == the branching binary search: random cut arrays of " +
+      "0-254 entries with ties, +-0.0 and +-Inf, inputs at, above and below each cut, NaN") {
+    val seeds = Gen.listOfN(200, Gen.choose(1L, Long.MaxValue))
+      .pureApply(Gen.Parameters.default, Seed(20261019L))
+    var lengths = Set.empty[Int]
+    seeds.foreach { seed =>
+      val rng = new java.util.Random(seed)
+      val len = if (rng.nextInt(10) == 0) rng.nextInt(2) * BinCuts.MaxCuts else rng.nextInt(255)
+      lengths += len
+      val c = Array.fill(len)(rng.nextInt(8) match {
+        case 0 => specials(rng.nextInt(specials.length))
+        case 1 => rng.nextInt(5).toFloat // ties
+        case _ => (rng.nextGaussian() * 100).toFloat
+      })
+      java.util.Arrays.sort(c)
+      val cuts = new BinCuts(Array(c))
+      val inputs = c.flatMap(v => Seq(v, Math.nextUp(v), Math.nextDown(v))) ++ specials ++
+        Seq(Float.NaN, Float.MaxValue, -Float.MaxValue) ++ Seq.fill(20)(rng.nextFloat() * 400 - 200)
+      inputs.foreach { v =>
+        assert(cuts.binOf(0, v) == branchingBinOf(c, v), s"seed $seed: binOf($v) over ${c.toSeq}")
+      }
+      assert(cuts.binOf(0, Float.NaN) == BinCuts.MissingBin)
+    }
+    assert(lengths.contains(0) && lengths.contains(BinCuts.MaxCuts), s"lengths $lengths")
+  }
+
+  test("fromMatrix's in-place cuts are bit-identical to the boxed path: ties, NaN, a " +
+      "non-NaN missing sentinel, +-0.0, all-missing, single-value and > 254-value columns") {
+    val seeds = Gen.listOfN(120, Gen.choose(1L, Long.MaxValue))
+      .pureApply(Gen.Parameters.default, Seed(20261020L))
+    var wide = 0
+    seeds.foreach { seed =>
+      val rng = new java.util.Random(seed)
+      val n = 1 + rng.nextInt(if (rng.nextBoolean()) 40 else 1500)
+      val m = 1 + rng.nextInt(6)
+      val missing = if (rng.nextBoolean()) Float.NaN else (rng.nextInt(3) - 1).toFloat
+      val kinds = Array.fill(m)(rng.nextInt(5))
+      val values = Array.tabulate(n * m) { i =>
+        kinds(i % m) match {
+          case 0 => if (rng.nextBoolean()) Float.NaN else missing // all missing
+          case 1 => 7.5f // single value
+          case 2 => if (rng.nextInt(5) == 0) Float.NaN else specials(rng.nextInt(specials.length))
+          case 3 => rng.nextInt(12) - 6.0f + (if (rng.nextInt(7) == 0) missing else 0f)
+          case _ => if (rng.nextInt(9) == 0) missing else (rng.nextGaussian() * 1e3).toFloat
+        }
+      }
+      val mat = new TrainMatrix(n, m, values, new Array[Float](n), null, null)
+      val budget = if (rng.nextBoolean()) BinCuts.MaxCuts else 1 + rng.nextInt(BinCuts.MaxCuts)
+      val got = BinCuts.fromMatrix(mat, missing, budget).cuts
+      val want = boxedCuts(mat, missing, budget)
+      got.zip(want).zipWithIndex.foreach { case ((g, w), f) =>
+        assert(bits(g) == bits(w), s"seed $seed feature $f (kind ${kinds(f)}): ${g.toSeq} vs ${w.toSeq}")
+      }
+      wide += want.count(_.length == budget && budget > 100)
+    }
+    assert(wide > 0, "some columns must have more distinct values than the cut budget")
+  }
 }

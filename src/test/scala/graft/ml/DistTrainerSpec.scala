@@ -3,13 +3,16 @@ package graft.ml
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
   SparkListenerStageSubmitted}
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.collection.mutable
 
 /** The job shape of the DistTrainer path, its fallback when the level
-  * histograms would overrun spark.driver.maxResultSize, and the parity of
-  * its per-round eval pass with the barrier path's allreduce. */
+  * histograms would overrun spark.driver.maxResultSize, the parity of
+  * its per-round eval pass with the barrier path's allreduce, and its
+  * parity with the single-node Trainer on one partition. */
 class DistTrainerSpec extends AnyFunSuite {
   lazy val spark = graft.SparkTestSession.spark
 
@@ -168,5 +171,84 @@ class DistTrainerSpec extends AnyFunSuite {
         assert(math.abs(a - b) < 1e-5, s"tree $t: node weight $a vs $b")
       }
     }
+  }
+
+  /** One random single-node vs DistTrainer case: the data's shape and the
+    * params that change which histograms a level accumulates. */
+  private final case class ParityCase(seed: Long, k: Int, depth: Int, rows: Int, m: Int,
+      missing: Boolean, weighted: Boolean, bylevel: Boolean, bynode: Boolean,
+      maxLeaves: Int, monotone: Boolean)
+
+  private def sameTrees(what: String, a: Array[Tree], b: Array[Tree]): Unit = {
+    assert(a.length == b.length, s"$what: ${a.length} vs ${b.length} trees")
+    a.zip(b).zipWithIndex.foreach { case ((x, y), t) =>
+      assert(x.feature.toSeq == y.feature.toSeq && x.threshold.toSeq == y.threshold.toSeq &&
+        x.defaultLeft.toSeq == y.defaultLeft.toSeq,
+        s"$what, tree $t: splits differ: ${x.feature.toSeq} vs ${y.feature.toSeq}")
+      x.weight.zip(y.weight).foreach { case (u, v) =>
+        assert(math.abs(u - v) <= 1e-5, s"$what, tree $t: node weight $u vs $v")
+      }
+    }
+  }
+
+  test("property: a single-node fit equals DistTrainer on one partition, with and without " +
+    "histogram subtraction: K = 1-3, depth 1-6, missing values, weights, colsample_bylevel/" +
+    "bynode, max_leaves, monotone constraints") {
+    val cases = Gen.listOfN(24, for {
+      seed <- Gen.choose(1L, Long.MaxValue)
+      k <- Gen.choose(1, 3)
+      depth <- Gen.choose(1, 6)
+      rows <- Gen.choose(40, 250)
+      m <- Gen.choose(2, 5)
+      flags <- Gen.listOfN(5, Gen.oneOf(false, true))
+      maxLeaves <- Gen.oneOf(0, 0, 3, 7)
+    } yield ParityCase(seed, k, depth, rows, m, flags(0), flags(1), flags(2), flags(3), maxLeaves,
+      flags(4))).pureApply(Gen.Parameters.default, Seed(20261019L))
+    assert(cases.map(_.k).toSet == Set(1, 2, 3) && cases.exists(_.bylevel) &&
+      cases.exists(c => !c.bylevel && c.depth > 1), "the cases must cover every branch")
+    var split = 0
+    cases.foreach { c =>
+      val rng = new java.util.Random(c.seed)
+      // at most 8 distinct values per feature over <= 250 rows: the sketch's
+      // 254 quantiles hit every rank, so both paths get the exact cuts
+      val levels = Array.fill(c.m)(Array.fill(1 + rng.nextInt(8))(
+        math.round(rng.nextGaussian() * 4 * 1e3) / 1e3))
+      val data = Seq.fill(c.rows) {
+        val f = Array.tabulate(c.m)(j =>
+          if (c.missing && rng.nextInt(6) == 0) Double.NaN
+          else levels(j)(rng.nextInt(levels(j).length)))
+        val x0 = if (f(0).isNaN) 0.0 else f(0)
+        val label =
+          if (c.k == 1) x0 * 2 + rng.nextGaussian()
+          else ((if (x0 > 0) 1 else 0) + rng.nextInt(2)) % c.k
+        (Vectors.dense(f), label.toDouble, if (c.weighted) 0.5 + rng.nextInt(4) else 1.0)
+      }
+      val withW = spark.createDataFrame(data).toDF("features", "label", "weight").coalesce(1)
+      val df = if (c.weighted) withW else withW.drop("weight")
+      val bp = BoosterParams(numRounds = 2, maxDepth = c.depth, seed = c.seed,
+        objective = if (c.k == 1) "reg:squarederror" else "multi:softprob",
+        numClass = if (c.k == 1) 0 else c.k,
+        colsampleBylevel = if (c.bylevel) 0.5 else 1.0,
+        colsampleBynode = if (c.bynode) 0.5 else 1.0,
+        maxLeaves = c.maxLeaves,
+        monotoneConstraints = if (c.monotone) Array.fill(c.m)(rng.nextInt(3) - 1) else null)
+      val (mat, _) = TrainMatrix.fromRows(df.collect().iterator, c.weighted, false, false)
+      val cuts = BinCuts.fromMatrix(mat, Float.NaN)
+      val sketched = QuantileCuts.fromRdd(df.rdd, Float.NaN)
+      assert(cuts.cuts.map(_.toSeq).toSeq == sketched.cuts.map(_.toSeq).toSeq,
+        s"$c: exact and sketched cuts differ, so the paths cannot agree")
+      val single = Trainer.train(mat, None, bp).trees
+      val dist = ModelJson.fromJson(DistTrainer.train(df, hasW = c.weighted, hasV = false,
+        hasM = false, bp, 1, forceRepartition = false)).trees
+      sameTrees(s"$c: single-node vs DistTrainer", single, dist)
+      if (!c.bylevel) {
+        // colsample_bylevel just under 1 keeps every feature but turns
+        // subtraction off: each sibling accumulated, not derived
+        val direct = Trainer.train(mat, None, bp.copy(colsampleBylevel = 1.0 - 1e-9)).trees
+        sameTrees(s"$c: subtracted vs accumulated siblings", single, direct)
+      }
+      split += single.count(t => t.numNodes > 3)
+    }
+    assert(split > 0, "some trees must grow past depth 1")
   }
 }

@@ -36,7 +36,7 @@ object BarrierTrainer {
   def train(projected: DataFrame, hasW: Boolean, hasV: Boolean, hasM: Boolean,
       p0: BoosterParams, numWorkers: Int, forceRepartition: Boolean,
       useExt: Boolean = false, esp: Int = 5,
-      initTrees: Array[Tree] = Array.empty): String = {
+      initTrees: Array[Tree] = Array.empty): BoosterModel = {
     val p = p0.resolved
     val sc = projected.sparkSession.sparkContext
     val input =
@@ -71,7 +71,7 @@ object BarrierTrainer {
       if (ctx.partitionId() == 0) Iterator.single(json) else Iterator.empty
     }.collect()
     require(jsons.nonEmpty, "barrier training yielded no model")
-    jsons(0)
+    ModelJson.fromJson(jsons(0))
   }
 
   /** The full boosting loop, run identically on every worker; local data

@@ -98,7 +98,7 @@ object DistTrainer {
   def train(projected: DataFrame, hasW: Boolean, hasV: Boolean, hasM: Boolean,
       p0: BoosterParams, numWorkers: Int, forceRepartition: Boolean,
       useExt: Boolean = false, esp: Int = 5,
-      initTrees: Array[Tree] = Array.empty): String = {
+      initTrees: Array[Tree] = Array.empty): BoosterModel = {
     val p = p0.resolved
     val spark = projected.sparkSession
     val sc = spark.sparkContext
@@ -178,14 +178,13 @@ object DistTrainer {
     prefixBc.destroy()
     state.unpersist(blocking = false)
 
-    val model = new BoosterModel(obj.name, p.numClass, numFeatures, baseMargin,
+    new BoosterModel(obj.name, p.numClass, numFeatures, baseMargin,
       trees.toArray, p.missing,
       if (hasEval) Some(bestScore) else None,
       // best_iteration counts init-booster rounds too (xgboost offsets
       // best_iteration by the warm-start booster's round count), so the
       // default predict prefix keeps the init trees PLUS the best new rounds.
       if (hasEval && p.earlyStoppingRounds > 0) Some(initTrees.length / k + bestIter) else None)
-    ModelJson.toJson(model)
   }
 
   // ---- one tree, depth-wise; one single-stage level job per level ----

@@ -102,7 +102,7 @@ private[ml] object FitSupport extends org.apache.spark.internal.Logging {
     * reference's spill path drops base margins, and so does ours). */
   def trainSingleNode(projected: DataFrame, hasW: Boolean, hasV: Boolean,
       hasM: Boolean, bp: BoosterParams, useExt: Boolean, esp: Int,
-      initTrees: Array[Tree]): String = {
+      initTrees: Array[Tree]): BoosterModel = {
     val modelJson = projected.repartition(1).rdd.mapPartitions { it =>
       val (train, eval) =
         if (useExt) ExternalStorage.buildMatrices(it, hasW, hasV, hasM, esp)
@@ -110,7 +110,7 @@ private[ml] object FitSupport extends org.apache.spark.internal.Logging {
       Iterator(ModelJson.toJson(Trainer.train(train, eval, bp, initTrees)))
     }.collect()
     require(modelJson.nonEmpty, "training produced no model (empty input?)")
-    modelJson(0)
+    ModelJson.fromJson(modelJson(0))
   }
 
   /** The reference's GPU validation (_validate_params,
@@ -175,14 +175,12 @@ private[ml] object FitSupport extends org.apache.spark.internal.Logging {
     if (bp.growPolicy == "lossguide" && n > 1)
       logWarning("grow_policy=lossguide is single-node only in this build; " +
         "distributed training grows depthwise honoring the max_leaves cap")
-    val json =
-      if (n <= 1) trainSingleNode(projected, hasW, hasV, hasM, bp, useExt, esp, initTrees)
-      else if (est.getOrDefault(est.useBarrierMode))
-        BarrierTrainer.train(projected, hasW, hasV, hasM, bp, n,
-          est.getOrDefault(est.forceRepartition), useExt, esp, initTrees)
-      else DistTrainer.train(projected, hasW, hasV, hasM, bp, n,
+    if (n <= 1) trainSingleNode(projected, hasW, hasV, hasM, bp, useExt, esp, initTrees)
+    else if (est.getOrDefault(est.useBarrierMode))
+      BarrierTrainer.train(projected, hasW, hasV, hasM, bp, n,
         est.getOrDefault(est.forceRepartition), useExt, esp, initTrees)
-    ModelJson.fromJson(json)
+    else DistTrainer.train(projected, hasW, hasV, hasM, bp, n,
+      est.getOrDefault(est.forceRepartition), useExt, esp, initTrees)
   }
 }
 
@@ -279,34 +277,12 @@ class XgboostRegressorModel(override val uid: String, val booster: BoosterModel)
     schema.add(StructField($(predictionCol), DoubleType, nullable = false))
   }
 
-  override def write: MLWriter = new XgboostRegressorModel.Writer(this)
+  override def write: MLWriter = new GraftMLIO.Writer(this, booster)
 }
 
 object XgboostRegressorModel extends MLReadable[XgboostRegressorModel] {
-  private[ml] val className = classOf[XgboostRegressorModel].getName
-
-  private[ml] class Writer(instance: XgboostRegressorModel) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      GraftMLIO.saveMetadata(instance, className, path, sparkSession)
-      GraftMLIO.saveModelJson(ModelJson.toJson(instance.booster), path, sparkSession)
-    }
-  }
-
-  private class Reader extends MLReader[XgboostRegressorModel] {
-    override def load(path: String): XgboostRegressorModel = {
-      val booster = ModelJson.fromJson(GraftMLIO.loadModelJson(path, sparkSession))
-      val tmp = new XgboostRegressorModel("tmp", booster)
-      val uid = GraftMLIO.loadMetadata(tmp, className, path, sparkSession)
-      val out = new XgboostRegressorModel(uid, booster)
-      tmp.extractParamMap().toSeq.foreach { p =>
-        out.set(out.params.find(_.name == p.param.name).get
-          .asInstanceOf[org.apache.spark.ml.param.Param[Any]], p.value)
-      }
-      out
-    }
-  }
-
-  override def read: MLReader[XgboostRegressorModel] = new Reader
+  override def read: MLReader[XgboostRegressorModel] = new GraftMLIO.Reader(
+    classOf[XgboostRegressorModel].getName, new XgboostRegressorModel(_, _))
 }
 
 // =========================================================================
@@ -420,32 +396,10 @@ class XgboostClassifierModel(override val uid: String, val booster: BoosterModel
     out
   }
 
-  override def write: MLWriter = new XgboostClassifierModel.Writer(this)
+  override def write: MLWriter = new GraftMLIO.Writer(this, booster)
 }
 
 object XgboostClassifierModel extends MLReadable[XgboostClassifierModel] {
-  private[ml] val className = classOf[XgboostClassifierModel].getName
-
-  private[ml] class Writer(instance: XgboostClassifierModel) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      GraftMLIO.saveMetadata(instance, className, path, sparkSession)
-      GraftMLIO.saveModelJson(ModelJson.toJson(instance.booster), path, sparkSession)
-    }
-  }
-
-  private class Reader extends MLReader[XgboostClassifierModel] {
-    override def load(path: String): XgboostClassifierModel = {
-      val booster = ModelJson.fromJson(GraftMLIO.loadModelJson(path, sparkSession))
-      val tmp = new XgboostClassifierModel("tmp", booster)
-      val uid = GraftMLIO.loadMetadata(tmp, className, path, sparkSession)
-      val out = new XgboostClassifierModel(uid, booster)
-      tmp.extractParamMap().toSeq.foreach { p =>
-        out.set(out.params.find(_.name == p.param.name).get
-          .asInstanceOf[org.apache.spark.ml.param.Param[Any]], p.value)
-      }
-      out
-    }
-  }
-
-  override def read: MLReader[XgboostClassifierModel] = new Reader
+  override def read: MLReader[XgboostClassifierModel] = new GraftMLIO.Reader(
+    classOf[XgboostClassifierModel].getName, new XgboostClassifierModel(_, _))
 }

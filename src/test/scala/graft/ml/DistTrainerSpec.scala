@@ -161,8 +161,8 @@ class DistTrainerSpec extends AnyFunSuite {
     val est = new XgboostRegressor().setNEstimators(6).setMaxDepth(3).setSubsample(0.5)
     val single = est.fit(df).booster
     val (projected, hasW, hasV, hasM) = FitSupport.projectTrain(est, df)
-    val dist = ModelJson.fromJson(DistTrainer.train(projected, hasW, hasV, hasM,
-      est.boosterParams("reg:squarederror", 0), 1, forceRepartition = false))
+    val dist = DistTrainer.train(projected, hasW, hasV, hasM,
+      est.boosterParams("reg:squarederror", 0), 1, forceRepartition = false)
     assert(single.trees.length == dist.trees.length)
     single.trees.zip(dist.trees).zipWithIndex.foreach { case ((s, d), t) =>
       assert(s.feature.toSeq == d.feature.toSeq && s.threshold.toSeq == d.threshold.toSeq,
@@ -238,8 +238,8 @@ class DistTrainerSpec extends AnyFunSuite {
       assert(cuts.cuts.map(_.toSeq).toSeq == sketched.cuts.map(_.toSeq).toSeq,
         s"$c: exact and sketched cuts differ, so the paths cannot agree")
       val single = Trainer.train(mat, None, bp).trees
-      val dist = ModelJson.fromJson(DistTrainer.train(df, hasW = c.weighted, hasV = false,
-        hasM = false, bp, 1, forceRepartition = false)).trees
+      val dist = DistTrainer.train(df, hasW = c.weighted, hasV = false,
+        hasM = false, bp, 1, forceRepartition = false).trees
       sameTrees(s"$c: single-node vs DistTrainer", single, dist)
       if (!c.bylevel) {
         // colsample_bylevel just under 1 keeps every feature but turns

@@ -3,10 +3,13 @@ package graft.ml
 import org.apache.spark.ml.{Model, Pipeline, PipelineModel}
 import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.linalg.{SQLDataTypes, Vector, Vectors}
+import org.apache.spark.ml.param.Param
 import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
+import org.apache.spark.ml.util.MLWritable
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Estimator/Model end-to-end tests over the FIXTURES.md schemas: mixed
@@ -166,6 +169,132 @@ class EstimatorSpec extends AnyFunSuite {
     val loaded = PipelineModel.load(dir)
     val preds2 = loaded.transform(regTrainDf).select("prediction").collect().map(_.getDouble(0))
     assert(preds.sameElements(preds2))
+  }
+
+  // the F3 fixture: K=3 with dense and sparse rows
+  private def multiTrainDf = {
+    val base = Seq(
+      (Vectors.dense(1.0, 2.0, 3.0), 0.0),
+      (Vectors.sparse(3, Seq((1, 1.0), (2, 5.5))), 0.0),
+      (Vectors.dense(4.0, 5.0, 6.0), 1.0),
+      (Vectors.sparse(3, Seq((1, 6.0), (2, 7.5))), 2.0))
+    spark.createDataFrame(Seq.fill(50)(base).flatten).toDF("features", "label")
+  }
+
+  private def modelDir(prefix: String) =
+    java.nio.file.Files.createTempDirectory(prefix).toString + "/m"
+
+  // every output column of a transform, in row order
+  private def scores(m: Model[_], df: DataFrame): Seq[Row] =
+    m.transform(df).drop("features", "label").collect().toSeq
+
+  test("model save and load start no Spark job: regressor and K=3 classifier") {
+    val sc = spark.sparkContext
+    val reg = new XgboostRegressor().setNEstimators(5).fit(regTrainDf)
+    val cls = new XgboostClassifier().setNEstimators(3).fit(multiTrainDf)
+    val (group, marker) = ("graft-persistence", "graft-persistence-marker")
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "model save and load")
+      val (dirR, dirC) = (modelDir("graft-nojob"), modelDir("graft-nojob"))
+      reg.write.overwrite().save(dirR)
+      val reg2 = XgboostRegressorModel.load(dirR)
+      cls.write.overwrite().save(dirC)
+      val cls2 = XgboostClassifierModel.load(dirC)
+      // the listener bus delivers in order: once the marker job's start
+      // lands, every job start of the round trips has too
+      sc.setJobGroup(marker, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!started.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(started.contains(marker), "the listener never saw the marker job")
+      val jobs = started.toArray.count(_ == group)
+      assert(jobs == 0, s"$jobs Spark jobs started inside two save/load round trips")
+      assert(ModelJson.toJson(reg2.booster) == ModelJson.toJson(reg.booster))
+      assert(ModelJson.toJson(cls2.booster) == ModelJson.toJson(cls.booster))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+  }
+
+  test("a model directory written through DataFrame writers loads and scores identically") {
+    val reg = new XgboostRegressor().setNEstimators(5).setEta(0.2).fit(regTrainDf)
+    val cls = new XgboostClassifier().setNEstimators(3).setMaxDepth(3).fit(multiTrainDf)
+    Seq[(Model[_] with MLWritable, BoosterModel, String => Model[_], DataFrame)](
+      (reg, reg.booster, XgboostRegressorModel.load, regTrainDf),
+      (cls, cls.booster, XgboostClassifierModel.load, multiTrainDf)).foreach {
+      case (model, booster, load, df) =>
+        val fresh = modelDir("graft-meta")
+        model.write.save(fresh)
+        val metaLine = spark.read.text(s"$fresh/metadata").head().getString(0)
+        // the layout Spark's DataFrame writers leave: part-00000-<uuid>-c000.*
+        // data files beside _SUCCESS markers and .crc checksums
+        val dir = modelDir("graft-dflayout")
+        Seq(Tuple1(metaLine)).toDF("value").coalesce(1).write.text(s"$dir/metadata")
+        Seq(Tuple1(ModelJson.toJson(booster))).toDF("model_json").coalesce(1)
+          .write.parquet(s"$dir/model")
+        def names(sub: String) = new java.io.File(s"$dir/$sub").list().toSeq
+        assert(names("metadata").exists(n => n.startsWith("part-00000-") && n.endsWith("-c000.txt")))
+        assert(names("model").exists(n =>
+          n.startsWith("part-00000-") && n.endsWith("-c000.snappy.parquet")))
+        assert(names("model").contains("_SUCCESS"))
+        // the truncated in-progress files a save that died would leave
+        Seq("metadata", "model").foreach(sub =>
+          java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, sub, ".part-00000"), "{"))
+        val loaded = load(dir)
+        assert(loaded.getClass == model.getClass)
+        assert(loaded.uid == model.uid)
+        // compared encoded: the NaN default of `missing` is not == itself
+        def params(m: Model[_]) = m.extractParamMap().toSeq
+          .map(p => p.param.name -> p.param.asInstanceOf[Param[Any]].jsonEncode(p.value)).toMap
+        assert(params(loaded) == params(model))
+        assert(scores(loaded, df) == scores(model, df))
+    }
+  }
+
+  test("a saved model reads through spark.read.parquet and spark.read.text; " +
+      "no in-progress file is left") {
+    val model = new XgboostClassifier().setNEstimators(3).fit(multiTrainDf)
+    val dir = modelDir("graft-sparkread")
+    model.write.save(dir)
+    val frame = spark.read.parquet(s"$dir/model")
+    assert(frame.schema == StructType(Seq(StructField("model_json", StringType))))
+    val rows = frame.collect()
+    assert(rows.length == 1)
+    assert(rows(0).getString(0) == ModelJson.toJson(model.booster))
+    val lines = spark.read.text(s"$dir/metadata").collect().map(_.getString(0))
+    assert(lines.length == 1)
+    val meta = org.json4s.jackson.JsonMethods.parse(lines(0))
+    assert((meta \ "class") == org.json4s.JString(classOf[XgboostClassifierModel].getName))
+    assert((meta \ "uid") == org.json4s.JString(model.uid))
+    Seq("metadata" -> "part-00000", "model" -> "part-00000.snappy.parquet").foreach {
+      case (sub, data) =>
+        val names = new java.io.File(s"$dir/$sub").list().toSet
+        assert(names.filterNot(_.startsWith(".")) == Set(data), s"$sub: $names")
+        // hidden names left are only the checksums of the data files
+        assert(names.filter(_.startsWith(".")).forall(n =>
+          n.endsWith(".crc") && names(n.stripPrefix(".").stripSuffix(".crc"))), s"$sub: $names")
+    }
+  }
+
+  test("save onto an existing path needs overwrite(); a directory without a data file " +
+      "fails to load, naming it") {
+    val model = new XgboostRegressor().setNEstimators(3).fit(regTrainDf)
+    val dir = modelDir("graft-exists")
+    model.write.save(dir)
+    val ex = intercept[java.io.IOException] { model.write.save(dir) }
+    assert(ex.getMessage.contains("already exists"), ex.getMessage)
+    model.write.overwrite().save(dir)
+    new java.io.File(s"$dir/model").listFiles().foreach(f => assert(f.delete()))
+    val missing = intercept[java.io.FileNotFoundException] { XgboostRegressorModel.load(dir) }
+    assert(missing.getMessage.contains(s"$dir/model"), missing.getMessage)
   }
 
   test("CrossValidator interop (reference local_test.py:466-476)") {

@@ -15,11 +15,12 @@ import scala.collection.mutable.ArrayBuffer
   *     distributes partition 0's coordinator address (the reference ships
   *     the tracker env the same way, `xgboost_core.py:407-411`), then
   *     per-tree-level histogram allreduces run over persistent TCP. Each
-  *     worker contributes its local gradient histogram, receives the
-  *     global sum, and derives the SAME split — so every worker grows the
-  *     identical tree and "all workers end with the same model", the
-  *     invariant that lets only partition 0 emit the booster
-  *     (`xgboost_core.py:423-425`);
+  *     worker contributes its local gradient histogram (and at the root
+  *     level its g/h sums), receives the global sum, and derives the SAME
+  *     split with [[LevelGrower]], the grower of every training path — so
+  *     every worker grows the identical tree and "all workers end with
+  *     the same model", the invariant that lets only partition 0 emit the
+  *     booster (`xgboost_core.py:423-425`);
   *   - traffic per level is O(nodes·features·bins), independent of row
   *     count — Rabit's asymptotics; fine for the tested worker counts,
   *     while [[DistTrainer]] (driver-summed level jobs) remains the
@@ -31,7 +32,7 @@ import scala.collection.mutable.ArrayBuffer
   * randomness leaks into the model structure.
   */
 object BarrierTrainer {
-  import DistTrainer.{MaxBins, addTreeMargins, initMargins, sampleFeaturesSeeded}
+  import DistTrainer.{addTreeMargins, initMargins, sampleFeaturesSeeded}
 
   def train(projected: DataFrame, hasW: Boolean, hasV: Boolean, hasM: Boolean,
       p0: BoosterParams, numWorkers: Int, forceRepartition: Boolean,
@@ -58,10 +59,10 @@ object BarrierTrainer {
       val (train, evalOpt) =
         if (useExt) ExternalStorage.buildMatrices(it, hasW, hasV, hasM, esp)
         else TrainMatrix.fromRows(it, hasW, hasV, hasM)
-      ctx.barrier() // all matrices built before the collective starts
       // ONE allGather bootstraps the socket collective (the reference's
       // tracker-env exchange, xgboost_core.py:407-411); histogram rounds
-      // then run over persistent TCP, like the Rabit ring
+      // then run over persistent TCP, like the Rabit ring. The allGather
+      // waits for every task, each of which has built its matrix by then.
       val coll = Collective.bootstrap(ctx)
       val json =
         try trainWorker(coll, ctx.partitionId(), train, evalOpt.orNull, cutsBc.value, k, p, obj, hasV, initTrees)
@@ -97,9 +98,8 @@ object BarrierTrainer {
     }
     val g = new Array[Float](n * k)
     val h = new Array[Float](n * k)
-    val gk = new Array[Float](n)
-    val hk = new Array[Float](n)
-    val levels = new LevelHistograms(m * MaxBins * 2)
+    val grower = new LevelGrower(m, cuts, p)
+    val pos = new Array[Int](n)
     val trees = new ArrayBuffer[Tree]
     trees ++= initTrees
     val metric = p.evalMetric.getOrElse(obj.defaultMetric(p.numClass))
@@ -116,18 +116,19 @@ object BarrierTrainer {
       if (n > 0) obj.gradHess(margins, mat.labels, weights, k, g, h)
       var cls = 0
       while (cls < k) {
-        if (n > 0) {
-          if (k == 1) { System.arraycopy(g, 0, gk, 0, n); System.arraycopy(h, 0, hk, 0, n) }
-          else {
-            var i = 0
-            while (i < n) { gk(i) = g(i * k + cls); hk(i) = h(i * k + cls); i += 1 }
-          }
-        }
         val features = sampleFeaturesSeeded(m, p.colsampleBytree, frng)
-        val sampled = DistTrainer.sampleMask(p, pid, round, n)
-        trees += growTreeCollective(coll, binned, n, m, cuts, gk, hk, sampled, features, p, round,
-          cls, levels)
-        val tree = trees.last
+        grower.beginTree(features, round, cls)
+        TreeLevel.resetPositions(pos, DistTrainer.sampleMask(p, pid, round, n))
+        // one allreduce per level, the Rabit-equivalent step: every worker
+        // grows the same splits from the same global sums, so the workers'
+        // collective calls stay aligned
+        while (grower.beginLevel()) {
+          val local = new Array[Double](grower.level.histLen + 2)
+          grower.level.accumulate(binned, g, h, k, cls, pos, local)
+          grower.endLevel(coll.allreduce(local))
+        }
+        val tree = grower.tree
+        trees += tree
         addTreeMargins(mat, tree, margins, k, cls, p.missing)
         if (eval != null) addTreeMargins(eval, tree, evalMargins, k, cls, p.missing)
         cls += 1
@@ -153,150 +154,5 @@ object BarrierTrainer {
       // offset by the init booster's rounds — see DistTrainer's note
       if (hasEval && p.earlyStoppingRounds > 0) Some(initTrees.length / k + bestIter) else None)
     ModelJson.toJson(model)
-  }
-
-  /** Depth-wise growth with one histogram allreduce per level, of the
-    * nodes that `levels` computes (past the root, the lighter child of
-    * each split; [[LevelHistograms]] derives the siblings). All workers
-    * execute the same control flow (level counts and the computed
-    * children derive from the shared global splits), so collective calls
-    * stay aligned. */
-  private def growTreeCollective(coll: Collective, binned: Array[Byte],
-      n: Int, m: Int, cuts: BinCuts, g: Array[Float], h: Array[Float],
-      sampled: Array[Boolean], features: Array[Int], p: BoosterParams,
-      round: Int, cls: Int, levels: LevelHistograms): Tree = {
-    val unit = m * MaxBins * 2
-
-    val feature = new ArrayBuffer[Int]
-    val threshold = new ArrayBuffer[Float]
-    val binIdx = new ArrayBuffer[Int]
-    val defaultLeft = new ArrayBuffer[Boolean]
-    val left = new ArrayBuffer[Int]
-    val right = new ArrayBuffer[Int]
-    val gSum = new ArrayBuffer[Double]
-    val hSum = new ArrayBuffer[Double]
-    val gain = new ArrayBuffer[Float]
-    val loB = new ArrayBuffer[Double] // monotone weight bounds
-    val hiB = new ArrayBuffer[Double]
-    val allowedB = new ArrayBuffer[Array[Long]] // interaction masks (null = all)
-    val um = SplitFinder.Interactions.unionMasks(p.interactionConstraints, m)
-    def addNode(gs: Double, hs: Double,
-        wLo: Double = Double.NegativeInfinity,
-        wHi: Double = Double.PositiveInfinity,
-        mask: Array[Long] = null): Int = {
-      feature += -1; threshold += 0f; binIdx += -1; defaultLeft += true
-      left += -1; right += -1; gSum += gs; hSum += hs; gain += 0f
-      loB += wLo; hiB += wHi; allowedB += mask
-      feature.length - 1
-    }
-
-    val positions = new Array[Int](n)
-    var gRootLocal = 0.0
-    var hRootLocal = 0.0
-    var i = 0
-    while (i < n) {
-      if (sampled == null || sampled(i)) { positions(i) = 0; gRootLocal += g(i); hRootLocal += h(i) }
-      else positions(i) = -1
-      i += 1
-    }
-    val rootStats = coll.allreduce(Array(gRootLocal, hRootLocal))
-    addNode(rootStats(0), rootStats(1))
-
-    var depth = 0
-    var levelStart = 0
-    var levelEnd = 1
-    var leaves = 1
-    while (depth < p.maxDepth && levelStart < levelEnd) {
-      val nActive = levelEnd - levelStart
-      // keyed (seed, round, cls, depth) sampling: every worker derives the
-      // same per-level subset with no extra collective — and the same
-      // subset as DistTrainer, keeping the two distributed paths in parity
-      val levelFeats = FeatureSampling.subsample(features, p.colsampleBylevel,
-        FeatureSampling.levelKey(p.seed, round, cls, depth))
-      val computeSlot = levels.begin(depth, nActive, subtract = p.colsampleBylevel >= 1.0)
-      // only the computed nodes' histograms are accumulated and allreduced;
-      // every worker derives their siblings from the same global sums
-      val localHist = new Array[Double](levels.numComputed * unit)
-      i = 0
-      while (i < n) {
-        val slot = positions(i) - levelStart
-        if (slot >= 0 && slot < nActive && computeSlot(slot) >= 0) {
-          val rowBase = i * m
-          val histBase = computeSlot(slot) * unit
-          var fi = 0
-          while (fi < levelFeats.length) {
-            val f = levelFeats(fi)
-            val b = binned(rowBase + f) & 0xff
-            if (b != BinCuts.MissingBin) {
-              val idx = histBase + (f * MaxBins + b) * 2
-              localHist(idx) += g(i)
-              localHist(idx + 1) += h(i)
-            }
-            fi += 1
-          }
-        }
-        i += 1
-      }
-      levels.fill(coll.allreduce(localHist)) // the Rabit-equivalent step
-      val hist = levels.hist
-
-      val splits = new Array[SplitFinder.Split](nActive)
-      var s = 0
-      while (s < nActive) {
-        val node = levelStart + s
-        val nodeFeats = FeatureSampling.subsample(levelFeats, p.colsampleBynode,
-          FeatureSampling.nodeKey(p.seed, round, cls, node))
-        if (p.maxLeaves <= 0 || leaves < p.maxLeaves)
-          SplitFinder.findBest(hist, s * unit, MaxBins, cuts, nodeFeats,
-            gSum(node), hSum(node), p, loB(node), hiB(node), allowedB(node)).foreach { sp =>
-            splits(s) = sp
-            feature(node) = sp.feature
-            threshold(node) = sp.threshold
-            binIdx(node) = sp.binIdx
-            defaultLeft(node) = sp.defaultLeft
-            gain(node) = sp.gain.toFloat
-            val (ll, lh, rl, rh) = SplitFinder.childBounds(sp, p, loB(node), hiB(node))
-            val cm = if (um == null) null
-              else SplitFinder.Interactions.childMask(allowedB(node), um, sp.feature)
-            left(node) = addNode(sp.gl, sp.hl, ll, lh, cm)
-            right(node) = addNode(sp.gr, sp.hr, rl, rh, cm)
-            levels.split(s, sp.hl, sp.hr)
-            leaves += 1
-          }
-        s += 1
-      }
-      i = 0
-      while (i < n) {
-        val node = positions(i)
-        if (node >= levelStart && node < levelEnd) {
-          val sp = splits(node - levelStart)
-          if (sp == null) positions(i) = -2
-          else {
-            val b = binned(i * m + sp.feature) & 0xff
-            val goLeft =
-              if (b == BinCuts.MissingBin) sp.defaultLeft
-              else b <= sp.binIdx
-            positions(i) = if (goLeft) left(node) else right(node)
-          }
-        }
-        i += 1
-      }
-      levelStart = levelEnd
-      levelEnd = feature.length
-      depth += 1
-    }
-
-    val nn = feature.length
-    val w = new Array[Float](nn)
-    i = 0
-    while (i < nn) {
-      if (left(i) < 0)
-        w(i) = (p.eta * SplitFinder.clamp(
-          SplitFinder.leafWeightP(gSum(i), hSum(i), p), loB(i), hiB(i))).toFloat
-      i += 1
-    }
-    new Tree(feature.toArray, threshold.toArray, defaultLeft.toArray,
-      left.toArray, right.toArray, w, gain.toArray,
-      hSum.map(_.toFloat).toArray)
   }
 }

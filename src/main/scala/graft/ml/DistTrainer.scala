@@ -31,9 +31,9 @@ import scala.collection.mutable.ArrayBuffer
   *     and the level's features ride in the task binary as its fields
   *     (no per-level broadcasts). A [[SumInto]] result handler adds each
   *     partition's histogram into one driver buffer as its task finishes
-  *     → driver finds splits with the same [[SplitFinder]] as the
-  *     single-node path → every worker sees the identical tree, the
-  *     invariant Rabit provided;
+  *     → the driver grows the tree with the same [[LevelGrower]] as
+  *     the single-node and barrier paths → every worker sees the
+  *     identical tree, the invariant Rabit provided;
   *   - gradients: computed once per round from ROUND-START margins for
   *     all K classes (xgboost semantics — numWorkers must not change the
   *     model), memoized on the PartState;
@@ -78,7 +78,8 @@ object DistTrainer {
     // tree only appends nodes, so resuming from the stored node reaches
     // the same leaf a root walk would; on eviction/recompute the cache
     // is null and the walk restarts from the root — same result, the
-    // determinism story margins already have.
+    // determinism story margins already have. -1 marks rows outside the
+    // round's subsample.
     @transient var nodePos: Array[Int] = _
     @transient var posRound: Int = -1
     @transient var posCls: Int = -1
@@ -145,14 +146,13 @@ object DistTrainer {
     // different multi:softprob model than the single-node path).
     var prefixBc = sc.broadcast(trees.toArray)
     val maxResultSize = resultSizeLimit(sc)
-    val levels = new LevelHistograms(numFeatures * MaxBins * 2)
+    val grower = new LevelGrower(numFeatures, cuts, p)
 
     while (round < p.numRounds && !stop) {
       var cls = 0
       while (cls < k) {
         val features = sampleFeaturesSeeded(numFeatures, p.colsampleBytree, rng)
-        trees += growTree(state, prefixBc, cutsBc, numFeatures, k, cls, round, p, obj, features,
-          maxResultSize, levels)
+        trees += growTree(state, prefixBc, grower, k, cls, round, p, obj, features, maxResultSize)
         cls += 1
       }
       // margins incl. this round: the eval pass's and the next round's prefix
@@ -187,7 +187,7 @@ object DistTrainer {
       if (hasEval && p.earlyStoppingRounds > 0) Some(initTrees.length / k + bestIter) else None)
   }
 
-  // ---- one tree, depth-wise; one single-stage level job per level ----
+  // ---- one tree: [[LevelGrower]] over one single-stage level job per level ----
   //
   // Histogram subtraction ([[LevelHistograms]]): past the root only the
   // LIGHTER child of each split accumulates its histogram on the workers,
@@ -198,104 +198,23 @@ object DistTrainer {
   // The single-stage level job is submitted here, in growTree itself: its
   // call site names the job in Spark's UI and event log.
   private def growTree(state: RDD[PartState], prefixBc: Broadcast[Array[Tree]],
-      cutsBc: Broadcast[BinCuts], m: Int, k: Int, cls: Int, round: Int,
-      p: BoosterParams, obj: Objective, features: Array[Int], maxResultSize: Long,
-      levels: LevelHistograms): Tree = {
+      grower: LevelGrower, k: Int, cls: Int, round: Int, p: BoosterParams, obj: Objective,
+      features: Array[Int], maxResultSize: Long): Tree = {
     val sc = state.sparkContext
     val baseMargin = obj.baseMargin(p.baseScore)
-    val unit = m * MaxBins * 2
-    val feature = new ArrayBuffer[Int]
-    val binIdx = new ArrayBuffer[Int]
-    val defaultLeft = new ArrayBuffer[Boolean]
-    val left = new ArrayBuffer[Int]
-    val right = new ArrayBuffer[Int]
-    val threshold = new ArrayBuffer[Float]
-    val gSum = new ArrayBuffer[Double]
-    val hSum = new ArrayBuffer[Double]
-    val gain = new ArrayBuffer[Float]
-    val loB = new ArrayBuffer[Double] // monotone weight bounds
-    val hiB = new ArrayBuffer[Double]
-    val allowedB = new ArrayBuffer[Array[Long]] // interaction masks (null = all)
-    val um = SplitFinder.Interactions.unionMasks(p.interactionConstraints, m)
-
-    def addNode(g: Double, h: Double,
-        wLo: Double = Double.NegativeInfinity,
-        wHi: Double = Double.PositiveInfinity,
-        mask: Array[Long] = null): Int = {
-      feature += -1; binIdx += -1; defaultLeft += true; left += -1; right += -1
-      threshold += 0f; gSum += g; hSum += h; gain += 0f
-      loB += wLo; hiB += wHi; allowedB += mask
-      feature.length - 1
-    }
-    addNode(Double.NaN, Double.NaN) // root stats discovered by level-0 aggregate
-
-    var levelStart = 0
-    var levelEnd = 1
-    var depth = 0
-    var leaves = 1
-    while (depth < p.maxDepth && levelStart < levelEnd) {
-      val nActive = levelEnd - levelStart
-      val levelFeats = FeatureSampling.subsample(features, p.colsampleBylevel,
-        FeatureSampling.levelKey(p.seed, round, cls, depth))
-      val computeSlot = levels.begin(depth, nActive, subtract = p.colsampleBylevel >= 1.0)
-      val histLen = levels.numComputed * unit
-      val job = new LevelJob(prefixBc, k, cls, round, p, obj, baseMargin,
-        feature.toArray, binIdx.toArray, defaultLeft.toArray, left.toArray, right.toArray,
-        computeSlot, levelFeats, levelStart, levelEnd, histLen)
-      // computed nodes' histograms, then the root's g/h sums
-      val compHist = Option(
-        if (resultsFit(state.getNumPartitions, histLen + 2, maxResultSize)) {
+    grower.beginTree(features, round, cls)
+    while (grower.beginLevel()) {
+      val len = grower.level.histLen + 2
+      val job = new LevelJob(prefixBc, k, cls, round, p, obj, baseMargin, grower.level)
+      val sums =
+        if (resultsFit(state.getNumPartitions, len, maxResultSize)) {
           val sum = new SumInto
           sc.runJob(state, job, state.partitions.indices, sum)
           sum.total
-        } else treeSum(state, job)).getOrElse(new Array[Double](histLen + 2))
-      levels.fill(compHist)
-      val hist = levels.hist
-
-      if (depth == 0) { gSum(0) = compHist(histLen); hSum(0) = compHist(histLen + 1) }
-      // (child g/h sums were recorded exactly at addNode from the
-      // parent's split stats - no aggregation needed past the root)
-
-      var s = 0
-      while (s < nActive) {
-        val node = levelStart + s
-        val nodeFeats = FeatureSampling.subsample(levelFeats, p.colsampleBynode,
-          FeatureSampling.nodeKey(p.seed, round, cls, node))
-        if (p.maxLeaves <= 0 || leaves < p.maxLeaves)
-          SplitFinder.findBest(hist, s * unit, MaxBins, cutsBc.value, nodeFeats,
-            gSum(node), hSum(node), p, loB(node), hiB(node), allowedB(node)).foreach { sp =>
-            feature(node) = sp.feature
-            binIdx(node) = sp.binIdx
-            threshold(node) = sp.threshold
-            defaultLeft(node) = sp.defaultLeft
-            gain(node) = sp.gain.toFloat
-            val (ll, lh, rl, rh) = SplitFinder.childBounds(sp, p, loB(node), hiB(node))
-            val cm = if (um == null) null
-              else SplitFinder.Interactions.childMask(allowedB(node), um, sp.feature)
-            left(node) = addNode(sp.gl, sp.hl, ll, lh, cm)
-            right(node) = addNode(sp.gr, sp.hr, rl, rh, cm)
-            levels.split(s, sp.hl, sp.hr)
-            leaves += 1
-          }
-        s += 1
-      }
-      levelStart = levelEnd
-      levelEnd = feature.length
-      depth += 1
+        } else treeSum(state, job)
+      grower.endLevel(if (sums == null) new Array[Double](len) else sums)
     }
-
-    val n = feature.length
-    val w = new Array[Float](n)
-    var i = 0
-    while (i < n) {
-      if (left(i) < 0)
-        w(i) = (p.eta * SplitFinder.clamp(
-          SplitFinder.leafWeightP(gSum(i), hSum(i), p), loB(i), hiB(i))).toFloat
-      i += 1
-    }
-    new Tree(feature.toArray, threshold.toArray, defaultLeft.toArray,
-      left.toArray, right.toArray, w, gain.toArray,
-      hSum.map(_.toFloat).toArray)
+    grower.tree
   }
 
   /** Worker-side: fold any not-yet-applied trees of the broadcast prefix
@@ -373,87 +292,39 @@ object DistTrainer {
       a
     }
 
-  /** One level's pass over a partition: route rows through the partial
-    * tree on binned values, accumulate histograms ONLY for the level's
-    * compute-designated nodes (the lighter child of each split; siblings
-    * are derived driver-side by subtraction). Returns those `histLen`
-    * histogram entries, then the root's g and h sums (filled on the root
-    * level only). A named class rather than a closure: `SparkContext.clean`
-    * skips it, and its fields are the partial tree and level features. */
+  /** One level's pass over a partition ([[TreeLevel.accumulate]]): the
+    * level's computed histograms, then the root's g and h sums (filled on
+    * the root level only). A named class rather than a closure:
+    * `SparkContext.clean` skips it, and its fields are the level and the
+    * round's tree prefix. */
   private final class LevelJob(prefixBc: Broadcast[Array[Tree]], k: Int, cls: Int,
-      round: Int, p: BoosterParams, obj: Objective, baseMargin: Float,
-      tFeature: Array[Int], tBinIdx: Array[Int], tDefaultLeft: Array[Boolean],
-      tLeft: Array[Int], tRight: Array[Int], computeSlot: Array[Int],
-      features: Array[Int], levelStart: Int, levelEnd: Int, histLen: Int)
+      round: Int, p: BoosterParams, obj: Objective, baseMargin: Float, level: TreeLevel)
       extends ((TaskContext, Iterator[PartState]) => Array[Double]) with Serializable {
 
     def apply(ctx: TaskContext, it: Iterator[PartState]): Array[Double] = {
-      val out = new Array[Double](histLen + 2)
+      val out = new Array[Double](level.histLen + 2)
       it.foreach { ps =>
         ensureMargins(ps, prefixBc.value, k, p, obj, baseMargin)
         ensureGrads(ps, round, k, p, obj)
-        accumulate(ps, ctx.partitionId(), out)
+        level.accumulate(ps.binned, ps.gCache, ps.hCache, k, cls, positions(ps, ctx.partitionId()),
+          out)
       }
       out
     }
 
-    private def accumulate(ps: PartState, pid: Int, hist: Array[Double]): Unit = {
-      val mat = ps.train
-      val n = mat.numRows
-      if (n == 0) return
-      val m = mat.numCols
-      val g = ps.gCache
-      val h = ps.hCache
-      val isRootLevel = levelStart == 0
-      // position cache for the tree under growth (see PartState.nodePos):
-      // reset to the root when a new (round, cls) tree starts
-      if (ps.nodePos == null || ps.nodePos.length != n) ps.nodePos = new Array[Int](n)
+    // the rows' nodes in the tree under growth (see PartState.nodePos),
+    // reset when a new (round, cls) tree starts
+    private def positions(ps: PartState, pid: Int): Array[Int] = {
+      val n = ps.train.numRows
+      if (ps.nodePos == null || ps.nodePos.length != n) {
+        ps.nodePos = new Array[Int](n)
+        ps.posRound = -1 // a deserialized PartState reads round 0, class 0 here
+      }
       if (ps.posRound != round || ps.posCls != cls) {
-        java.util.Arrays.fill(ps.nodePos, 0)
+        TreeLevel.resetPositions(ps.nodePos, sampleMask(p, pid, round, n))
         ps.posRound = round; ps.posCls = cls
       }
-      val pos = ps.nodePos
-
-      var i = 0
-      while (i < n) {
-        if (p.subsample >= 1.0 || sampledRow(p.seed, pid, round, i, p.subsample)) {
-          // resume routing from the stored node: only the steps the levels
-          // since the last visit appended are walked (amortized one step
-          // per level instead of a root walk)
-          var node = pos(i)
-          var depth = 0
-          while (tLeft(node) >= 0 && depth < 64) {
-            val b = ps.binned(i * m + tFeature(node)) & 0xff
-            val goLeft =
-              if (b == BinCuts.MissingBin) tDefaultLeft(node)
-              else b <= tBinIdx(node)
-            node = if (goLeft) tLeft(node) else tRight(node)
-            depth += 1
-          }
-          pos(i) = node
-          if (node >= levelStart && node < levelEnd) {
-            val gi = g(i * k + cls)
-            val hi = h(i * k + cls)
-            if (isRootLevel) { hist(histLen) += gi; hist(histLen + 1) += hi }
-            val slot = computeSlot(node - levelStart)
-            if (slot >= 0) {
-              val histBase = slot * m * MaxBins * 2
-              var fi = 0
-              while (fi < features.length) {
-                val f = features(fi)
-                val b = ps.binned(i * m + f) & 0xff
-                if (b != BinCuts.MissingBin) {
-                  val idx = histBase + (f * MaxBins + b) * 2
-                  hist(idx) += gi
-                  hist(idx + 1) += hi
-                }
-                fi += 1
-              }
-            }
-          }
-        }
-        i += 1
-      }
+      ps.nodePos
     }
   }
 

@@ -2,9 +2,9 @@ package graft.ml
 
 import scala.collection.mutable.ArrayBuffer
 
-/** Split search over accumulated histograms — shared by the local trainer
-  * and the distributed trainers, which produce identical
-  * histogram layouts. All math is XGBoost-style second-order:
+/** Split search over accumulated histograms — called by [[LevelGrower]],
+  * the depth-wise grower of all three training paths, and by `Trainer`'s
+  * lossguide growth. All math is XGBoost-style second-order:
   * score(G,H) = T(G)²/(H+λ) with T the L1 soft-threshold, leaf weight
   * −T(G)/(H+λ), split gain ½(scoreL+scoreR−scoreP) − γ.
   */
@@ -197,26 +197,24 @@ object SplitFinder {
   }
 }
 
-/** Histogram subtraction for depth-wise growth, the one copy that all
-  * three growers call (the standard hist-GBT trick, as in LightGBM and
-  * XGBoost's `hist`). Past the root, only the lighter child of each split
-  * accumulates its histogram; the sibling is derived as parent − child,
-  * so per level the rows of at most half the nodes are scanned and, on
-  * the distributed paths, only their histograms move. The level's
-  * histograms live in one buffer, node slot s at s × `unit`, and the
-  * previous level's in a second one; the two swap at each level and are
-  * reused from tree to tree.
+/** Histogram subtraction for depth-wise growth, owned by [[LevelGrower]]
+  * (the standard hist-GBT trick, as in LightGBM and XGBoost's `hist`).
+  * Past the root, only the lighter child of each split accumulates its
+  * histogram; the sibling is derived as parent − child, so per level the
+  * rows of at most half the nodes are scanned and, on the distributed
+  * paths, only their histograms move. The level's histograms live in one
+  * buffer, node slot s at s × `unit`, and the previous level's in a
+  * second one; the two swap at each level and are reused from tree to
+  * tree.
   *
-  * A grower calls, per level:
+  * Per level:
   *   1. [[begin]]: per node slot, the index of its histogram among the
-  *      level's computed ones, or -1 where it is derived; the computed
-  *      slots of [[hist]] come back zeroed;
-  *   2. either accumulates the computed slots into [[hist]] and calls
-  *      [[derive]], or hands [[fill]] the computed histograms packed in
-  *      index order (a level job's sum, an allreduce);
-  *   3. searches [[hist]] and calls [[split]] for each accepted split in
-  *      slot order, whose two children are the next level's next two
-  *      slots.
+  *      level's computed ones, or -1 where it is derived;
+  *   2. [[fill]]: the computed histograms, packed in index order, go to
+  *      their slots, and the rest are derived;
+  *   3. the grower searches [[hist]] and calls [[split]] for each
+  *      accepted split in slot order, whose two children are the next
+  *      level's next two slots.
   *
   * A derived sibling is only right when parent and child accumulated the
   * same feature columns. colsample_bylevel < 1 draws a new set per level,
@@ -262,7 +260,6 @@ private[ml] final class LevelHistograms(unit: Int) {
       if (pairParent.isEmpty || pairLeft(s / 2) == (s % 2 == 0)) {
         computeOf(s) = computed
         computed += 1
-        java.util.Arrays.fill(cur, s * unit, (s + 1) * unit, 0.0)
       } else computeOf(s) = -1
       s += 1
     }
@@ -271,7 +268,7 @@ private[ml] final class LevelHistograms(unit: Int) {
 
   /** Derives each sibling that [[begin]] marked -1: parent − the computed
     * child, from the previous level's histograms. */
-  def derive(): Unit = {
+  private def derive(): Unit = {
     var i = 0
     while (i < pairParent.length) {
       val c = if (pairLeft(i)) 2 * i else 2 * i + 1
@@ -304,6 +301,229 @@ private[ml] final class LevelHistograms(unit: Int) {
     splitSlot += slot
     splitLeft += (hl <= hr)
   }
+}
+
+/** A tree's nodes in growth order, the one node table of both growers
+  * ([[LevelGrower]] and `Trainer`'s lossguide): per node its split, g/h
+  * sums, monotone weight bounds and interaction mask (null = all allowed). */
+private[ml] final class NodeTable(p: BoosterParams, m: Int) {
+  val feature = new ArrayBuffer[Int]
+  val binIdx = new ArrayBuffer[Int]
+  val threshold = new ArrayBuffer[Float]
+  val defaultLeft = new ArrayBuffer[Boolean]
+  val left = new ArrayBuffer[Int]
+  val right = new ArrayBuffer[Int]
+  val gSum = new ArrayBuffer[Double]
+  val hSum = new ArrayBuffer[Double]
+  val gain = new ArrayBuffer[Float]
+  val depth = new ArrayBuffer[Int]
+  val lo = new ArrayBuffer[Double]
+  val hi = new ArrayBuffer[Double]
+  val allowed = new ArrayBuffer[Array[Long]]
+  private val um = SplitFinder.Interactions.unionMasks(p.interactionConstraints, m)
+  add(0.0, 0.0, 0, Double.NegativeInfinity, Double.PositiveInfinity, null) // the root
+
+  def size: Int = feature.length
+
+  private def add(g: Double, h: Double, d: Int, wLo: Double, wHi: Double,
+      mask: Array[Long]): Int = {
+    feature += -1; binIdx += -1; threshold += 0f; defaultLeft += true
+    left += -1; right += -1; gSum += g; hSum += h; gain += 0f; depth += d
+    lo += wLo; hi += wHi; allowed += mask
+    size - 1
+  }
+
+  /** Records `sp` as the split of `node` and appends its two children. */
+  def split(node: Int, sp: SplitFinder.Split): Unit = {
+    feature(node) = sp.feature
+    binIdx(node) = sp.binIdx
+    threshold(node) = sp.threshold
+    defaultLeft(node) = sp.defaultLeft
+    gain(node) = sp.gain.toFloat
+    val (ll, lh, rl, rh) = SplitFinder.childBounds(sp, p, lo(node), hi(node))
+    val cm = if (um == null) null
+      else SplitFinder.Interactions.childMask(allowed(node), um, sp.feature)
+    left(node) = add(sp.gl, sp.hl, depth(node) + 1, ll, lh, cm)
+    right(node) = add(sp.gr, sp.hr, depth(node) + 1, rl, rh, cm)
+  }
+
+  /** The tree, with each leaf's eta-scaled weight clamped to its bounds. */
+  def toTree: Tree = {
+    val w = new Array[Float](size)
+    var i = 0
+    while (i < size) {
+      if (left(i) < 0)
+        w(i) = (p.eta * SplitFinder.clamp(
+          SplitFinder.leafWeightP(gSum(i), hSum(i), p), lo(i), hi(i))).toFloat
+      i += 1
+    }
+    new Tree(feature.toArray, threshold.toArray, defaultLeft.toArray,
+      left.toArray, right.toArray, w, gain.toArray, hSum.map(_.toFloat).toArray)
+  }
+}
+
+/** One level of a tree under growth as a histogram source sees it: the
+  * partial tree that rows are routed through, the level's node range
+  * [start, end), which of its nodes accumulate (`computeOf`, see
+  * [[LevelHistograms.begin]]) and over which features. Made by
+  * [[LevelGrower.beginLevel]]; `DistTrainer`'s level job ships it to the
+  * workers. */
+private[ml] final class TreeLevel(m: Int, feature: Array[Int], binIdx: Array[Int],
+    defaultLeft: Array[Boolean], left: Array[Int], right: Array[Int],
+    computeOf: Array[Int], features: Array[Int], start: Int, end: Int,
+    val histLen: Int) extends Serializable {
+
+  /** One pass over a partition's rows, the one all three paths run. Each
+    * row resumes from its node in `pos` (-1: not sampled this round) and
+    * steps down the splits appended since, so a row kept from the last
+    * level takes one step and a reset row walks from the root. The rows
+    * now in a computed node add their g/h (class column `cls` of `k`)
+    * into that node's histogram in `out`, packed in compute order; at
+    * level 0 `out(histLen)` and `out(histLen + 1)` also get the root's
+    * g and h sums. */
+  def accumulate(binned: Array[Byte], g: Array[Float], h: Array[Float], k: Int, cls: Int,
+      pos: Array[Int], out: Array[Double]): Unit = {
+    val unit = m * DistTrainer.MaxBins * 2
+    var i = 0
+    while (i < pos.length) {
+      var node = pos(i)
+      if (node >= 0) {
+        var depth = 0
+        while (left(node) >= 0 && depth < 64) {
+          val b = binned(i * m + feature(node)) & 0xff
+          val goLeft = if (b == BinCuts.MissingBin) defaultLeft(node) else b <= binIdx(node)
+          node = if (goLeft) left(node) else right(node)
+          depth += 1
+        }
+        pos(i) = node
+        if (node >= start && node < end) {
+          val gi = g(i * k + cls)
+          val hi = h(i * k + cls)
+          if (start == 0) { out(histLen) += gi; out(histLen + 1) += hi }
+          val slot = computeOf(node - start)
+          if (slot >= 0) {
+            val histBase = slot * unit
+            var fi = 0
+            while (fi < features.length) {
+              val f = features(fi)
+              val b = binned(i * m + f) & 0xff
+              if (b != BinCuts.MissingBin) {
+                val idx = histBase + (f * DistTrainer.MaxBins + b) * 2
+                out(idx) += gi
+                out(idx + 1) += hi
+              }
+              fi += 1
+            }
+          }
+        }
+      }
+      i += 1
+    }
+  }
+
+}
+
+private[ml] object TreeLevel {
+  /** Starts a tree's row positions: the root, or -1 outside the round's
+    * row subsample (`sampled`, null = every row). */
+  def resetPositions(pos: Array[Int], sampled: Array[Boolean]): Unit = {
+    var i = 0
+    while (i < pos.length) { pos(i) = if (sampled == null || sampled(i)) 0 else -1; i += 1 }
+  }
+}
+
+/** Depth-wise tree growth, the one grower of all three training paths;
+  * only the histogram source differs (a local pass in [[Trainer]], a
+  * level job in [[DistTrainer]], an allreduce in [[BarrierTrainer]]).
+  * The path owns the level loop:
+  * {{{
+  * grower.beginTree(features, round, cls)
+  * while (grower.beginLevel()) grower.endLevel(histogramsOf(grower.level))
+  * val tree = grower.tree
+  * }}}
+  * where `histogramsOf` sums [[TreeLevel.accumulate]] over every row.
+  * Per level the grower draws colsample_bylevel's features, picks the
+  * computed nodes ([[LevelHistograms]]), searches each node's split over
+  * its colsample_bynode subset, and appends the children; max_leaves
+  * (when > 0) caps the leaves, nodes past the budget stay leaves. Level 0
+  * always runs, as it brings the root's g/h sums: with max_depth = 0 it
+  * computes no histogram and the tree is the root leaf. */
+private[ml] final class LevelGrower(m: Int, cuts: BinCuts, p: BoosterParams) {
+  private val unit = m * DistTrainer.MaxBins * 2
+  private val levels = new LevelHistograms(unit)
+  private var nodes: NodeTable = _
+  private var features: Array[Int] = _
+  private var levelFeats: Array[Int] = _
+  private var round = 0
+  private var cls = 0
+  private var depth = 0
+  private var levelStart = 0 // nodes [levelStart, levelEnd) are the current level
+  private var levelEnd = 0
+  private var leaves = 0
+  private var current: TreeLevel = _
+
+  def beginTree(features: Array[Int], round: Int, cls: Int): Unit = {
+    nodes = new NodeTable(p, m)
+    this.features = features
+    this.round = round
+    this.cls = cls
+    depth = 0
+    levelStart = 0
+    levelEnd = 1
+    leaves = 1
+  }
+
+  /** Starts the next level, or returns false when the tree is grown. */
+  def beginLevel(): Boolean =
+    if (depth > 0 && (depth >= p.maxDepth || levelStart >= levelEnd)) false
+    else {
+      levelFeats = FeatureSampling.subsample(features, p.colsampleBylevel,
+        FeatureSampling.levelKey(p.seed, round, cls, depth))
+      val search = depth < p.maxDepth
+      val computeOf =
+        if (search) levels.begin(depth, levelEnd - levelStart, subtract = p.colsampleBylevel >= 1.0)
+        else Array(-1)
+      current = new TreeLevel(m, nodes.feature.toArray, nodes.binIdx.toArray,
+        nodes.defaultLeft.toArray, nodes.left.toArray, nodes.right.toArray, computeOf,
+        levelFeats, levelStart, levelEnd, if (search) levels.numComputed * unit else 0)
+      true
+    }
+
+  /** The level that [[beginLevel]] started. */
+  def level: TreeLevel = current
+
+  /** Ends the level with its histograms summed over every row, in
+    * [[TreeLevel.accumulate]]'s layout: splits each node it can and
+    * appends the children as the next level. */
+  def endLevel(sums: Array[Double]): Unit = {
+    if (depth == 0) {
+      nodes.gSum(0) = sums(current.histLen)
+      nodes.hSum(0) = sums(current.histLen + 1)
+    }
+    if (depth < p.maxDepth) {
+      levels.fill(sums)
+      var s = 0
+      while (s < levelEnd - levelStart) {
+        val node = levelStart + s
+        val nodeFeats = FeatureSampling.subsample(levelFeats, p.colsampleBynode,
+          FeatureSampling.nodeKey(p.seed, round, cls, node))
+        if (p.maxLeaves <= 0 || leaves < p.maxLeaves)
+          SplitFinder.findBest(levels.hist, s * unit, DistTrainer.MaxBins, cuts, nodeFeats,
+            nodes.gSum(node), nodes.hSum(node), p, nodes.lo(node), nodes.hi(node),
+            nodes.allowed(node)).foreach { sp =>
+            nodes.split(node, sp)
+            levels.split(s, sp.hl, sp.hr)
+            leaves += 1
+          }
+        s += 1
+      }
+    }
+    levelStart = levelEnd
+    levelEnd = nodes.size
+    depth += 1
+  }
+
+  def tree: Tree = nodes.toTree
 }
 
 /** Keyed (stateless) feature subsampling for colsample_bylevel /
@@ -350,55 +570,15 @@ object FeatureSampling {
 }
 
 /** Single-machine histogram GBT trainer — the kernel behind the reference's
-  * single-node path (reference `xgboost_core.py:479-513`): runs inside one
-  * task after `repartition(1)`, or on the driver over a collected matrix.
-  * The distributed paths ([[DistTrainer]], [[BarrierTrainer]]) reuse
-  * [[SplitFinder]], [[LevelHistograms]] and the same histogram layout,
-  * summing per-partition histograms instead.
+  * single-node path (reference `xgboost_core.py:479-513`): runs inside the
+  * one task of `FitSupport.trainSingleNode`, after `repartition(1)`. Its
+  * histogram source is one local pass per level over the task's rows
+  * ([[TreeLevel.accumulate]]); [[LevelGrower]] grows each tree, as on the
+  * distributed paths ([[DistTrainer]], [[BarrierTrainer]]). Lossguide
+  * growth is this path's alone.
   */
 object Trainer {
   import DistTrainer.{MaxBins, addTreeMargins, initMargins, sampleFeaturesSeeded}
-
-  /** Mutable per-tree growth state, depth-wise. */
-  private final class Growth {
-    val feature = new ArrayBuffer[Int]
-    val threshold = new ArrayBuffer[Float]
-    val defaultLeft = new ArrayBuffer[Boolean]
-    val left = new ArrayBuffer[Int]
-    val right = new ArrayBuffer[Int]
-    val gSum = new ArrayBuffer[Double]
-    val hSum = new ArrayBuffer[Double]
-    val depth = new ArrayBuffer[Int]
-    val gain = new ArrayBuffer[Float]
-    val lo = new ArrayBuffer[Double] // monotone weight bounds
-    val hi = new ArrayBuffer[Double]
-    val allowed = new ArrayBuffer[Array[Long]] // interaction masks (null = all)
-
-    def addNode(g: Double, h: Double, d: Int,
-        wLo: Double = Double.NegativeInfinity,
-        wHi: Double = Double.PositiveInfinity,
-        mask: Array[Long] = null): Int = {
-      feature += -1; threshold += 0f; defaultLeft += true
-      left += -1; right += -1; gSum += g; hSum += h; depth += d; gain += 0f
-      lo += wLo; hi += wHi; allowed += mask
-      feature.length - 1
-    }
-
-    def toTree(p: BoosterParams): Tree = {
-      val n = feature.length
-      val w = new Array[Float](n)
-      var i = 0
-      while (i < n) {
-        if (left(i) < 0)
-          w(i) = (p.eta * SplitFinder.clamp(
-            SplitFinder.leafWeightP(gSum(i), hSum(i), p), lo(i), hi(i))).toFloat
-        i += 1
-      }
-      new Tree(feature.toArray, threshold.toArray, defaultLeft.toArray,
-        left.toArray, right.toArray, w, gain.toArray,
-        hSum.map(_.toFloat).toArray)
-    }
-  }
 
   def train(trainM: TrainMatrix, evalM: Option[TrainMatrix], p0: BoosterParams,
       initTrees: Array[Tree] = Array.empty): BoosterModel = {
@@ -426,9 +606,9 @@ object Trainer {
 
     val g = new Array[Float](n * k)
     val h = new Array[Float](n * k)
-    val gk = new Array[Float](n)
-    val hk = new Array[Float](n)
-    val levels = new LevelHistograms(m * MaxBins * 2)
+    val grower = new LevelGrower(m, cuts, p)
+    val pos = new Array[Int](n)
+    var sums = Array.empty[Double] // a level's histograms, reused from level to level
     val trees = new ArrayBuffer[Tree]
     trees ++= initTrees
     val metric = p.evalMetric.getOrElse(obj.defaultMetric(p.numClass))
@@ -442,16 +622,22 @@ object Trainer {
       val sampled = DistTrainer.sampleMask(p, 0, round, n)
       var cls = 0
       while (cls < k) {
-        if (k == 1) { System.arraycopy(g, 0, gk, 0, n); System.arraycopy(h, 0, hk, 0, n) }
-        else {
-          var i = 0
-          while (i < n) { gk(i) = g(i * k + cls); hk(i) = h(i * k + cls); i += 1 }
-        }
         val features = sampleFeaturesSeeded(m, p.colsampleBytree, rng)
         val tree =
           if (p.growPolicy == "lossguide")
-            buildTreeLossGuide(binned, n, m, cuts, gk, hk, sampled, features, p, round, cls)
-          else buildTree(binned, n, m, cuts, gk, hk, sampled, features, p, round, cls, levels)
+            buildTreeLossGuide(binned, n, m, cuts, g, h, k, cls, sampled, features, p, round)
+          else {
+            grower.beginTree(features, round, cls)
+            TreeLevel.resetPositions(pos, sampled)
+            while (grower.beginLevel()) {
+              val len = grower.level.histLen + 2
+              if (sums.length < len) sums = new Array[Double](len)
+              else java.util.Arrays.fill(sums, 0, len, 0.0)
+              grower.level.accumulate(binned, g, h, k, cls, pos, sums)
+              grower.endLevel(sums)
+            }
+            grower.tree
+          }
         trees += tree
         addTreeMargins(trainM, tree, margins, k, cls, p.missing)
         evalM.zip(evalMargins).foreach { case (e, em) =>
@@ -480,122 +666,6 @@ object Trainer {
         Some(initTrees.length / k + bestIter) else None)
   }
 
-  /** Depth-wise growth, one level at a time. Per level, one pass over the
-    * rows accumulates the histograms of the nodes that `levels` computes
-    * (past the root, the lighter child of each split), `levels` derives
-    * their siblings by subtraction, every node's split is searched in
-    * place in the level buffer, and one more pass routes each row to its
-    * child. colsample_bylevel narrows the accumulated feature set per
-    * depth (and turns subtraction off, see [[LevelHistograms]]);
-    * colsample_bynode narrows each node's SEARCH set within it; max_leaves
-    * (when > 0) caps total leaves — nodes past the budget stay leaves. */
-  private def buildTree(
-      binned: Array[Byte], n: Int, m: Int, cuts: BinCuts,
-      g: Array[Float], h: Array[Float], sampled: Array[Boolean],
-      features: Array[Int], p: BoosterParams, round: Int, cls: Int,
-      levels: LevelHistograms): Tree = {
-
-    val growth = new Growth
-    val unit = m * MaxBins * 2
-    // the row's node; -1 = not sampled this round, -2 = settled in a leaf
-    val positions = new Array[Int](n)
-    var gRoot = 0.0
-    var hRoot = 0.0
-    var i = 0
-    while (i < n) {
-      if (sampled == null || sampled(i)) { positions(i) = 0; gRoot += g(i); hRoot += h(i) }
-      else positions(i) = -1
-      i += 1
-    }
-    growth.addNode(gRoot, hRoot, 0)
-    var leaves = 1
-    val um = SplitFinder.Interactions.unionMasks(p.interactionConstraints, m)
-
-    var depth = 0
-    var levelStart = 0 // nodes [levelStart, levelEnd) are the current level
-    var levelEnd = 1
-    while (depth < p.maxDepth && levelStart < levelEnd) {
-      val nActive = levelEnd - levelStart
-      val levelFeats = FeatureSampling.subsample(features, p.colsampleBylevel,
-        FeatureSampling.levelKey(p.seed, round, cls, depth))
-      val computeOf = levels.begin(depth, nActive, subtract = p.colsampleBylevel >= 1.0)
-      val hist = levels.hist
-      i = 0
-      while (i < n) {
-        val slot = positions(i) - levelStart
-        if (slot >= 0 && slot < nActive && computeOf(slot) >= 0) {
-          val rowBase = i * m
-          val histBase = slot * unit
-          val gi = g(i)
-          val hi = h(i)
-          var fi = 0
-          while (fi < levelFeats.length) {
-            val f = levelFeats(fi)
-            val b = binned(rowBase + f) & 0xff
-            if (b != BinCuts.MissingBin) {
-              val idx = histBase + (f * MaxBins + b) * 2
-              hist(idx) += gi
-              hist(idx + 1) += hi
-            }
-            fi += 1
-          }
-        }
-        i += 1
-      }
-      levels.derive()
-      // split decisions; per slot the split and its left child's id (the
-      // right one's is the next), which the routing pass reads unboxed
-      val splits = new Array[SplitFinder.Split](nActive)
-      val leftKid = new Array[Int](nActive)
-      var s = 0
-      while (s < nActive) {
-        val node = levelStart + s
-        val nodeFeats = FeatureSampling.subsample(levelFeats, p.colsampleBynode,
-          FeatureSampling.nodeKey(p.seed, round, cls, node))
-        if (p.maxLeaves <= 0 || leaves < p.maxLeaves)
-          SplitFinder.findBest(hist, s * unit, MaxBins, cuts, nodeFeats,
-            growth.gSum(node), growth.hSum(node), p,
-            growth.lo(node), growth.hi(node), growth.allowed(node)).foreach { sp =>
-            splits(s) = sp
-            growth.feature(node) = sp.feature
-            growth.threshold(node) = sp.threshold
-            growth.defaultLeft(node) = sp.defaultLeft
-            growth.gain(node) = sp.gain.toFloat
-            val (ll, lh, rl, rh) = SplitFinder.childBounds(sp, p, growth.lo(node), growth.hi(node))
-            val cm = if (um == null) null
-              else SplitFinder.Interactions.childMask(growth.allowed(node), um, sp.feature)
-            growth.left(node) = growth.addNode(sp.gl, sp.hl, depth + 1, ll, lh, cm)
-            growth.right(node) = growth.addNode(sp.gr, sp.hr, depth + 1, rl, rh, cm)
-            leftKid(s) = growth.left(node)
-            levels.split(s, sp.hl, sp.hr)
-            leaves += 1
-          }
-        s += 1
-      }
-      // route rows to children
-      i = 0
-      while (i < n) {
-        val slot = positions(i) - levelStart
-        if (slot >= 0 && slot < nActive) {
-          val sp = splits(slot)
-          if (sp == null) positions(i) = -2 // settled in a leaf
-          else {
-            val b = binned(i * m + sp.feature) & 0xff
-            val goLeft =
-              if (b == BinCuts.MissingBin) sp.defaultLeft
-              else b <= sp.binIdx
-            positions(i) = if (goLeft) leftKid(slot) else leftKid(slot) + 1
-          }
-        }
-        i += 1
-      }
-      levelStart = levelEnd
-      levelEnd = growth.feature.length
-      depth += 1
-    }
-    growth.toTree(p)
-  }
-
   /** Best-first (lossguide) growth: repeatedly expand the frontier leaf
     * with the highest split gain until max_leaves (or no positive gain
     * remains). Per-node histograms come from a scan over the node's rows;
@@ -606,23 +676,23 @@ object Trainer {
     * on the combination. */
   private def buildTreeLossGuide(
       binned: Array[Byte], n: Int, m: Int, cuts: BinCuts,
-      g: Array[Float], h: Array[Float], sampled: Array[Boolean],
-      features: Array[Int], p: BoosterParams, round: Int, cls: Int): Tree = {
+      g: Array[Float], h: Array[Float], k: Int, cls: Int, sampled: Array[Boolean],
+      features: Array[Int], p: BoosterParams, round: Int): Tree = {
 
-    val growth = new Growth
+    val nodes = new NodeTable(p, m)
     val positions = new Array[Int](n)
+    TreeLevel.resetPositions(positions, sampled)
     var gRoot = 0.0
     var hRoot = 0.0
     var i = 0
     while (i < n) {
-      if (sampled == null || sampled(i)) { positions(i) = 0; gRoot += g(i); hRoot += h(i) }
-      else positions(i) = -1
+      if (positions(i) == 0) { gRoot += g(i * k + cls); hRoot += h(i * k + cls) }
       i += 1
     }
-    growth.addNode(gRoot, hRoot, 0)
+    nodes.gSum(0) = gRoot
+    nodes.hSum(0) = hRoot
     val maxLeaves = if (p.maxLeaves > 0) p.maxLeaves else Int.MaxValue
     val depthCap = if (p.maxDepth > 0) p.maxDepth else 64
-    val um = SplitFinder.Interactions.unionMasks(p.interactionConstraints, m)
 
     def nodeHist(node: Int, feats: Array[Int]): Array[Double] = {
       val hist = new Array[Double](m * MaxBins * 2)
@@ -636,8 +706,8 @@ object Trainer {
             val b = binned(rowBase + f) & 0xff
             if (b != BinCuts.MissingBin) {
               val idx = (f * MaxBins + b) * 2
-              hist(idx) += g(r)
-              hist(idx + 1) += h(r)
+              hist(idx) += g(r * k + cls)
+              hist(idx + 1) += h(r * k + cls)
             }
             fi += 1
           }
@@ -648,14 +718,14 @@ object Trainer {
     }
 
     def candidate(node: Int): Option[(Double, Int, SplitFinder.Split)] = {
-      if (growth.depth(node) >= depthCap) return None
+      if (nodes.depth(node) >= depthCap) return None
       val levelFeats = FeatureSampling.subsample(features, p.colsampleBylevel,
-        FeatureSampling.levelKey(p.seed, round, cls, growth.depth(node)))
+        FeatureSampling.levelKey(p.seed, round, cls, nodes.depth(node)))
       val nodeFeats = FeatureSampling.subsample(levelFeats, p.colsampleBynode,
         FeatureSampling.nodeKey(p.seed, round, cls, node))
       SplitFinder.findBest(nodeHist(node, levelFeats), 0, MaxBins, cuts, nodeFeats,
-        growth.gSum(node), growth.hSum(node), p,
-        growth.lo(node), growth.hi(node), growth.allowed(node)).map(sp => (sp.gain, node, sp))
+        nodes.gSum(node), nodes.hSum(node), p,
+        nodes.lo(node), nodes.hi(node), nodes.allowed(node)).map(sp => (sp.gain, node, sp))
     }
 
     // highest gain expands first; lower node id breaks ties deterministically
@@ -665,18 +735,9 @@ object Trainer {
     var leaves = 1
     while (queue.nonEmpty && leaves < maxLeaves) {
       val (_, node, sp) = queue.dequeue()
-      growth.feature(node) = sp.feature
-      growth.threshold(node) = sp.threshold
-      growth.defaultLeft(node) = sp.defaultLeft
-      growth.gain(node) = sp.gain.toFloat
-      val childDepth = growth.depth(node) + 1
-      val (ll, lh, rl, rh) = SplitFinder.childBounds(sp, p, growth.lo(node), growth.hi(node))
-      val cm = if (um == null) null
-        else SplitFinder.Interactions.childMask(growth.allowed(node), um, sp.feature)
-      val l = growth.addNode(sp.gl, sp.hl, childDepth, ll, lh, cm)
-      val r = growth.addNode(sp.gr, sp.hr, childDepth, rl, rh, cm)
-      growth.left(node) = l
-      growth.right(node) = r
+      nodes.split(node, sp)
+      val l = nodes.left(node)
+      val r = nodes.right(node)
       i = 0
       while (i < n) {
         if (positions(i) == node) {
@@ -692,6 +753,6 @@ object Trainer {
         candidate(r).foreach(queue.enqueue(_))
       }
     }
-    growth.toTree(p)
+    nodes.toTree
   }
 }

@@ -11,8 +11,8 @@ import scala.collection.mutable
 
 /** The job shape of the DistTrainer path, its fallback when the level
   * histograms would overrun spark.driver.maxResultSize, the parity of
-  * its per-round eval pass with the barrier path's allreduce, and its
-  * parity with the single-node Trainer on one partition. */
+  * its per-round eval pass with the barrier path's allreduce, and the
+  * parity of all three training paths on one partition. */
 class DistTrainerSpec extends AnyFunSuite {
   lazy val spark = graft.SparkTestSession.spark
 
@@ -191,6 +191,24 @@ class DistTrainerSpec extends AnyFunSuite {
     }
   }
 
+  test("max_depth = 0: the single-node, DistTrainer and barrier paths fit the same finite " +
+    "one-leaf trees") {
+    val rng = new scala.util.Random(43)
+    val rows = Seq.fill(400)({
+      val f = Array.fill(3)(math.round(rng.nextDouble() * 4 * 1e4) / 1e4)
+      (Vectors.dense(f), f(0) * 2 + f(1) - f(2) * 0.5)
+    })
+    val df = spark.createDataFrame(rows).toDF("features", "label")
+    def fit(workers: Int, barrier: Boolean) = new XgboostRegressor().setNEstimators(3)
+      .setMaxDepth(0).setNumWorkers(workers).setUseBarrierMode(barrier).fit(df).booster.trees
+    val single = fit(1, barrier = false)
+    assert(single.length == 3 && single.forall(t => t.numNodes == 1 &&
+      !t.weight(0).isNaN && !t.weight(0).isInfinite && t.weight(0) != 0f),
+      s"one finite leaf per tree: ${single.map(_.weight.toSeq).toSeq}")
+    sameTrees("max_depth 0, single-node vs DistTrainer", single, fit(2, barrier = false))
+    sameTrees("max_depth 0, single-node vs barrier", single, fit(2, barrier = true))
+  }
+
   test("property: a single-node fit equals DistTrainer on one partition, with and without " +
     "histogram subtraction: K = 1-3, depth 1-6, missing values, weights, colsample_bylevel/" +
     "bynode, max_leaves, monotone constraints") {
@@ -241,6 +259,9 @@ class DistTrainerSpec extends AnyFunSuite {
       val dist = DistTrainer.train(df, hasW = c.weighted, hasV = false,
         hasM = false, bp, 1, forceRepartition = false).trees
       sameTrees(s"$c: single-node vs DistTrainer", single, dist)
+      val barrier = BarrierTrainer.train(df, hasW = c.weighted, hasV = false,
+        hasM = false, bp, 1, forceRepartition = false).trees
+      sameTrees(s"$c: single-node vs BarrierTrainer", single, barrier)
       if (!c.bylevel) {
         // colsample_bylevel just under 1 keeps every feature but turns
         // subtraction off: each sibling accumulated, not derived

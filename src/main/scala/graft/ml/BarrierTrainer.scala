@@ -35,26 +35,26 @@ object BarrierTrainer {
   import DistTrainer.{addTreeMargins, initMargins, sampleFeaturesSeeded}
 
   def train(projected: DataFrame, hasW: Boolean, hasV: Boolean, hasM: Boolean,
-      p0: BoosterParams, numWorkers: Int, forceRepartition: Boolean,
+      p0: BoosterParams, rule: ObjectiveRule, numWorkers: Int, forceRepartition: Boolean,
       useExt: Boolean = false, esp: Int = 5,
       initTrees: Array[Tree] = Array.empty): BoosterModel = {
-    val p = p0.resolved
     val sc = projected.sparkSession.sparkContext
     val input =
       if (forceRepartition || DistTrainer.needsRepartition(projected, numWorkers))
         projected.repartition(numWorkers)
       else projected
 
+    // distributed quantile sketch -> bin cuts, broadcast — the same
+    // sketch as DistTrainer so both distributed paths bin identically;
+    // it gathers the labels the objective is resolved from
+    val rowsRdd = input.rdd
+    val (sketches, labels) = QuantileCuts.sketch(rowsRdd, p0.missing, Some(rule))
+    val p = ObjectiveRule.orThrow(rule.params(p0, labels)).resolved
     val obj = Objective.fromName(p.objective)
     val k = obj.numGroups(p.numClass)
+    val cutsBc = sc.broadcast(QuantileCuts.cuts(sketches, BinCuts.cutBudget(p.maxBin)))
 
-    // distributed quantile sketch -> bin cuts, broadcast — the same
-    // sketch as DistTrainer so both distributed paths bin identically
-    val rowsRdd = input.rdd
-    val cuts = QuantileCuts.fromRdd(rowsRdd, p.missing, BinCuts.cutBudget(p.maxBin))
-    val cutsBc = sc.broadcast(cuts)
-
-    val jsons = rowsRdd.barrier().mapPartitions { it =>
+    val models = rowsRdd.barrier().mapPartitions { it =>
       val ctx = BarrierTaskContext.get()
       val (train, evalOpt) =
         if (useExt) ExternalStorage.buildMatrices(it, hasW, hasV, hasM, esp)
@@ -64,15 +64,15 @@ object BarrierTrainer {
       // then run over persistent TCP, like the Rabit ring. The allGather
       // waits for every task, each of which has built its matrix by then.
       val coll = Collective.bootstrap(ctx)
-      val json =
+      val model =
         try trainWorker(coll, ctx.partitionId(), train, evalOpt.orNull, cutsBc.value, k, p, obj, hasV, initTrees)
         finally coll.close()
       // only partition 0 yields (reference xgboost_core.py:423-425) —
       // every worker holds the identical model at this point
-      if (ctx.partitionId() == 0) Iterator.single(json) else Iterator.empty
+      if (ctx.partitionId() == 0) Iterator.single(model) else Iterator.empty
     }.collect()
-    require(jsons.nonEmpty, "barrier training yielded no model")
-    ModelJson.fromJson(jsons(0))
+    require(models.nonEmpty, "barrier training yielded no model")
+    models(0)
   }
 
   /** The full boosting loop, run identically on every worker; local data
@@ -81,7 +81,7 @@ object BarrierTrainer {
     * deadlocks otherwise — same constraint Rabit had). */
   private def trainWorker(coll: Collective, pid: Int, mat: TrainMatrix,
       eval: TrainMatrix, cuts: BinCuts, k: Int, p: BoosterParams,
-      obj: Objective, hasEval: Boolean, initTrees: Array[Tree]): String = {
+      obj: Objective, hasEval: Boolean, initTrees: Array[Tree]): BoosterModel = {
     val n = mat.numRows
     val m = cuts.numFeatures
     val binned = BinCuts.binMatrix(mat, cuts, p.missing)
@@ -148,11 +148,10 @@ object BarrierTrainer {
       round += 1
     }
 
-    val model = new BoosterModel(obj.name, p.numClass, m, baseMargin,
+    new BoosterModel(obj.name, p.numClass, m, baseMargin,
       trees.toArray, p.missing,
       if (hasEval) Some(bestScore) else None,
       // offset by the init booster's rounds — see DistTrainer's note
       if (hasEval && p.earlyStoppingRounds > 0) Some(initTrees.length / k + bestIter) else None)
-    ModelJson.toJson(model)
   }
 }

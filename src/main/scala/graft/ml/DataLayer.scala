@@ -107,3 +107,65 @@ object TrainMatrix {
       s"non-numeric value at position $i: $other")
   }
 }
+
+/** The statistics of a label column that a fit's objective is resolved
+  * from ([[ObjectiveRule]]), gathered in a pass that reads every row anyway
+  * (the single-node task's matrix build, the distributed sketch job) from
+  * the projected row's double label at position 1, before any cast to
+  * float. Null labels count as NaN, as [[TrainMatrix]] reads them.
+  *
+  * `distinct` (classifiers) also keeps the exact set of distinct labels:
+  * integer labels below [[LabelStats.ClassBits]] in a bitset, since a valid
+  * label set is exactly {0..hi}; any other value in a hash set. That set
+  * stays empty for valid labels, and holds every distinct value of a
+  * label column that is not a class index (a regression target given to
+  * a classifier), whose fit then fails. */
+private[ml] final class LabelStats(val distinct: Boolean) extends Serializable {
+  var rows = 0L
+  var nan = 0L // null or NaN labels
+  var lo = Double.PositiveInfinity // over the labels that are not NaN
+  var hi = Double.NegativeInfinity
+  var frac = 0.0 // max |label - round(label)|; NaN once a label is infinite
+  private val classes = new java.util.BitSet
+  private val others = scala.collection.mutable.HashSet.empty[Double]
+
+  def add(y: Double): Unit = {
+    rows += 1
+    if (y.isNaN) nan += 1
+    else {
+      if (y < lo) lo = y
+      if (y > hi) hi = y
+      val f = math.abs(y - math.rint(y))
+      if (f > frac || f.isNaN) frac = f
+      if (distinct) {
+        if (f == 0.0 && y >= 0 && y < LabelStats.ClassBits) classes.set(y.toInt)
+        else others += y
+      }
+    }
+  }
+
+  /** Passes `rows` through, adding each one's label. */
+  def observe(rows: Iterator[Row]): Iterator[Row] = rows.map { r =>
+    add(if (r.isNullAt(1)) Double.NaN else r.getDouble(1))
+    r
+  }
+
+  def merge(o: LabelStats): LabelStats = {
+    rows += o.rows
+    nan += o.nan
+    if (o.lo < lo) lo = o.lo
+    if (o.hi > hi) hi = o.hi
+    if (o.frac > frac || o.frac.isNaN) frac = o.frac
+    classes.or(o.classes)
+    others ++= o.others
+    this
+  }
+
+  /** Distinct labels, NaN counted once (Spark's countDistinct over the
+    * labels with nulls read as NaN). */
+  def numDistinct: Int = classes.cardinality + others.size + (if (nan > 0) 1 else 0)
+}
+
+private[ml] object LabelStats {
+  val ClassBits = 1 << 16
+}

@@ -97,10 +97,9 @@ object DistTrainer {
     }
 
   def train(projected: DataFrame, hasW: Boolean, hasV: Boolean, hasM: Boolean,
-      p0: BoosterParams, numWorkers: Int, forceRepartition: Boolean,
+      p0: BoosterParams, rule: ObjectiveRule, numWorkers: Int, forceRepartition: Boolean,
       useExt: Boolean = false, esp: Int = 5,
       initTrees: Array[Tree] = Array.empty): BoosterModel = {
-    val p = p0.resolved
     val spark = projected.sparkSession
     val sc = spark.sparkContext
     val input =
@@ -108,12 +107,14 @@ object DistTrainer {
         projected.repartition(numWorkers)
       else projected
 
+    // ---- distributed per-feature quantile sketch -> bin cuts; the same
+    // pass gathers the labels the objective is resolved from ----
+    val rowsRdd = input.rdd
+    val (sketches, labels) = QuantileCuts.sketch(rowsRdd, p0.missing, Some(rule))
+    val p = ObjectiveRule.orThrow(rule.params(p0, labels)).resolved
     val obj = Objective.fromName(p.objective)
     val k = obj.numGroups(p.numClass)
-
-    // ---- distributed per-feature quantile sketch -> bin cuts ----
-    val rowsRdd = input.rdd
-    val cuts = QuantileCuts.fromRdd(rowsRdd, p.missing, BinCuts.cutBudget(p.maxBin))
+    val cuts = QuantileCuts.cuts(sketches, BinCuts.cutBudget(p.maxBin))
     val numFeatures = cuts.numFeatures
     val cutsBc = sc.broadcast(cuts)
 

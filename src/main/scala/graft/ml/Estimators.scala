@@ -4,12 +4,12 @@ import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.ml.util._
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Shared fit plumbing: column projection, objective inference, the
-  * single-node train kernel, and the distributed dispatch — the Scala
+/** Shared fit plumbing: column projection, the single-node train kernel,
+  * and the distributed dispatch — the Scala
   * re-expression of the reference's `_fit` (reference
   * `sparkdl/xgboost/xgboost_core.py:435-518`, SURVEY §3.1–§3.2).
   */
@@ -62,55 +62,38 @@ private[ml] object FitSupport extends org.apache.spark.internal.Logging {
     (df.select(cols: _*), hasW, hasV, hasM)
   }
 
-  /** Objective inference + label validation in ONE aggregate job: the
-    * reference's countDistinct heuristic (xgboost_core.py:328-337) fused
-    * with the check that labels are integers in [0, numClass) — without
-    * it, labels like {0,1,5} silently train wrong gradients (softprob
-    * indexes the margin array by label) or crash metric evaluation. */
-  def inferClassifierObjective(est: XGBoostParams, projected: DataFrame): (String, Int) = {
-    val r = projected.agg(
-      countDistinct(col("label")).as("n"),
-      min(col("label")).as("lo"),
-      max(col("label")).as("hi"),
-      max(abs(col("label") - round(col("label")))).as("frac")).collect()(0)
-    val nDistinct = r.getLong(0).toInt
-    val lo = r.getDouble(1)
-    val hi = r.getDouble(2)
-    val frac = r.getDouble(3)
-    def validate(k: Int): Unit = require(frac == 0.0 && lo >= 0.0 && hi <= k - 1,
-      s"classifier labels must be integers in [0, $k); got range [$lo, $hi]" +
-        (if (frac != 0.0) " with non-integer values" else ""))
-    val declared = if (est.hasNonEmpty(est.objective)) Some(est.getOrDefault(est.objective)) else None
-    declared match {
-      case Some(o) if o.startsWith("binary") =>
-        validate(2); (o, 0)
-      case Some(o) if o.startsWith("multi") =>
-        val k = est.getOrDefault(est.numClass)
-        require(k >= 2, s"numClass must be set >= 2 for $o")
-        validate(k); (o, k)
-      case _ =>
-        if (nDistinct <= 2) { validate(2); ("binary:logistic", 0) }
-        else { validate(nDistinct); ("multi:softprob", nDistinct) }
-    }
+  /** Single-node path: one full shuffle to one partition, train inside the
+    * task, collect the model — `repartition(1).mapInPandas` + collect in
+    * the reference (xgboost_core.py:512-517). The task checks the labels
+    * as it builds its matrices and resolves the objective from them
+    * ([[ObjectiveRule]]), so a classifier fit runs no job of its own for
+    * its labels; bad labels come back as the message the driver throws.
+    * With external storage on, the partition spills to a local libsvm
+    * file and the matrix is rebuilt from disk (C5, reference
+    * data.py:51-92; note the reference's spill path drops base margins,
+    * and so does ours). */
+  def trainSingleNode(projected: DataFrame, hasW: Boolean, hasV: Boolean,
+      hasM: Boolean, bp: BoosterParams, rule: ObjectiveRule, useExt: Boolean, esp: Int,
+      initTrees: Array[Tree]): BoosterModel = {
+    val out = projected.repartition(1).rdd
+      .mapPartitions(new SingleNodeTask(hasW, hasV, hasM, bp, rule, useExt, esp, initTrees))
+      .collect()
+    require(out.nonEmpty, "training produced no model (empty input?)")
+    ObjectiveRule.orThrow(out(0))
   }
 
-  /** Single-node path: one full shuffle to one partition, train inside the
-    * task, collect the serialized model — `repartition(1).mapInPandas` +
-    * collect in the reference (xgboost_core.py:512-517). With external
-    * storage on, the partition spills to a local libsvm file and the
-    * matrix is rebuilt from disk (C5, reference data.py:51-92; note the
-    * reference's spill path drops base margins, and so does ours). */
-  def trainSingleNode(projected: DataFrame, hasW: Boolean, hasV: Boolean,
-      hasM: Boolean, bp: BoosterParams, useExt: Boolean, esp: Int,
-      initTrees: Array[Tree]): BoosterModel = {
-    val modelJson = projected.repartition(1).rdd.mapPartitions { it =>
+  /** The single-node training task. A named class rather than a closure,
+    * so `SparkContext.clean` skips it. */
+  private final class SingleNodeTask(hasW: Boolean, hasV: Boolean, hasM: Boolean,
+      bp: BoosterParams, rule: ObjectiveRule, useExt: Boolean, esp: Int, initTrees: Array[Tree])
+      extends (Iterator[Row] => Iterator[Either[String, BoosterModel]]) with Serializable {
+    def apply(rows: Iterator[Row]): Iterator[Either[String, BoosterModel]] = {
+      val labels = new LabelStats(rule.classifier)
       val (train, eval) =
-        if (useExt) ExternalStorage.buildMatrices(it, hasW, hasV, hasM, esp)
-        else TrainMatrix.fromRows(it, hasW, hasV, hasM)
-      Iterator(ModelJson.toJson(Trainer.train(train, eval, bp, initTrees)))
-    }.collect()
-    require(modelJson.nonEmpty, "training produced no model (empty input?)")
-    ModelJson.fromJson(modelJson(0))
+        if (useExt) ExternalStorage.buildMatrices(labels.observe(rows), hasW, hasV, hasM, esp)
+        else TrainMatrix.fromRows(labels.observe(rows), hasW, hasV, hasM)
+      Iterator(rule.params(bp, labels).map(Trainer.train(train, eval, _, initTrees)))
+    }
   }
 
   /** The reference's GPU validation (_validate_params,
@@ -141,47 +124,113 @@ private[ml] object FitSupport extends org.apache.spark.internal.Logging {
     warnOnCapacity(est, dataset)
     validateGpuSetup(est, dataset)
     val (projected, hasW, hasV, hasM) = projectTrain(est, dataset)
-    val (inferredObj, k) =
-      if (isClassifier) inferClassifierObjective(est, projected)
-      else (if (est.hasNonEmpty(est.objective)) est.getOrDefault(est.objective)
-            else "reg:squarederror", est.getOrDefault(est.numClass))
-    // arbitraryParams objective overrides (reference: arbitrary keys reach
-    // xgboost last); for a classifier it must agree with the label-derived
-    // family — silently training a different objective is the no-op trap
-    val obj = est.objectiveFromArbitrary match {
-      case Some(j) if isClassifier =>
-        require(Objective.fromName(j).numGroups(k) == Objective.fromName(inferredObj).numGroups(k),
-          s"arbitraryParams objective '$j' is incompatible with the " +
-            s"label-derived objective '$inferredObj' (numClass=$k)")
-        j
-      case Some(j) => Objective.fromName(j).name // validates the name
-      case None => inferredObj
-    }
-    val bp = est.boosterParams(obj, k)
+    val declared = if (est.hasNonEmpty(est.objective)) Some(est.getOrDefault(est.objective)) else None
+    val numClass = est.getOrDefault(est.numClass)
+    // warm start (reference xgb_model): continue boosting from the init
+    // booster's trees; nEstimators counts the ADDITIONAL rounds
+    val init =
+      if (est.hasNonEmpty(est.xgbModel)) Some(ModelJson.fromJson(est.getOrDefault(est.xgbModel)))
+      else None
+    val rule = ObjectiveRule(isClassifier, est.getOrDefault(est.labelCol), declared, numClass,
+      est.objectiveFromArbitrary, init.map(m => (m.objectiveName, m.numGroups)))
+    // objective and numClass are the rule's, resolved from the labels
+    val bp = est.boosterParams(declared.getOrElse("reg:squarederror"), numClass)
+    val initTrees = init.fold(Array.empty[Tree])(_.trees)
     val n = est.getOrDefault(est.numWorkers)
     val useExt = est.getOrDefault(est.useExternalStorage)
     val esp = est.getOrDefault(est.externalStoragePrecision)
-    // warm start (reference xgb_model): continue boosting from the init
-    // booster's trees; nEstimators counts the ADDITIONAL rounds
-    val initTrees: Array[Tree] =
-      if (est.hasNonEmpty(est.xgbModel)) {
-        val init = ModelJson.fromJson(est.getOrDefault(est.xgbModel))
-        require(Objective.fromName(init.objectiveName).name == Objective.fromName(obj).name,
-          s"xgbModel objective ${init.objectiveName} != $obj")
-        require(init.numGroups == Objective.fromName(obj).numGroups(k),
-          s"xgbModel group count ${init.numGroups} incompatible with numClass $k")
-        init.trees
-      } else Array.empty
     if (bp.growPolicy == "lossguide" && n > 1)
       logWarning("grow_policy=lossguide is single-node only in this build; " +
         "distributed training grows depthwise honoring the max_leaves cap")
-    if (n <= 1) trainSingleNode(projected, hasW, hasV, hasM, bp, useExt, esp, initTrees)
+    if (n <= 1) trainSingleNode(projected, hasW, hasV, hasM, bp, rule, useExt, esp, initTrees)
     else if (est.getOrDefault(est.useBarrierMode))
-      BarrierTrainer.train(projected, hasW, hasV, hasM, bp, n,
+      BarrierTrainer.train(projected, hasW, hasV, hasM, bp, rule, n,
         est.getOrDefault(est.forceRepartition), useExt, esp, initTrees)
-    else DistTrainer.train(projected, hasW, hasV, hasM, bp, n,
+    else DistTrainer.train(projected, hasW, hasV, hasM, bp, rule, n,
       est.getOrDefault(est.forceRepartition), useExt, esp, initTrees)
   }
+}
+
+/** How a fit's objective and class count follow from its labels: what the
+  * driver knows before it reads a label (the declared objective, numClass,
+  * the arbitraryParams objective, the warm-start booster's objective and
+  * group count), applied to the [[LabelStats]] of the pass that reads
+  * them. A classifier infers its objective with the reference's
+  * countDistinct heuristic (xgboost_core.py:328-337) and checks that its
+  * labels are integers in [0, numClass): without that, labels like
+  * {0,1,5} silently train wrong gradients (softprob indexes the margin
+  * array by label) or crash metric evaluation. Null and NaN labels fail
+  * that check; a regressor rejects them by name, as xgboost does. */
+private[ml] final case class ObjectiveRule(
+    classifier: Boolean,
+    labelCol: String,
+    declared: Option[String],
+    numClass: Int,
+    arbitrary: Option[String],
+    warmStart: Option[(String, Int)]) {
+
+  /** `bp` with the objective and numClass resolved from `labels`, or the
+    * message of the fit's rejection. */
+  def params(bp: BoosterParams, labels: LabelStats): Either[String, BoosterParams] =
+    try {
+      val (objective, k) = decide(labels)
+      Right(bp.copy(objective = objective, numClass = k))
+    } catch { case e: IllegalArgumentException => Left(e.getMessage) }
+
+  private def decide(s: LabelStats): (String, Int) = {
+    val (inferred, k) =
+      if (classifier) fromLabels(s)
+      else {
+        require(s.nan == 0, s"label column '$labelCol' holds ${s.nan} null or NaN values")
+        (declared.getOrElse("reg:squarederror"), numClass)
+      }
+    // arbitraryParams objective overrides (reference: arbitrary keys reach
+    // xgboost last); for a classifier it must agree with the label-derived
+    // family — silently training a different objective is the no-op trap
+    val obj = arbitrary match {
+      case Some(j) if classifier =>
+        require(Objective.fromName(j).numGroups(k) == Objective.fromName(inferred).numGroups(k),
+          s"arbitraryParams objective '$j' is incompatible with the " +
+            s"label-derived objective '$inferred' (numClass=$k)")
+        j
+      case Some(j) => Objective.fromName(j).name // validates the name
+      case None => inferred
+    }
+    warmStart.foreach { case (initObj, initGroups) =>
+      require(Objective.fromName(initObj).name == Objective.fromName(obj).name,
+        s"xgbModel objective $initObj != $obj")
+      require(initGroups == Objective.fromName(obj).numGroups(k),
+        s"xgbModel group count $initGroups incompatible with numClass $k")
+    }
+    (obj, k)
+  }
+
+  private def fromLabels(s: LabelStats): (String, Int) = {
+    // a NaN label makes the range's top and the fraction NaN, as in Spark's max
+    val lo = if (s.nan == s.rows && s.rows > 0) Double.NaN else s.lo
+    val hi = if (s.nan > 0) Double.NaN else s.hi
+    val frac = if (s.nan > 0) Double.NaN else s.frac
+    def validate(k: Int): Unit = require(frac == 0.0 && lo >= 0.0 && hi <= k - 1,
+      s"classifier labels must be integers in [0, $k); got range [$lo, $hi]" +
+        (if (frac != 0.0) " with non-integer values" else ""))
+    declared match {
+      case Some(o) if o.startsWith("binary") =>
+        validate(2); (o, 0)
+      case Some(o) if o.startsWith("multi") =>
+        require(numClass >= 2, s"numClass must be set >= 2 for $o")
+        validate(numClass); (o, numClass)
+      case _ =>
+        val nDistinct = s.numDistinct
+        if (nDistinct <= 2) { validate(2); ("binary:logistic", 0) }
+        else { validate(nDistinct); ("multi:softprob", nDistinct) }
+    }
+  }
+}
+
+private[ml] object ObjectiveRule {
+  /** Throws a rejection on the driver, as the fit's own exception. */
+  def orThrow[T](resolved: Either[String, T]): T =
+    resolved.fold(msg => throw new IllegalArgumentException(msg), identity)
 }
 
 // =========================================================================

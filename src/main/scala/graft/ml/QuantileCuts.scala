@@ -31,6 +31,12 @@ import org.apache.spark.sql.catalyst.util.QuantileSummaries.Stats
   * to level histograms) the tasks ship nothing, and a second pass merges
   * on executors with `treeReduce`, in finish order.
   *
+  * A distributed fit's sketch is also its label pass: each task gathers
+  * its partition's [[LabelStats]] beside the summaries, the results (or
+  * the `treeReduce` fallback) carry both, and the fit resolves its
+  * objective from the merged statistics ([[ObjectiveRule]]) before it
+  * builds its training state. No other job reads the labels first.
+  *
   * Memory: a task holds its partition's floats once (4 bytes per
   * non-missing value, e.g. 8.4 MB for 75k rows × 28 features, the size
   * class of the `TrainMatrix` the fit builds from the same partition);
@@ -49,41 +55,63 @@ import org.apache.spark.sql.catalyst.util.QuantileSummaries.Stats
 object QuantileCuts {
   val RelativeError = 0.001
 
-  def fromRdd(rows: RDD[Row], missing: Float, maxCuts: Int = BinCuts.MaxCuts): BinCuts = {
+  def fromRdd(rows: RDD[Row], missing: Float, maxCuts: Int = BinCuts.MaxCuts): BinCuts =
+    cuts(sketch(rows, missing, None)._1, maxCuts)
+
+  /** The cuts of merged summaries, at most `maxCuts` per feature. */
+  private[ml] def cuts(sketches: Array[QuantileSummaries], maxCuts: Int): BinCuts = {
     val budget = math.min(math.max(maxCuts, 1), BinCuts.MaxCuts)
-    new BinCuts(sketch(rows, missing).map(cutsOf(_, budget)))
+    new BinCuts(sketches.map(cutsOf(_, budget)))
   }
 
-  /** One merged summary per feature; an input without rows is an error. */
-  private[ml] def sketch(rows: RDD[Row], missing: Float): Array[QuantileSummaries] = {
+  /** One merged summary per feature, and the statistics of the labels
+    * (the projected row's position 1) when a fit's `labels` rule asks for
+    * them, empty otherwise. An input without rows is an error. */
+  private[ml] def sketch(rows: RDD[Row], missing: Float,
+      labels: Option[ObjectiveRule]): (Array[QuantileSummaries], LabelStats) = {
     val sc = rows.sparkContext
     val n = rows.getNumPartitions
-    val parts = new Array[Array[QuantileSummaries]](n)
-    sc.runJob(rows, new SketchJob(missing, n, DistTrainer.resultSizeLimit(sc)), 0 until n,
-      (pid: Int, s: Array[QuantileSummaries]) => parts(pid) = s)
-    val shipped = parts.filter(_ != null)
-    if (shipped.isEmpty) throw new IllegalArgumentException("empty training input")
-    if (shipped.exists(_.isEmpty)) // too large for the driver: merge on executors
-      rows.mapPartitions(it => Option(partitionSummaries(it, missing)).iterator)
-        .treeReduce(mergeAll)
-    else shipped.reduceLeft(mergeAll)
+    val parts = new Array[Sketch](n)
+    sc.runJob(rows, new SketchJob(missing, labels, n, DistTrainer.resultSizeLimit(sc)), 0 until n,
+      (pid: Int, s: Sketch) => parts(pid) = s)
+    val merged =
+      if (parts.contains(null)) // too large for the driver: merge on executors
+        rows.mapPartitions(it => Iterator(Sketch.of(it, missing, labels))).treeReduce(_ merge _)
+      else parts.reduceLeft(_ merge _)
+    if (merged.summaries == null) throw new IllegalArgumentException("empty training input")
+    (merged.summaries, merged.labels)
   }
 
-  private def mergeAll(a: Array[QuantileSummaries],
-      b: Array[QuantileSummaries]): Array[QuantileSummaries] =
-    a.zip(b).map { case (x, y) => x.merge(y) }
+  /** A partition's summaries (null without rows) and label statistics. */
+  private final class Sketch(val summaries: Array[QuantileSummaries], val labels: LabelStats)
+      extends Serializable {
+    def merge(o: Sketch): Sketch = new Sketch(
+      if (summaries == null) o.summaries
+      else if (o.summaries == null) summaries
+      else summaries.zip(o.summaries).map { case (x, y) => x.merge(y) },
+      labels.merge(o.labels))
+  }
 
-  /** A partition's summaries: null for a partition without rows, and no
-    * summaries at all when the job's N results would not fit the driver.
-    * A named class rather than a closure, so `SparkContext.clean` skips it. */
-  private final class SketchJob(missing: Float, numPartitions: Int, maxResultSize: Long)
-      extends ((TaskContext, Iterator[Row]) => Array[QuantileSummaries]) with Serializable {
-    def apply(ctx: TaskContext, rows: Iterator[Row]): Array[QuantileSummaries] = {
-      val s = partitionSummaries(rows, missing)
+  private object Sketch {
+    def of(rows: Iterator[Row], missing: Float, labels: Option[ObjectiveRule]): Sketch = {
+      val stats = new LabelStats(labels.exists(_.classifier))
+      new Sketch(partitionSummaries(if (labels.isEmpty) rows else stats.observe(rows), missing),
+        stats)
+    }
+  }
+
+  /** A partition's [[Sketch]], or null when the job's N results would not
+    * fit the driver. A named class rather than a closure, so
+    * `SparkContext.clean` skips it. */
+  private final class SketchJob(missing: Float, labels: Option[ObjectiveRule],
+      numPartitions: Int, maxResultSize: Long)
+      extends ((TaskContext, Iterator[Row]) => Sketch) with Serializable {
+    def apply(ctx: TaskContext, rows: Iterator[Row]): Sketch = {
+      val s = Sketch.of(rows, missing, labels)
       // a (value, g, Δ) entry serializes to about 30 bytes: 4 doubles' worth
-      if (s == null || DistTrainer.resultsFit(numPartitions, 4L * s.map(_.sampled.length).sum,
-          maxResultSize)) s
-      else Array.empty
+      val entries = if (s.summaries == null) 0L else s.summaries.map(_.sampled.length.toLong).sum
+      if (DistTrainer.resultsFit(numPartitions, 4L * entries + s.labels.numDistinct, maxResultSize)) s
+      else null
     }
   }
 

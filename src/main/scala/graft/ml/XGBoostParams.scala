@@ -181,8 +181,9 @@ trait XGBoostParams extends Params with org.apache.spark.internal.Logging {
   private[ml] def hasNonEmpty(p: Param[String]): Boolean =
     isDefined(p) && getOrDefault(p).nonEmpty
 
-  /** BoosterParams from the current param values; objective/numClass are
-    * resolved by the estimator (classifier infers from countDistinct).
+  /** BoosterParams from the current param values; a fit replaces
+    * objective/numClass with the ones its [[ObjectiveRule]] resolves from
+    * the labels.
     * Keys in [[arbitraryParams]] override the explicit params — the
     * analogue of the reference merging arbitraryParamsDict over the
     * generated params (reference xgboost_core.py:249-258); xgboost alias
@@ -271,8 +272,8 @@ trait XGBoostParams extends Params with org.apache.spark.internal.Logging {
         case ("objective", _) => // resolved separately (objectiveFromArbitrary) before fit
         case ("num_class", v) =>
           if (num(v).toInt != bp.numClass)
-            warnings += s"num_class=${num(v).toInt} ignored: this build derives " +
-              s"numClass=${bp.numClass} from the label column / explicit param"
+            warnings += s"num_class=${num(v).toInt} ignored: this build takes numClass " +
+              s"from the numClass param (${bp.numClass}) or a classifier's label column"
         case ("booster", JString("gbtree")) => // this build's only booster
         case (k, _) if ModelInvariantKeys(k) => // logging/threading knobs: no model effect
         case (k, v) if KnownUnimplementedKeys(k) =>

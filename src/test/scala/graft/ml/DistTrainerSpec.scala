@@ -162,7 +162,8 @@ class DistTrainerSpec extends AnyFunSuite {
     val single = est.fit(df).booster
     val (projected, hasW, hasV, hasM) = FitSupport.projectTrain(est, df)
     val dist = DistTrainer.train(projected, hasW, hasV, hasM,
-      est.boosterParams("reg:squarederror", 0), 1, forceRepartition = false)
+      est.boosterParams("reg:squarederror", 0),
+      ObjectiveRule(false, "label", None, 0, None, None), 1, forceRepartition = false)
     assert(single.trees.length == dist.trees.length)
     single.trees.zip(dist.trees).zipWithIndex.foreach { case ((s, d), t) =>
       assert(s.feature.toSeq == d.feature.toSeq && s.threshold.toSeq == d.threshold.toSeq,
@@ -256,11 +257,12 @@ class DistTrainerSpec extends AnyFunSuite {
       assert(cuts.cuts.map(_.toSeq).toSeq == sketched.cuts.map(_.toSeq).toSeq,
         s"$c: exact and sketched cuts differ, so the paths cannot agree")
       val single = Trainer.train(mat, None, bp).trees
+      val rule = ObjectiveRule(false, "label", Some(bp.objective), bp.numClass, None, None)
       val dist = DistTrainer.train(df, hasW = c.weighted, hasV = false,
-        hasM = false, bp, 1, forceRepartition = false).trees
+        hasM = false, bp, rule, 1, forceRepartition = false).trees
       sameTrees(s"$c: single-node vs DistTrainer", single, dist)
       val barrier = BarrierTrainer.train(df, hasW = c.weighted, hasV = false,
-        hasM = false, bp, 1, forceRepartition = false).trees
+        hasM = false, bp, rule, 1, forceRepartition = false).trees
       sameTrees(s"$c: single-node vs BarrierTrainer", single, barrier)
       if (!c.bylevel) {
         // colsample_bylevel just under 1 keeps every feature but turns

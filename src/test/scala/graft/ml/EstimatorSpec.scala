@@ -505,6 +505,41 @@ class EstimatorSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("labels must be integers"))
   }
 
+  // 200 rows, labels 0/1, one of them null (and one NaN when `nan`)
+  private def nullLabelDf(labelCol: String, nan: Boolean) = {
+    val rng = new scala.util.Random(13)
+    val rows = Seq.tabulate(200) { i =>
+      val y: java.lang.Double =
+        if (i == 17) null else if (nan && i == 101) Double.NaN else (i % 2).toDouble
+      Row(Vectors.dense(rng.nextDouble(), rng.nextDouble()), y)
+    }
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), StructType(Seq(
+      StructField("features", SQLDataTypes.VectorType), StructField(labelCol, DoubleType))))
+  }
+
+  test("classifier rejects a null label on every training path") {
+    val df = nullLabelDf("label", nan = false)
+    Seq((1, false), (2, false), (2, true)).foreach { case (workers, barrier) =>
+      val ex = intercept[IllegalArgumentException] {
+        new XgboostClassifier().setNEstimators(3).setNumWorkers(workers)
+          .setUseBarrierMode(barrier).fit(df)
+      }
+      assert(ex.getMessage.contains("labels must be integers"), s"$workers workers: ${ex.getMessage}")
+    }
+  }
+
+  test("regressor rejects null and NaN labels on every training path, naming the label column") {
+    val df = nullLabelDf("target", nan = true)
+    Seq((1, false), (2, false), (2, true)).foreach { case (workers, barrier) =>
+      val ex = intercept[IllegalArgumentException] {
+        new XgboostRegressor().setLabelCol("target").setNEstimators(3).setNumWorkers(workers)
+          .setUseBarrierMode(barrier).fit(df)
+      }
+      assert(ex.getMessage.contains("label column 'target' holds 2 null or NaN values"),
+        s"$workers workers: ${ex.getMessage}")
+    }
+  }
+
   test("xgb_model warm start continues boosting from the init booster " +
       "(reference local_test.py:502-517)") {
     val first = new XgboostRegressor().setNEstimators(5).fit(regTrainDf)

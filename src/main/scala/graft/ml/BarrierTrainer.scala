@@ -48,7 +48,7 @@ object BarrierTrainer {
     // sketch as DistTrainer so both distributed paths bin identically;
     // it gathers the labels the objective is resolved from
     val rowsRdd = input.rdd
-    val (sketches, labels) = QuantileCuts.sketch(rowsRdd, p0.missing, Some(rule))
+    val (sketches, labels) = QuantileCuts.sketch(rowsRdd, p0.missing, rule.countsClasses)
     val p = ObjectiveRule.orThrow(rule.params(p0, labels)).resolved
     val obj = Objective.fromName(p.objective)
     val k = obj.numGroups(p.numClass)

@@ -114,12 +114,13 @@ object TrainMatrix {
   * the projected row's double label at position 1, before any cast to
   * float. Null labels count as NaN, as [[TrainMatrix]] reads them.
   *
-  * `distinct` (classifiers) also keeps the exact set of distinct labels:
-  * integer labels below [[LabelStats.ClassBits]] in a bitset, since a valid
-  * label set is exactly {0..hi}; any other value in a hash set. That set
-  * stays empty for valid labels, and holds every distinct value of a
-  * label column that is not a class index (a regression target given to
-  * a classifier), whose fit then fails. */
+  * `distinct` (a classifier that infers its objective) also counts the
+  * distinct labels: integer labels below [[LabelStats.ClassBits]] in a
+  * bitset, since a valid label set is exactly {0..hi}; other values in a
+  * set of at most [[LabelStats.MaxOthers]]. Such a value fails validation
+  * unless more than `ClassBits` classes are present, so past that cap the
+  * count is a lower bound (`capped`), and a regression target given to a
+  * classifier costs bounded memory before its fit fails. */
 private[ml] final class LabelStats(val distinct: Boolean) extends Serializable {
   var rows = 0L
   var nan = 0L // null or NaN labels
@@ -128,6 +129,8 @@ private[ml] final class LabelStats(val distinct: Boolean) extends Serializable {
   var frac = 0.0 // max |label - round(label)|; NaN once a label is infinite
   private val classes = new java.util.BitSet
   private val others = scala.collection.mutable.HashSet.empty[Double]
+  /** Whether distinct labels were dropped at the cap of `others`. */
+  var capped = false
 
   def add(y: Double): Unit = {
     rows += 1
@@ -139,10 +142,14 @@ private[ml] final class LabelStats(val distinct: Boolean) extends Serializable {
       if (f > frac || f.isNaN) frac = f
       if (distinct) {
         if (f == 0.0 && y >= 0 && y < LabelStats.ClassBits) classes.set(y.toInt)
-        else others += y
+        else addOther(y)
       }
     }
   }
+
+  private def addOther(y: Double): Unit =
+    if (others.size < LabelStats.MaxOthers) others += y
+    else if (!others.contains(y)) capped = true
 
   /** Passes `rows` through, adding each one's label. */
   def observe(rows: Iterator[Row]): Iterator[Row] = rows.map { r =>
@@ -157,15 +164,17 @@ private[ml] final class LabelStats(val distinct: Boolean) extends Serializable {
     if (o.hi > hi) hi = o.hi
     if (o.frac > frac || o.frac.isNaN) frac = o.frac
     classes.or(o.classes)
-    others ++= o.others
+    o.others.foreach(addOther)
+    capped ||= o.capped
     this
   }
 
   /** Distinct labels, NaN counted once (Spark's countDistinct over the
-    * labels with nulls read as NaN). */
+    * labels with nulls read as NaN); a lower bound when `capped`. */
   def numDistinct: Int = classes.cardinality + others.size + (if (nan > 0) 1 else 0)
 }
 
 private[ml] object LabelStats {
   val ClassBits = 1 << 16
+  val MaxOthers = 1024
 }

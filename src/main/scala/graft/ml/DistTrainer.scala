@@ -110,7 +110,7 @@ object DistTrainer {
     // ---- distributed per-feature quantile sketch -> bin cuts; the same
     // pass gathers the labels the objective is resolved from ----
     val rowsRdd = input.rdd
-    val (sketches, labels) = QuantileCuts.sketch(rowsRdd, p0.missing, Some(rule))
+    val (sketches, labels) = QuantileCuts.sketch(rowsRdd, p0.missing, rule.countsClasses)
     val p = ObjectiveRule.orThrow(rule.params(p0, labels)).resolved
     val obj = Objective.fromName(p.objective)
     val k = obj.numGroups(p.numClass)

@@ -88,7 +88,7 @@ private[ml] object FitSupport extends org.apache.spark.internal.Logging {
       bp: BoosterParams, rule: ObjectiveRule, useExt: Boolean, esp: Int, initTrees: Array[Tree])
       extends (Iterator[Row] => Iterator[Either[String, BoosterModel]]) with Serializable {
     def apply(rows: Iterator[Row]): Iterator[Either[String, BoosterModel]] = {
-      val labels = new LabelStats(rule.classifier)
+      val labels = new LabelStats(rule.countsClasses)
       val (train, eval) =
         if (useExt) ExternalStorage.buildMatrices(labels.observe(rows), hasW, hasV, hasM, esp)
         else TrainMatrix.fromRows(labels.observe(rows), hasW, hasV, hasM)
@@ -133,6 +133,7 @@ private[ml] object FitSupport extends org.apache.spark.internal.Logging {
       else None
     val rule = ObjectiveRule(isClassifier, est.getOrDefault(est.labelCol), declared, numClass,
       est.objectiveFromArbitrary, init.map(m => (m.objectiveName, m.numGroups)))
+    rule.checkUnlabeled()
     // objective and numClass are the rule's, resolved from the labels
     val bp = est.boosterParams(declared.getOrElse("reg:squarederror"), numClass)
     val initTrees = init.fold(Array.empty[Tree])(_.trees)
@@ -142,12 +143,15 @@ private[ml] object FitSupport extends org.apache.spark.internal.Logging {
     if (bp.growPolicy == "lossguide" && n > 1)
       logWarning("grow_policy=lossguide is single-node only in this build; " +
         "distributed training grows depthwise honoring the max_leaves cap")
-    if (n <= 1) trainSingleNode(projected, hasW, hasV, hasM, bp, rule, useExt, esp, initTrees)
-    else if (est.getOrDefault(est.useBarrierMode))
-      BarrierTrainer.train(projected, hasW, hasV, hasM, bp, rule, n,
+    val model =
+      if (n <= 1) trainSingleNode(projected, hasW, hasV, hasM, bp, rule, useExt, esp, initTrees)
+      else if (est.getOrDefault(est.useBarrierMode))
+        BarrierTrainer.train(projected, hasW, hasV, hasM, bp, rule, n,
+          est.getOrDefault(est.forceRepartition), useExt, esp, initTrees)
+      else DistTrainer.train(projected, hasW, hasV, hasM, bp, rule, n,
         est.getOrDefault(est.forceRepartition), useExt, esp, initTrees)
-    else DistTrainer.train(projected, hasW, hasV, hasM, bp, rule, n,
-      est.getOrDefault(est.forceRepartition), useExt, esp, initTrees)
+    est.numClassIgnored(model.numClass).foreach(logWarning(_))
+    model
   }
 }
 
@@ -160,7 +164,8 @@ private[ml] object FitSupport extends org.apache.spark.internal.Logging {
   * labels are integers in [0, numClass): without that, labels like
   * {0,1,5} silently train wrong gradients (softprob indexes the margin
   * array by label) or crash metric evaluation. Null and NaN labels fail
-  * that check; a regressor rejects them by name, as xgboost does. */
+  * that check; a regressor rejects them, and infinite labels, by name, as
+  * xgboost does. */
 private[ml] final case class ObjectiveRule(
     classifier: Boolean,
     labelCol: String,
@@ -168,6 +173,18 @@ private[ml] final case class ObjectiveRule(
     numClass: Int,
     arbitrary: Option[String],
     warmStart: Option[(String, Int)]) {
+
+  /** Whether the labels' distinct count is read: only a classifier that
+    * infers its objective reads it. */
+  def countsClasses: Boolean =
+    classifier && !declared.exists(o => o.startsWith("binary") || o.startsWith("multi"))
+
+  /** The checks that read no label, run on the driver before any job: a
+    * regressor's objective and class count are known there. A
+    * classifier's follow its label checks, in the label aggregate's order
+    * that this rule replaced. */
+  def checkUnlabeled(): Unit =
+    if (!classifier) settle(declared.getOrElse("reg:squarederror"), numClass)
 
   /** `bp` with the objective and numClass resolved from `labels`, or the
     * message of the fit's rejection. */
@@ -177,13 +194,21 @@ private[ml] final case class ObjectiveRule(
       Right(bp.copy(objective = objective, numClass = k))
     } catch { case e: IllegalArgumentException => Left(e.getMessage) }
 
-  private def decide(s: LabelStats): (String, Int) = {
-    val (inferred, k) =
-      if (classifier) fromLabels(s)
-      else {
-        require(s.nan == 0, s"label column '$labelCol' holds ${s.nan} null or NaN values")
-        (declared.getOrElse("reg:squarederror"), numClass)
-      }
+  private def decide(s: LabelStats): (String, Int) =
+    if (classifier) {
+      val (inferred, k) = fromLabels(s)
+      settle(inferred, k)
+    } else {
+      val resolved = settle(declared.getOrElse("reg:squarederror"), numClass)
+      require(s.nan == 0, s"label column '$labelCol' holds ${s.nan} null or NaN values")
+      require(s.lo != Double.NegativeInfinity && s.hi != Double.PositiveInfinity,
+        s"label column '$labelCol' holds infinite values")
+      resolved
+    }
+
+  /** The objective and class count that the arbitraryParams objective and
+    * the warm-start booster leave of the `inferred` ones, or a rejection. */
+  private def settle(inferred: String, k: Int): (String, Int) = {
     // arbitraryParams objective overrides (reference: arbitrary keys reach
     // xgboost last); for a classifier it must agree with the label-derived
     // family — silently training a different objective is the no-op trap
@@ -210,9 +235,9 @@ private[ml] final case class ObjectiveRule(
     val lo = if (s.nan == s.rows && s.rows > 0) Double.NaN else s.lo
     val hi = if (s.nan > 0) Double.NaN else s.hi
     val frac = if (s.nan > 0) Double.NaN else s.frac
-    def validate(k: Int): Unit = require(frac == 0.0 && lo >= 0.0 && hi <= k - 1,
+    def validate(k: Int, note: String = ""): Unit = require(frac == 0.0 && lo >= 0.0 && hi <= k - 1,
       s"classifier labels must be integers in [0, $k); got range [$lo, $hi]" +
-        (if (frac != 0.0) " with non-integer values" else ""))
+        (if (frac != 0.0) " with non-integer values" else "") + note)
     declared match {
       case Some(o) if o.startsWith("binary") =>
         validate(2); (o, 0)
@@ -222,7 +247,11 @@ private[ml] final case class ObjectiveRule(
       case _ =>
         val nDistinct = s.numDistinct
         if (nDistinct <= 2) { validate(2); ("binary:logistic", 0) }
-        else { validate(nDistinct); ("multi:softprob", nDistinct) }
+        else {
+          // past the cap of LabelStats, the class count is a lower bound
+          validate(nDistinct, if (s.capped) s"; more than $nDistinct distinct labels" else "")
+          ("multi:softprob", nDistinct)
+        }
     }
   }
 }

@@ -56,7 +56,7 @@ object QuantileCuts {
   val RelativeError = 0.001
 
   def fromRdd(rows: RDD[Row], missing: Float, maxCuts: Int = BinCuts.MaxCuts): BinCuts =
-    cuts(sketch(rows, missing, None)._1, maxCuts)
+    cuts(sketch(rows, missing, distinct = false)._1, maxCuts)
 
   /** The cuts of merged summaries, at most `maxCuts` per feature. */
   private[ml] def cuts(sketches: Array[QuantileSummaries], maxCuts: Int): BinCuts = {
@@ -65,18 +65,18 @@ object QuantileCuts {
   }
 
   /** One merged summary per feature, and the statistics of the labels
-    * (the projected row's position 1) when a fit's `labels` rule asks for
-    * them, empty otherwise. An input without rows is an error. */
+    * (the projected row's position 1), which count the distinct labels
+    * when `distinct` is set. An input without rows is an error. */
   private[ml] def sketch(rows: RDD[Row], missing: Float,
-      labels: Option[ObjectiveRule]): (Array[QuantileSummaries], LabelStats) = {
+      distinct: Boolean): (Array[QuantileSummaries], LabelStats) = {
     val sc = rows.sparkContext
     val n = rows.getNumPartitions
     val parts = new Array[Sketch](n)
-    sc.runJob(rows, new SketchJob(missing, labels, n, DistTrainer.resultSizeLimit(sc)), 0 until n,
+    sc.runJob(rows, new SketchJob(missing, distinct, n, DistTrainer.resultSizeLimit(sc)), 0 until n,
       (pid: Int, s: Sketch) => parts(pid) = s)
     val merged =
       if (parts.contains(null)) // too large for the driver: merge on executors
-        rows.mapPartitions(it => Iterator(Sketch.of(it, missing, labels))).treeReduce(_ merge _)
+        rows.mapPartitions(it => Iterator(Sketch.of(it, missing, distinct))).treeReduce(_ merge _)
       else parts.reduceLeft(_ merge _)
     if (merged.summaries == null) throw new IllegalArgumentException("empty training input")
     (merged.summaries, merged.labels)
@@ -93,21 +93,20 @@ object QuantileCuts {
   }
 
   private object Sketch {
-    def of(rows: Iterator[Row], missing: Float, labels: Option[ObjectiveRule]): Sketch = {
-      val stats = new LabelStats(labels.exists(_.classifier))
-      new Sketch(partitionSummaries(if (labels.isEmpty) rows else stats.observe(rows), missing),
-        stats)
+    def of(rows: Iterator[Row], missing: Float, distinct: Boolean): Sketch = {
+      val labels = new LabelStats(distinct)
+      new Sketch(partitionSummaries(labels.observe(rows), missing), labels)
     }
   }
 
   /** A partition's [[Sketch]], or null when the job's N results would not
     * fit the driver. A named class rather than a closure, so
     * `SparkContext.clean` skips it. */
-  private final class SketchJob(missing: Float, labels: Option[ObjectiveRule],
+  private final class SketchJob(missing: Float, distinct: Boolean,
       numPartitions: Int, maxResultSize: Long)
       extends ((TaskContext, Iterator[Row]) => Sketch) with Serializable {
     def apply(ctx: TaskContext, rows: Iterator[Row]): Sketch = {
-      val s = Sketch.of(rows, missing, labels)
+      val s = Sketch.of(rows, missing, distinct)
       // a (value, g, Δ) entry serializes to about 30 bytes: 4 doubles' worth
       val entries = if (s.summaries == null) 0L else s.summaries.map(_.sampled.length.toLong).sum
       if (DistTrainer.resultsFit(numPartitions, 4L * entries + s.labels.numDistinct, maxResultSize)) s

@@ -270,10 +270,7 @@ trait XGBoostParams extends Params with org.apache.spark.internal.Logging {
         case ("eval_metric", JString(s)) => bp = bp.copy(evalMetric = Some(s))
         case ("tree_method", _) => // resolved separately (resolvedTreeMethod) for validation
         case ("objective", _) => // resolved separately (objectiveFromArbitrary) before fit
-        case ("num_class", v) =>
-          if (num(v).toInt != bp.numClass)
-            warnings += s"num_class=${num(v).toInt} ignored: this build takes numClass " +
-              s"from the numClass param (${bp.numClass}) or a classifier's label column"
+        case ("num_class", v) => num(v) // compared with the trained class count (numClassIgnored)
         case ("booster", JString("gbtree")) => // this build's only booster
         case (k, _) if ModelInvariantKeys(k) => // logging/threading knobs: no model effect
         case (k, v) if KnownUnimplementedKeys(k) =>
@@ -287,35 +284,41 @@ trait XGBoostParams extends Params with org.apache.spark.internal.Logging {
     (bp, warnings.toSeq)
   }
 
+  /** The fields of the arbitraryParams JSON object; none when it is unset
+    * or not an object (which [[boosterParams]] rejects). */
+  private def arbitraryFields: List[org.json4s.JField] = {
+    val json = getOrDefault(arbitraryParams)
+    if (json.nonEmpty && json.trim != "{}") {
+      org.json4s.jackson.JsonMethods.parse(json) match {
+        case org.json4s.JObject(fs) => fs
+        case _ => Nil
+      }
+    } else Nil
+  }
+
   /** objective from arbitraryParams JSON — in the reference, arbitrary
     * keys reach xgboost and OVERRIDE explicit params, so `{"objective":
     * "count:poisson"}` must change the trained model here too (it was
     * silently dropped before). None when absent. */
-  private[ml] def objectiveFromArbitrary: Option[String] = {
-    val json = getOrDefault(arbitraryParams)
-    if (json.nonEmpty && json.trim != "{}") {
-      import org.json4s._
-      org.json4s.jackson.JsonMethods.parse(json) match {
-        case JObject(fs) => fs.collectFirst { case ("objective", JString(s)) => s }
-        case _ => None
-      }
-    } else None
-  }
+  private[ml] def objectiveFromArbitrary: Option[String] =
+    arbitraryFields.collectFirst { case ("objective", org.json4s.JString(s)) => s }
+
+  /** The warning for an arbitraryParams num_class other than the class
+    * count a fit trained with, which this build takes from the numClass
+    * param or a classifier's labels, not from num_class. */
+  private[ml] def numClassIgnored(trained: Int): Option[String] =
+    arbitraryFields.collectFirst {
+      case ("num_class", org.json4s.JInt(k)) => k.toInt
+      case ("num_class", org.json4s.JDouble(k)) => k.toInt
+      case ("num_class", org.json4s.JDecimal(k)) => k.toInt
+    }.filter(_ != trained).map(k => s"num_class=$k ignored: this build takes numClass " +
+      s"from the numClass param or a classifier's label column, and trained with $trained")
 
   /** tree_method from arbitraryParams (the reference reads the
     * introspected param the same way) falling back to the explicit param;
     * None when unset. */
   private[ml] def resolvedTreeMethod: Option[String] = {
-    val fromJson = {
-      val json = getOrDefault(arbitraryParams)
-      if (json.nonEmpty && json.trim != "{}") {
-        import org.json4s._
-        org.json4s.jackson.JsonMethods.parse(json) match {
-          case JObject(fs) => fs.collectFirst { case ("tree_method", JString(s)) => s }
-          case _ => None
-        }
-      } else None
-    }
+    val fromJson = arbitraryFields.collectFirst { case ("tree_method", org.json4s.JString(s)) => s }
     val tm = fromJson.orElse(if (hasNonEmpty(treeMethod)) Some(getOrDefault(treeMethod)) else None)
     tm.foreach { t =>
       require(ValidTreeMethods(t),

@@ -370,6 +370,14 @@ class EstimatorSpec extends AnyFunSuite {
     assert(!warnings.exists(_.contains("gbtree")))
   }
 
+  test("an arbitraryParams num_class warns only when it differs from the trained class count") {
+    val est = new XgboostClassifier()
+    est.set(est.arbitraryParams, """{"num_class": 3}""")
+    assert(est.numClassIgnored(3).isEmpty)
+    assert(est.numClassIgnored(0).exists(_.contains("num_class=3 ignored")))
+    assert(new XgboostClassifier().numClassIgnored(3).isEmpty)
+  }
+
   test("GPU validation parity (reference _validate_params, xgboost_core.py:216-238): " +
       "useGpu + non-gpu_hist tree_method raises; useGpu without GPU resources raises") {
     val bad = new XgboostRegressor().setNEstimators(2).setUseGpu(true)
@@ -537,6 +545,20 @@ class EstimatorSpec extends AnyFunSuite {
       }
       assert(ex.getMessage.contains("label column 'target' holds 2 null or NaN values"),
         s"$workers workers: ${ex.getMessage}")
+    }
+  }
+
+  test("regressor rejects infinite labels on every training path, naming the label column") {
+    Seq(Double.PositiveInfinity, Double.NegativeInfinity).foreach { inf =>
+      val df = nullLabelDf("target", nan = false).na.fill(inf, Seq("target"))
+      Seq((1, false), (2, false), (2, true)).foreach { case (workers, barrier) =>
+        val ex = intercept[IllegalArgumentException] {
+          new XgboostRegressor().setLabelCol("target").setNEstimators(3).setNumWorkers(workers)
+            .setUseBarrierMode(barrier).fit(df)
+        }
+        assert(ex.getMessage.contains("label column 'target' holds infinite values"),
+          s"$inf, $workers workers: ${ex.getMessage}")
+      }
     }
   }
 

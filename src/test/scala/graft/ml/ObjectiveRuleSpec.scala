@@ -24,7 +24,8 @@ class ObjectiveRuleSpec extends AnyFunSuite {
   /** The countDistinct/min/max label aggregate and the decision that used
     * to run before every classifier fit, kept as the reference, over the
     * labels with nulls read as NaN (which it already rejected). A
-    * regressor keeps its objective and rejects null and NaN labels. */
+    * regressor keeps its objective, and after the checks that read no
+    * label rejects null, NaN and infinite labels. */
   private def reference(est: XGBoostParams, classifier: Boolean, df: DataFrame,
       warm: Option[BoosterModel]): Either[(Class[_], String), (String, Int)] = try {
     val labels = df.select(coalesce(col("label"), lit(Double.NaN)).as("label"))
@@ -55,8 +56,6 @@ class ObjectiveRuleSpec extends AnyFunSuite {
             else { validate(nDistinct); ("multi:softprob", nDistinct) }
         }
       } else {
-        val bad = labels.filter(isnan(col("label"))).count()
-        require(bad == 0, s"label column 'label' holds $bad null or NaN values")
         (if (est.hasNonEmpty(est.objective)) est.getOrDefault(est.objective)
          else "reg:squarederror", est.getOrDefault(est.numClass))
       }
@@ -74,6 +73,12 @@ class ObjectiveRuleSpec extends AnyFunSuite {
         s"xgbModel objective ${init.objectiveName} != $obj")
       require(init.numGroups == Objective.fromName(obj).numGroups(k),
         s"xgbModel group count ${init.numGroups} incompatible with numClass $k")
+    }
+    if (!classifier) {
+      val bad = labels.filter(isnan(col("label"))).count()
+      require(bad == 0, s"label column 'label' holds $bad null or NaN values")
+      require(labels.filter(abs(col("label")) === Double.PositiveInfinity).isEmpty,
+        "label column 'label' holds infinite values")
     }
     Right((Objective.fromName(obj).name, k))
   } catch {
@@ -159,6 +164,44 @@ class ObjectiveRuleSpec extends AnyFunSuite {
       }
     }
     assert(accepted >= 5 && rejected >= 5, s"$accepted accepted, $rejected rejected cases")
+  }
+
+  test("a regression target given to a classifier fails on all three paths, its distinct " +
+    "labels counted to a bound") {
+    val rng = new scala.util.Random(5)
+    val df = frame(Seq.fill(3000)(java.lang.Double.valueOf(rng.nextGaussian() * 100)),
+      _ => false, 3, 6)
+    Seq((1, false), (3, false), (3, true)).foreach { case (workers, barrier) =>
+      val ex = intercept[IllegalArgumentException](new XgboostClassifier().setNEstimators(1)
+        .setNumWorkers(workers).setUseBarrierMode(barrier).fit(df))
+      assert(ex.getMessage.contains(s"labels must be integers in [0, ${LabelStats.MaxOthers})") &&
+        ex.getMessage.endsWith(s"more than ${LabelStats.MaxOthers} distinct labels"),
+        s"$workers workers: ${ex.getMessage}")
+    }
+  }
+
+  test("LabelStats counts distinct labels exactly up to its cap, and a lower bound past it; " +
+    "only a classifier that infers its objective counts them") {
+    def stats(ys: Iterator[Double], parts: Int): LabelStats = {
+      val all = ys.toArray
+      all.indices.groupBy(_ % parts).values.map { is =>
+        val s = new LabelStats(true); is.foreach(i => s.add(all(i))); s
+      }.reduce(_ merge _)
+    }
+    val bp = new XgboostClassifier().boosterParams("binary:logistic", 0)
+    val infer = ObjectiveRule(true, "label", None, 0, None, None)
+    // {0..hi} with hi past the bitset: every class is counted
+    val hi = LabelStats.ClassBits + LabelStats.MaxOthers - 1
+    val wide = stats((0 to hi).iterator.map(_.toDouble), 3)
+    assert(!wide.capped && wide.numDistinct == hi + 1)
+    assert(infer.params(bp, wide).map(p => (p.objective, p.numClass)) ==
+      Right(("multi:softprob", hi + 1)))
+    val many = stats(Iterator.tabulate(20000)(i => i + 0.5), 4)
+    assert(many.capped && many.numDistinct == LabelStats.MaxOthers)
+    assert(infer.countsClasses)
+    assert(!infer.copy(declared = Some("binary:logistic")).countsClasses)
+    assert(!infer.copy(declared = Some("multi:softmax"), numClass = 3).countsClasses)
+    assert(!infer.copy(classifier = false).countsClasses)
   }
 
   test("a classifier fit starts as many jobs as the same fit as a regressor: " +

@@ -1,6 +1,7 @@
 package graft.ml
 
 import org.apache.spark.ml.linalg.Vectors
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.util.QuantileSummaries
 import org.scalacheck.Gen
@@ -60,6 +61,10 @@ class QuantileCutsSpec extends AnyFunSuite {
   private def rowsIn(values: Seq[Array[Double]], partitions: Int) =
     spark.sparkContext.parallelize(values.map(v => Row(Vectors.dense(v), 0.0)), partitions)
 
+  /** The merged per-feature summaries of `rows`. */
+  private def sketch(rows: RDD[Row], missing: Float): Array[QuantileSummaries] =
+    QuantileCuts.sketch(rows, missing, distinct = false)._1
+
   /** Bit-identical Float quantiles, and identical cuts, for every budget. */
   private def assertBatchedMatchesQuery(sketches: Array[QuantileSummaries], what: String): Unit =
     for ((sk, f) <- sketches.zipWithIndex if sk.count > 0; budget <- Budgets) {
@@ -91,7 +96,7 @@ class QuantileCutsSpec extends AnyFunSuite {
     Gen.listOfN(8, dataset).pureApply(Gen.Parameters.default, Seed(20261017L)).foreach {
       case (rows, parts, cols) =>
         val data = Seq.tabulate(rows)(i => cols.map(c => c(i)).toArray)
-        assertBatchedMatchesQuery(QuantileCuts.sketch(rowsIn(data, parts), Float.NaN, None)._1,
+        assertBatchedMatchesQuery(sketch(rowsIn(data, parts), Float.NaN),
           s"$rows rows in $parts partitions")
     }
   }
@@ -103,19 +108,19 @@ class QuantileCutsSpec extends AnyFunSuite {
         if (rng.nextDouble() < 0.9) 1.0 else rng.nextDouble(),
         if (i % 100 < 60) 0.0 else (i % 7).toDouble)
     }
-    assertBatchedMatchesQuery(QuantileCuts.sketch(rowsIn(data, 4), Float.NaN, None)._1, "tied columns")
+    assertBatchedMatchesQuery(sketch(rowsIn(data, 4), Float.NaN), "tied columns")
   }
 
   test("batched query == per-quantile query: single-row partitions") {
     val rng = new scala.util.Random(7)
     val data = Seq.fill(48)(Array(rng.nextGaussian(), (rng.nextInt(3)).toDouble))
-    assertBatchedMatchesQuery(QuantileCuts.sketch(rowsIn(data, 48), Float.NaN, None)._1, "single-row partitions")
+    assertBatchedMatchesQuery(sketch(rowsIn(data, 48), Float.NaN), "single-row partitions")
   }
 
   test("batched query == per-quantile query: the missing sentinel stays out") {
     val rng = new scala.util.Random(9)
     val data = Seq.tabulate(10000)(i => Array(if (i % 3 == 0) -999.0 else rng.nextDouble() * 10))
-    val sketches = QuantileCuts.sketch(rowsIn(data, 4), -999.0f, None)._1
+    val sketches = sketch(rowsIn(data, 4), -999.0f)
     assert(sketches(0).count == data.count(_(0) != -999.0))
     assertBatchedMatchesQuery(sketches, "missing sentinel")
   }
@@ -194,7 +199,7 @@ class QuantileCutsSpec extends AnyFunSuite {
     Gen.listOfN(8, shapedDataset).pureApply(Gen.Parameters.default, Seed(20261018L)).foreach { layout =>
       val data = layout.flatten
       val what = s"${data.length} rows in ${layout.map(_.length).mkString("[", ",", "]")}"
-      assertRankBound(QuantileCuts.sketch(laidOut(layout), Missing, None)._1, data, what)
+      assertRankBound(sketch(laidOut(layout), Missing), data, what)
       val r = new scala.util.Random(data.length)
         val cuts = QuantileCuts.fromRdd(laidOut(layout), Missing)
       val shuffled = QuantileCuts.fromRdd(laidOut(layout.map(r.shuffle(_))), Missing)
@@ -226,20 +231,20 @@ class QuantileCutsSpec extends AnyFunSuite {
       try { val s = body; (s, sc.statusTracker.getJobIdsForGroup(group).length) }
       finally sc.clearJobGroup()
     }
-    val (direct, directJobs) = jobsOf("sketch-direct")(QuantileCuts.sketch(laidOut(layout), Missing, None)._1)
+    val (direct, directJobs) = jobsOf("sketch-direct")(sketch(laidOut(layout), Missing))
     val limit = 4L << 20
     // every partition ships m summaries of 2000 / floor(2 eps 2000) + 1 entries
     assert(!DistTrainer.resultsFit(parts, 4L * m * (perPart / 4 + 1), limit),
       "the single-stage sketch job must overrun half the limit")
     val (merged, mergedJobs) = jobsOf("sketch-executor-merge")(org.apache.spark.LiveConf.withSetting(
-      sc, "spark.driver.maxResultSize", limit.toString)(QuantileCuts.sketch(laidOut(layout), Missing, None)._1))
+      sc, "spark.driver.maxResultSize", limit.toString)(sketch(laidOut(layout), Missing)))
     assert(directJobs == 1 && mergedJobs > 1, s"jobs: direct $directJobs, executor merge $mergedJobs")
     assertRankBound(direct, data, "driver merge")
     assertRankBound(merged, data, "executor merge")
   }
 
   test("an input without rows is an empty training input") {
-    val e = intercept[IllegalArgumentException](QuantileCuts.sketch(laidOut(Seq(Nil, Nil)), Missing, None)._1)
+    val e = intercept[IllegalArgumentException](sketch(laidOut(Seq(Nil, Nil)), Missing))
     assert(e.getMessage.contains("empty training input"))
   }
 }

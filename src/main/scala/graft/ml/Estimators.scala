@@ -235,9 +235,10 @@ private[ml] final case class ObjectiveRule(
     val lo = if (s.nan == s.rows && s.rows > 0) Double.NaN else s.lo
     val hi = if (s.nan > 0) Double.NaN else s.hi
     val frac = if (s.nan > 0) Double.NaN else s.frac
-    def validate(k: Int, note: String = ""): Unit = require(frac == 0.0 && lo >= 0.0 && hi <= k - 1,
-      s"classifier labels must be integers in [0, $k); got range [$lo, $hi]" +
-        (if (frac != 0.0) " with non-integer values" else "") + note)
+    def validate(k: Int, note: String = ""): Unit =
+      require(frac == 0.0 && lo >= 0.0 && hi <= k - 1,
+        s"classifier labels must be integers in [0, $k); got range [$lo, $hi]" +
+          (if (frac != 0.0) " with non-integer values" else "") + note)
     declared match {
       case Some(o) if o.startsWith("binary") =>
         validate(2); (o, 0)

@@ -11,8 +11,6 @@ package graft.ml
 final class BinCuts(val cuts: Array[Array[Float]]) extends Serializable {
   val numFeatures: Int = cuts.length
 
-  def numBins(f: Int): Int = cuts(f).length + 1
-
   def binOf(f: Int, v: Float): Int =
     if (v != v) BinCuts.MissingBin else BinCuts.upperBound(cuts(f), v)
 }
@@ -124,11 +122,6 @@ final class Tree(
       left: Array[Int], right: Array[Int], weight: Array[Float]) =
     this(feature, threshold, defaultLeft, left, right, weight,
       new Array[Float](feature.length), new Array[Float](feature.length))
-
-  def this(feature: Array[Int], threshold: Array[Float], defaultLeft: Array[Boolean],
-      left: Array[Int], right: Array[Int], weight: Array[Float], gain: Array[Float]) =
-    this(feature, threshold, defaultLeft, left, right, weight, gain,
-      new Array[Float](feature.length))
 
   def numNodes: Int = feature.length
 

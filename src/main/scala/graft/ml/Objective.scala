@@ -154,34 +154,116 @@ object Objective {
   }
 }
 
-/** Eval metrics over margins (weighted means, like xgboost). */
+/** Eval metrics over margins (weighted means, like xgboost), the one
+  * kernel of every training path: each worker computes its [[parts]],
+  * the parts are summed element-wise over workers, and [[finish]] turns
+  * the sums into the metric. */
 object EvalMetric {
 
-  /** AUC is computed over a fixed histogram of sigmoid scores so the
-    * single-node and both distributed paths aggregate IDENTICALLY (bin
-    * counts sum across workers); 4096 bins puts the binning error well
-    * below early-stopping resolution. */
+  /** AUC is computed over a fixed histogram of sigmoid scores so that the
+    * parts of every worker sum exactly; 4096 bins puts the binning error
+    * well below early-stopping resolution. */
   val AucBins = 4096
 
-  /** Adds per-bin (positive, negative) weight mass into acc (length
-    * 2·AucBins: [posW(bin0), negW(bin0), posW(bin1), …]). */
-  def aucAccum(margins: Array[Float], labels: Array[Float],
-      weights: Array[Float], acc: Array[Double]): Unit = {
+  /** The length of a metric's parts: AUC's score histogram (per bin, the
+    * positive then the negative weight) or the weighted numerator and the
+    * weight sum; then the row count. */
+  def size(metric: String): Int = (if (metric == "auc") 2 * AucBins else 2) + 1
+
+  /** The rows counted in summed parts. */
+  def rows(sums: Array[Double]): Double = sums(sums.length - 1)
+
+  /** One worker's parts of `metric` over its rows (`numClass` margins per
+    * row for the multiclass metrics). */
+  def parts(metric: String, margins: Array[Float], labels: Array[Float],
+      weights: Array[Float], numClass: Int): Array[Double] = {
+    val acc = new Array[Double](size(metric))
     val n = labels.length
+    if (n == 0) return acc
+    var num = 0.0
+    var den = 0.0
     var i = 0
-    while (i < n) {
-      val w = if (weights == null) 1.0 else weights(i)
-      val s = Objective.sigmoid(margins(i))
-      val b = math.min(AucBins - 1, math.max(0, (s * AucBins).toInt))
-      val y = labels(i)
-      require(y == 0.0f || y == 1.0f, s"auc requires binary 0/1 labels, got $y")
-      if (y == 1.0f) acc(2 * b) += w else acc(2 * b + 1) += w
-      i += 1
+    metric match {
+      case "rmse" =>
+        while (i < n) {
+          val w = if (weights == null) 1.0 else weights(i)
+          val d = margins(i) - labels(i)
+          num += w * d * d; den += w; i += 1
+        }
+      case "mae" =>
+        while (i < n) {
+          val w = if (weights == null) 1.0 else weights(i)
+          num += w * math.abs(margins(i) - labels(i)); den += w; i += 1
+        }
+      case "logloss" =>
+        while (i < n) {
+          val w = if (weights == null) 1.0 else weights(i)
+          val p = math.min(math.max(Objective.sigmoid(margins(i)), 1e-16), 1 - 1e-16)
+          num += -w * (labels(i) * math.log(p) + (1 - labels(i)) * math.log(1 - p))
+          den += w; i += 1
+        }
+      case "mlogloss" =>
+        while (i < n) {
+          val w = if (weights == null) 1.0 else weights(i)
+          val off = i * numClass
+          var mx = Double.MinValue
+          var c = 0
+          while (c < numClass) { if (margins(off + c) > mx) mx = margins(off + c); c += 1 }
+          var s = 0.0
+          c = 0
+          while (c < numClass) { s += math.exp(margins(off + c) - mx); c += 1 }
+          num += -w * (margins(off + labels(i).toInt) - mx - math.log(s))
+          den += w; i += 1
+        }
+      case "error" =>
+        while (i < n) {
+          val w = if (weights == null) 1.0 else weights(i)
+          if ((if (Objective.sigmoid(margins(i)) > 0.5) 1.0 else 0.0) != labels(i)) num += w
+          den += w; i += 1
+        }
+      case "merror" =>
+        while (i < n) {
+          val w = if (weights == null) 1.0 else weights(i)
+          val off = i * numClass
+          var best = 0
+          var c = 1
+          while (c < numClass) { if (margins(off + c) > margins(off + best)) best = c; c += 1 }
+          if (best != labels(i).toInt) num += w
+          den += w; i += 1
+        }
+      case "poisson-nloglik" =>
+        while (i < n) {
+          val w = if (weights == null) 1.0 else weights(i)
+          val mu = math.max(math.exp(margins(i)), 1e-16)
+          num += w * (mu - labels(i) * math.log(mu) +
+            org.apache.commons.math3.special.Gamma.logGamma(labels(i) + 1.0))
+          den += w; i += 1
+        }
+      case "auc" =>
+        while (i < n) {
+          val w = if (weights == null) 1.0 else weights(i)
+          val b = math.min(AucBins - 1, math.max(0, (Objective.sigmoid(margins(i)) * AucBins).toInt))
+          val y = labels(i)
+          require(y == 0.0f || y == 1.0f, s"auc requires binary 0/1 labels, got $y")
+          if (y == 1.0f) acc(2 * b) += w else acc(2 * b + 1) += w
+          i += 1
+        }
+      case other => throw new IllegalArgumentException(s"unsupported eval_metric: $other")
     }
+    if (metric != "auc") { acc(0) = num; acc(1) = den }
+    acc(acc.length - 1) = n
+    acc
   }
 
+  /** The metric from parts summed over every worker; NaN without rows. */
+  def finish(metric: String, sums: Array[Double]): Double =
+    if (metric == "auc") aucFinish(sums)
+    else if (sums(1) == 0) Double.NaN
+    else if (metric == "rmse") math.sqrt(sums(0) / sums(1))
+    else sums(0) / sums(1)
+
   /** AUC from the histogram: P(score⁺ > score⁻) + ½·P(tie). */
-  def aucFinish(acc: Array[Double]): Double = {
+  private def aucFinish(acc: Array[Double]): Double = {
     var totPos = 0.0
     var totNeg = 0.0
     var b = 0
@@ -198,85 +280,6 @@ object EvalMetric {
       b += 1
     }
     auc / (totPos * totNeg)
-  }
-  def compute(metric: String, margins: Array[Float], labels: Array[Float],
-      weights: Array[Float], numClass: Int): Double = {
-    val n = labels.length
-    if (n == 0) return Double.NaN
-    var sum = 0.0
-    var wsum = 0.0
-    var i = 0
-    metric match {
-      case "rmse" =>
-        while (i < n) {
-          val w = if (weights == null) 1.0 else weights(i)
-          val d = margins(i) - labels(i)
-          sum += w * d * d; wsum += w; i += 1
-        }
-        math.sqrt(sum / wsum)
-      case "mae" =>
-        while (i < n) {
-          val w = if (weights == null) 1.0 else weights(i)
-          sum += w * math.abs(margins(i) - labels(i)); wsum += w; i += 1
-        }
-        sum / wsum
-      case "logloss" =>
-        while (i < n) {
-          val w = if (weights == null) 1.0 else weights(i)
-          val p = math.min(math.max(Objective.sigmoid(margins(i)), 1e-16), 1 - 1e-16)
-          sum += -w * (labels(i) * math.log(p) + (1 - labels(i)) * math.log(1 - p))
-          wsum += w; i += 1
-        }
-        sum / wsum
-      case "mlogloss" =>
-        while (i < n) {
-          val w = if (weights == null) 1.0 else weights(i)
-          val off = i * numClass
-          var maxM = Double.MinValue
-          var k = 0
-          while (k < numClass) { if (margins(off + k) > maxM) maxM = margins(off + k); k += 1 }
-          var s = 0.0
-          k = 0
-          while (k < numClass) { s += math.exp(margins(off + k) - maxM); k += 1 }
-          val yi = labels(i).toInt
-          val logp = margins(off + yi) - maxM - math.log(s)
-          sum += -w * logp; wsum += w; i += 1
-        }
-        sum / wsum
-      case "error" =>
-        while (i < n) {
-          val w = if (weights == null) 1.0 else weights(i)
-          val pred = if (Objective.sigmoid(margins(i)) > 0.5) 1.0 else 0.0
-          if (pred != labels(i)) sum += w
-          wsum += w; i += 1
-        }
-        sum / wsum
-      case "auc" =>
-        val acc = new Array[Double](2 * AucBins)
-        aucAccum(margins, labels, weights, acc)
-        return aucFinish(acc)
-      case "poisson-nloglik" =>
-        while (i < n) {
-          val w = if (weights == null) 1.0 else weights(i)
-          val mu = math.max(math.exp(margins(i)), 1e-16)
-          sum += w * (mu - labels(i) * math.log(mu) +
-            org.apache.commons.math3.special.Gamma.logGamma(labels(i) + 1.0))
-          wsum += w; i += 1
-        }
-        sum / wsum
-      case "merror" =>
-        while (i < n) {
-          val w = if (weights == null) 1.0 else weights(i)
-          val off = i * numClass
-          var best = 0
-          var k = 1
-          while (k < numClass) { if (margins(off + k) > margins(off + best)) best = k; k += 1 }
-          if (best != labels(i).toInt) sum += w
-          wsum += w; i += 1
-        }
-        sum / wsum
-      case other => throw new IllegalArgumentException(s"unsupported eval_metric: $other")
-    }
   }
 
   /** Lower is better for every supported metric except AUC (xgboost

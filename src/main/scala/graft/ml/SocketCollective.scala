@@ -24,15 +24,16 @@ import org.apache.spark.BarrierTaskContext
   * reference's architecture.
   */
 private[ml] sealed trait Collective extends AutoCloseable {
-  /** Element-wise global sum; every worker returns the identical array. */
-  def allreduce(a: Array[Double]): Array[Double]
+  /** Element-wise global sum of `a(0 until len)`; every worker returns
+    * the identical array (at least `len` long). */
+  def allreduce(a: Array[Double], len: Int): Array[Double]
 }
 
 private[ml] object Collective {
 
   /** Single-worker no-op collective. */
   object Local extends Collective {
-    def allreduce(a: Array[Double]): Array[Double] = a
+    def allreduce(a: Array[Double], len: Int): Array[Double] = a
     def close(): Unit = ()
   }
 
@@ -70,10 +71,10 @@ private[ml] object Collective {
     }
   }
 
-  private def writeArr(out: DataOutputStream, a: Array[Double]): Unit = {
-    out.writeInt(a.length)
+  private def writeArr(out: DataOutputStream, a: Array[Double], len: Int): Unit = {
+    out.writeInt(len)
     var i = 0
-    while (i < a.length) { out.writeDouble(a(i)); i += 1 }
+    while (i < len) { out.writeDouble(a(i)); i += 1 }
     out.flush()
   }
 
@@ -94,10 +95,10 @@ private[ml] object Collective {
       extends Collective {
     private val ins = socks.map(s => new DataInputStream(new BufferedInputStream(s.getInputStream, 1 << 16)))
     private val outs = socks.map(s => new DataOutputStream(new BufferedOutputStream(s.getOutputStream, 1 << 16)))
-    def allreduce(a: Array[Double]): Array[Double] = {
-      val sum = a.clone()
+    def allreduce(a: Array[Double], len: Int): Array[Double] = {
+      val sum = java.util.Arrays.copyOf(a, len)
       ins.foreach(in => readInto(in, sum, add = true))
-      outs.foreach(out => writeArr(out, sum))
+      outs.foreach(out => writeArr(out, sum, len))
       sum
     }
     def close(): Unit = {
@@ -110,9 +111,9 @@ private[ml] object Collective {
   private final class Worker(sock: Socket) extends Collective {
     private val in = new DataInputStream(new BufferedInputStream(sock.getInputStream, 1 << 16))
     private val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream, 1 << 16))
-    def allreduce(a: Array[Double]): Array[Double] = {
-      writeArr(out, a)
-      val res = new Array[Double](a.length)
+    def allreduce(a: Array[Double], len: Int): Array[Double] = {
+      writeArr(out, a, len)
+      val res = new Array[Double](len)
       readInto(in, res, add = false)
       res
     }

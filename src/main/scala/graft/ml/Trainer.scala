@@ -433,9 +433,10 @@ private[ml] object TreeLevel {
 }
 
 /** Depth-wise tree growth, the one grower of all three training paths;
-  * only the histogram source differs (a local pass in [[Trainer]], a
-  * level job in [[DistTrainer]], an allreduce in [[BarrierTrainer]]).
-  * The path owns the level loop:
+  * only the histogram source differs: a local pass summed through a
+  * [[Collective]] in [[Trainer.boost]] (the identity on one node, the
+  * socket allreduce in each barrier task), a level job in
+  * [[DistTrainer]]. Each of the two runs the level loop:
   * {{{
   * grower.beginTree(features, round, cls)
   * while (grower.beginLevel()) grower.endLevel(histogramsOf(grower.level))
@@ -569,101 +570,264 @@ object FeatureSampling {
   }
 }
 
-/** Single-machine histogram GBT trainer — the kernel behind the reference's
-  * single-node path (reference `xgboost_core.py:479-513`): runs inside the
-  * one task of `FitSupport.trainSingleNode`, after `repartition(1)`. Its
-  * histogram source is one local pass per level over the task's rows
-  * ([[TreeLevel.accumulate]]); [[LevelGrower]] grows each tree, as on the
-  * distributed paths ([[DistTrainer]], [[BarrierTrainer]]). Lossguide
-  * growth is this path's alone.
-  */
-object Trainer {
-  import DistTrainer.{MaxBins, addTreeMargins, initMargins, sampleFeaturesSeeded}
+/** One worker's rows and their per-round state, the same on every
+  * training path: the single-node task's, each barrier task's and each
+  * cached partition of [[DistTrainer]]. Only the matrices and the binned
+  * rows are serialized; margins, gradients and row positions are
+  * @transient caches, rebuilt deterministically (a replay of the tree
+  * prefix) after a deserialization or a recompute. */
+private[ml] final class PartState(
+    val train: TrainMatrix,
+    val eval: TrainMatrix, // null when absent
+    val binned: Array[Byte]) extends Serializable {
+  @transient private var margins: Array[Float] = _
+  @transient private var evalMargins: Array[Float] = _
+  @transient private var applied = 0 // trees already folded into margins
+  @transient private var gradRound = -1
+  @transient var g: Array[Float] = _
+  @transient var h: Array[Float] = _
+  // row -> its node in the tree UNDER GROWTH (one per (round, cls)): each
+  // level advances a row by the one new step instead of re-routing it from
+  // the root. The partial tree only appends nodes, so resuming from the
+  // stored node reaches the same leaf a root walk would; -1 marks rows
+  // outside the round's subsample.
+  @transient private var pos: Array[Int] = _
+  @transient private var posRound = -1
+  @transient private var posCls = -1
 
-  def train(trainM: TrainMatrix, evalM: Option[TrainMatrix], p0: BoosterParams,
-      initTrees: Array[Tree] = Array.empty): BoosterModel = {
-    val p = p0.resolved
-    require(trainM.numRows > 0, "cannot train on an empty partition")
-    val obj = Objective.fromName(p.objective)
+  /** Folds the trees of `prefix` not yet applied into the margins; trees
+    * are round-major, so tree i adds to class column i % k. */
+  def replay(prefix: collection.IndexedSeq[Tree], p: BoosterParams, obj: Objective): Unit = {
     val k = obj.numGroups(p.numClass)
-    val n = trainM.numRows
-    val m = trainM.numCols
-    val cuts = BinCuts.fromMatrix(trainM, p.missing, BinCuts.cutBudget(p.maxBin))
-    val binned = BinCuts.binMatrix(trainM, cuts, p.missing)
-    val rng = new java.util.Random(p.seed)
-    val weights = DistTrainer.effectiveWeights(trainM, p)
-    val baseMargin = obj.baseMargin(p.baseScore)
-    val margins = initMargins(trainM, baseMargin, k)
-    val evalMargins = evalM.map(e => initMargins(e, baseMargin, k))
-
-    // warm start: fold the init booster's trees into the margins and keep
-    // them at the head of the ensemble (reference xgb_model semantics —
-    // nEstimators more rounds are added on top)
-    initTrees.zipWithIndex.foreach { case (t, i) =>
-      addTreeMargins(trainM, t, margins, k, i % k, p.missing)
-      evalM.zip(evalMargins).foreach { case (e, em) => addTreeMargins(e, t, em, k, i % k, p.missing) }
+    if (margins == null) {
+      val base = obj.baseMargin(p.baseScore)
+      margins = Trainer.initMargins(train, base, k)
+      evalMargins = if (eval == null) null else Trainer.initMargins(eval, base, k)
+      applied = 0
+      gradRound = -1
     }
-
-    val g = new Array[Float](n * k)
-    val h = new Array[Float](n * k)
-    val grower = new LevelGrower(m, cuts, p)
-    val pos = new Array[Int](n)
-    var sums = Array.empty[Double] // a level's histograms, reused from level to level
-    val trees = new ArrayBuffer[Tree]
-    trees ++= initTrees
-    val metric = p.evalMetric.getOrElse(obj.defaultMetric(p.numClass))
-    var bestScore = if (EvalMetric.lowerIsBetter(metric)) Double.MaxValue else Double.MinValue
-    var bestIter = -1
-    var round = 0
-    var stop = false
-
-    while (round < p.numRounds && !stop) {
-      obj.gradHess(margins, trainM.labels, weights, k, g, h)
-      val sampled = DistTrainer.sampleMask(p, 0, round, n)
-      var cls = 0
-      while (cls < k) {
-        val features = sampleFeaturesSeeded(m, p.colsampleBytree, rng)
-        val tree =
-          if (p.growPolicy == "lossguide")
-            buildTreeLossGuide(binned, n, m, cuts, g, h, k, cls, sampled, features, p, round)
-          else {
-            grower.beginTree(features, round, cls)
-            TreeLevel.resetPositions(pos, sampled)
-            while (grower.beginLevel()) {
-              val len = grower.level.histLen + 2
-              if (sums.length < len) sums = new Array[Double](len)
-              else java.util.Arrays.fill(sums, 0, len, 0.0)
-              grower.level.accumulate(binned, g, h, k, cls, pos, sums)
-              grower.endLevel(sums)
-            }
-            grower.tree
-          }
-        trees += tree
-        addTreeMargins(trainM, tree, margins, k, cls, p.missing)
-        evalM.zip(evalMargins).foreach { case (e, em) =>
-          addTreeMargins(e, tree, em, k, cls, p.missing)
-        }
-        cls += 1
-      }
-      evalM.zip(evalMargins).foreach { case (e, em) =>
-        val s = EvalMetric.compute(metric, em, e.labels, e.weights, math.max(k, 2))
-        val improved = if (EvalMetric.lowerIsBetter(metric)) s < bestScore else s > bestScore
-        if (improved) { bestScore = s; bestIter = round }
-        else if (p.earlyStoppingRounds > 0 && round - bestIter >= p.earlyStoppingRounds)
-          stop = true
-      }
-      round += 1
+    while (applied < prefix.length) {
+      val t = prefix(applied)
+      Trainer.addTreeMargins(train, t, margins, k, applied % k, p.missing)
+      if (eval != null) Trainer.addTreeMargins(eval, t, evalMargins, k, applied % k, p.missing)
+      applied += 1
     }
+  }
 
-    new BoosterModel(obj.name, p.numClass, m, baseMargin,
+  /** Sets `g` and `h` to the round's gradients under the round-start tree
+    * `prefix`, once per round: xgboost computes grad/hess once for all K
+    * class trees of a round. */
+  def gradients(prefix: collection.IndexedSeq[Tree], round: Int, p: BoosterParams,
+      obj: Objective): Unit = {
+    replay(prefix, p, obj)
+    if (g == null || gradRound != round) {
+      val k = obj.numGroups(p.numClass)
+      if (g == null) { g = new Array[Float](train.numRows * k); h = new Array[Float](g.length) }
+      if (train.numRows > 0)
+        obj.gradHess(margins, train.labels, Trainer.effectiveWeights(train, p), k, g, h)
+      gradRound = round
+    }
+  }
+
+  /** The rows' nodes in the tree of (`round`, `cls`), reset to the root (or
+    * -1 outside the round's row subsample) when that tree starts. */
+  def positions(pid: Int, round: Int, cls: Int, p: BoosterParams): Array[Int] = {
+    if (pos == null || posRound != round || posCls != cls) {
+      if (pos == null) pos = new Array[Int](train.numRows)
+      TreeLevel.resetPositions(pos, DistTrainer.sampleMask(p, pid, round, train.numRows))
+      posRound = round
+      posCls = cls
+    }
+    pos
+  }
+
+  /** This worker's [[EvalMetric.parts]] under the margins [[replay]] left. */
+  def evalParts(metric: String, p: BoosterParams, obj: Objective): Array[Double] =
+    if (eval == null) new Array[Double](EvalMetric.size(metric))
+    else EvalMetric.parts(metric, evalMargins, eval.labels, eval.weights,
+      math.max(obj.numGroups(p.numClass), 2))
+}
+
+/** The round state of a fit, shared by every training path: the
+  * colsample_bytree draw, the ensemble (warm-start trees at its head, then
+  * K trees per round), early stopping on the eval score and the model. */
+private[ml] final class Rounds(p: BoosterParams, obj: Objective, initTrees: Array[Tree]) {
+  val k: Int = obj.numGroups(p.numClass)
+  val metric: String = p.evalMetric.getOrElse(obj.defaultMetric(p.numClass))
+  val trees = new ArrayBuffer[Tree] ++= initTrees
+  // one sequential draw per tree, the same on every worker of a fit
+  private val rng = new java.util.Random(p.seed)
+  private val lower = EvalMetric.lowerIsBetter(metric)
+  private var bestScore = if (lower) Double.MaxValue else Double.MinValue
+  private var bestIter = -1
+  private var evaluated = false
+  private var stop = false
+  private var current = 0
+
+  def round: Int = current
+  def running: Boolean = current < p.numRounds && !stop
+
+  /** The next tree's colsample_bytree features out of `m`. */
+  def features(m: Int): Array[Int] = Trainer.sampleFeaturesSeeded(m, p.colsampleBytree, rng)
+
+  /** Ends the round with its eval parts summed over every worker
+    * ([[EvalMetric.parts]]), or null when the fit has no eval pass. A
+    * validation set without rows counts as none. */
+  def endRound(evalSums: Array[Double]): Unit = {
+    if (evalSums != null && EvalMetric.rows(evalSums) > 0) {
+      evaluated = true
+      val s = EvalMetric.finish(metric, evalSums)
+      val improved = if (lower) s < bestScore else s > bestScore
+      if (improved) { bestScore = s; bestIter = current }
+      else if (p.earlyStoppingRounds > 0 && current - bestIter >= p.earlyStoppingRounds)
+        stop = true
+    }
+    current += 1
+  }
+
+  def model(numFeatures: Int): BoosterModel =
+    new BoosterModel(obj.name, p.numClass, numFeatures, obj.baseMargin(p.baseScore),
       trees.toArray, p.missing,
-      if (evalM.isDefined) Some(bestScore) else None,
+      if (evaluated) Some(bestScore) else None,
       // best_iteration is recorded only when early stopping is enabled —
       // predict then defaults to the best rounds (xgboost sklearn
       // semantics); without early stopping all rounds score. The offset
       // counts warm-start rounds, as xgboost does for xgb_model.
-      if (evalM.isDefined && p.earlyStoppingRounds > 0)
-        Some(initTrees.length / k + bestIter) else None)
+      if (evaluated && p.earlyStoppingRounds > 0) Some(initTrees.length / k + bestIter) else None)
+}
+
+/** The boosting loop of every worker — the reference runs the same
+  * `xgboost.train` on its single node (`xgboost_core.py:479-513`) and in
+  * each barrier task (`:379-430`), and only the communicator differs. So
+  * does [[boost]]'s: [[Collective.Local]] on one node, the socket
+  * collective in a barrier stage ([[BarrierTrainer]]). Per round it
+  * computes the gradients from the round-start margins, grows K trees
+  * with [[LevelGrower]] over the allreduced level histograms, folds them
+  * into the margins and allreduces the eval parts. [[DistTrainer]] drives
+  * the same [[Rounds]] from the driver with a level job per level.
+  * Lossguide growth is the single-node path's alone.
+  */
+object Trainer {
+  import DistTrainer.MaxBins
+
+  /** The single-node fit: exact cuts, no communication. Runs inside the one
+    * task of `FitSupport.trainSingleNode`, after `repartition(1)`. */
+  def train(trainM: TrainMatrix, evalM: Option[TrainMatrix], p0: BoosterParams,
+      initTrees: Array[Tree] = Array.empty): BoosterModel = {
+    val p = p0.resolved
+    require(trainM.numRows > 0, "cannot train on an empty partition")
+    val cuts = BinCuts.fromMatrix(trainM, p.missing, BinCuts.cutBudget(p.maxBin))
+    boost(Collective.Local, 0,
+      new PartState(trainM, evalM.orNull, BinCuts.binMatrix(trainM, cuts, p.missing)),
+      cuts, p, initTrees)
+  }
+
+  /** Runs every round on partition `pid`'s rows, summing through `coll`.
+    * Every worker grows the same splits from the same global sums, so the
+    * workers' collective calls stay aligned; a worker without rows still
+    * joins each of them (a barrier stage deadlocks otherwise, the
+    * constraint Rabit had). */
+  private[ml] def boost(coll: Collective, pid: Int, part: PartState, cuts: BinCuts,
+      p: BoosterParams, initTrees: Array[Tree]): BoosterModel = {
+    val obj = Objective.fromName(p.objective)
+    val r = new Rounds(p, obj, initTrees)
+    val n = part.train.numRows
+    val m = cuts.numFeatures
+    val grower = new LevelGrower(m, cuts, p)
+    var sums = Array.empty[Double] // a level's histograms, reused from level to level
+    while (r.running) {
+      part.gradients(r.trees, r.round, p, obj)
+      var cls = 0
+      while (cls < r.k) {
+        val features = r.features(m)
+        r.trees +=
+          (if (p.growPolicy == "lossguide")
+            buildTreeLossGuide(part.binned, n, m, cuts, part.g, part.h, r.k, cls,
+              DistTrainer.sampleMask(p, pid, r.round, n), features, p, r.round)
+          else {
+            grower.beginTree(features, r.round, cls)
+            val pos = part.positions(pid, r.round, cls, p)
+            while (grower.beginLevel()) {
+              val len = grower.level.histLen + 2
+              if (sums.length < len) sums = new Array[Double](len)
+              else java.util.Arrays.fill(sums, 0, len, 0.0)
+              grower.level.accumulate(part.binned, part.g, part.h, r.k, cls, pos, sums)
+              grower.endLevel(coll.allreduce(sums, len))
+            }
+            grower.tree
+          })
+        cls += 1
+      }
+      part.replay(r.trees, p, obj)
+      val parts = part.evalParts(r.metric, p, obj)
+      r.endRound(coll.allreduce(parts, parts.length))
+    }
+    r.model(m)
+  }
+
+  private[ml] def effectiveWeights(mat: TrainMatrix, p: BoosterParams): Array[Float] = {
+    if (p.scalePosWeight != 1.0 && p.objective == "binary:logistic") {
+      val w = new Array[Float](mat.numRows)
+      var i = 0
+      while (i < mat.numRows) {
+        val base = if (mat.weights == null) 1.0f else mat.weights(i)
+        w(i) = if (mat.labels(i) == 1.0f) (base * p.scalePosWeight).toFloat else base
+        i += 1
+      }
+      w
+    } else mat.weights
+  }
+
+  private[ml] def initMargins(mat: TrainMatrix, base: Float, k: Int): Array[Float] = {
+    val out = new Array[Float](mat.numRows * k)
+    java.util.Arrays.fill(out, base)
+    if (mat.baseMargins != null) {
+      var r = 0
+      while (r < mat.numRows) {
+        var c = 0
+        while (c < k) { out(r * k + c) += mat.baseMargins(r); c += 1 }
+        r += 1
+      }
+    }
+    out
+  }
+
+  /** Folds one tree's contribution into class column `cls` in place (all
+    * rows, raw feature values). */
+  private[ml] def addTreeMargins(mat: TrainMatrix, tree: Tree, margins: Array[Float],
+      k: Int, cls: Int, missing: Float): Unit = {
+    val m = mat.numCols
+    if (mat.numRows == 0) return
+    val row = new Array[Float](m)
+    var i = 0
+    while (i < mat.numRows) {
+      System.arraycopy(mat.values, i * m, row, 0, m)
+      if (!missing.isNaN) {
+        var f = 0
+        while (f < m) { if (row(f) == missing) row(f) = Float.NaN; f += 1 }
+      }
+      margins(i * k + cls) += tree.predict(row)
+      i += 1
+    }
+  }
+
+  /** colsample_bytree's draw: a sorted subset of 0 until m from the fit's
+    * sequential rng (kept for backward-compatible models). */
+  private[ml] def sampleFeaturesSeeded(m: Int, colsample: Double,
+      rng: java.util.Random): Array[Int] = {
+    if (colsample >= 1.0) Array.range(0, m)
+    else {
+      val take = math.max(1, math.round(m * colsample).toInt)
+      val idx = Array.range(0, m)
+      var i = 0
+      while (i < take) {
+        val j = i + rng.nextInt(m - i)
+        val t = idx(i); idx(i) = idx(j); idx(j) = t
+        i += 1
+      }
+      java.util.Arrays.sort(idx, 0, take)
+      idx.take(take)
+    }
   }
 
   /** Best-first (lossguide) growth: repeatedly expand the frontier leaf

@@ -83,6 +83,30 @@ class BarrierTrainerSpec extends AnyFunSuite {
     }
   }
 
+  test("barrier fit with empty partitions (3 rows over 4 workers) finishes and grows " +
+    "DistTrainer's trees") {
+    val df = spark.createDataFrame(Seq(
+      (Vectors.dense(1.0, 2.0), 1.0),
+      (Vectors.dense(2.0, 0.5), 3.0),
+      (Vectors.dense(3.0, 1.5), 2.0))).toDF("features", "label")
+    // the fits' own input repartition: round-robin leaves workers without rows
+    val sizes = df.repartition(4).rdd.mapPartitions(it => Iterator(it.size)).collect()
+    assert(sizes.sum == 3 && sizes.contains(0), s"partition sizes ${sizes.toSeq}")
+    def fit(barrier: Boolean) = new XgboostRegressor().setNEstimators(4).setMaxDepth(2)
+      .setNumWorkers(4).setUseBarrierMode(barrier).fit(df).booster.trees
+    val dist = fit(barrier = false)
+    val bar = fit(barrier = true)
+    assert(bar.length == 4 && dist.length == 4)
+    assert(bar.exists(_.numNodes > 1), "some tree must split")
+    dist.zip(bar).zipWithIndex.foreach { case ((d, b), t) =>
+      assert(d.feature.sameElements(b.feature) && d.threshold.sameElements(b.threshold),
+        s"tree $t: DistTrainer and barrier split differently")
+      d.weight.zip(b.weight).foreach { case (x, y) =>
+        assert(math.abs(x - y) < 1e-6, s"tree $t: DistTrainer $x vs barrier $y")
+      }
+    }
+  }
+
   test("barrier and treeAggregate subsample the same rows (subsample=0.5, 3 workers)") {
     val df = mkDf(300, 29)
     def build(barrier: Boolean) = {

@@ -239,11 +239,12 @@ class BoosterSpec extends AnyFunSuite {
 
   test("auc metric: matches the hand-computed pair statistic; early stopping maximizes it") {
     // pos scores {σ(2), σ(0.5)}, neg {σ(1), σ(-1)} → 3 of 4 pairs ordered
-    val auc = EvalMetric.compute("auc",
-      Array(2f, 1f, 0.5f, -1f), Array(1f, 0f, 1f, 0f), null, 2)
+    val auc = EvalMetric.finish("auc", EvalMetric.parts("auc",
+      Array(2f, 1f, 0.5f, -1f), Array(1f, 0f, 1f, 0f), null, 2))
     assert(math.abs(auc - 0.75) < 1e-9, s"got $auc")
     // degenerate single-class eval → NaN, not a crash
-    assert(EvalMetric.compute("auc", Array(1f, 2f), Array(1f, 1f), null, 2).isNaN)
+    assert(EvalMetric.finish("auc",
+      EvalMetric.parts("auc", Array(1f, 2f), Array(1f, 1f), null, 2)).isNaN)
     assert(!EvalMetric.lowerIsBetter("auc") && EvalMetric.lowerIsBetter("logloss"))
 
     val rng = new java.util.Random(3)

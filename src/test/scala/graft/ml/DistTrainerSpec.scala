@@ -180,6 +180,12 @@ class DistTrainerSpec extends AnyFunSuite {
       missing: Boolean, weighted: Boolean, bylevel: Boolean, bynode: Boolean,
       maxLeaves: Int, monotone: Boolean)
 
+  /** A ParityCase's eval inputs: validation rows (or a validation column
+    * that marks none), early stopping after 2 rounds or none, a warm start
+    * from a 1-round model, and for K = 1 a binary:logistic objective. The
+    * cases of one objective take its metrics in turn. */
+  private final case class EvalCase(valRows: Boolean, esr: Int, warm: Boolean, binary: Boolean)
+
   private def sameTrees(what: String, a: Array[Tree], b: Array[Tree]): Unit = {
     assert(a.length == b.length, s"$what: ${a.length} vs ${b.length} trees")
     a.zip(b).zipWithIndex.foreach { case ((x, y), t) =>
@@ -210,6 +216,8 @@ class DistTrainerSpec extends AnyFunSuite {
     sameTrees("max_depth 0, single-node vs barrier", single, fit(2, barrier = true))
   }
 
+  // Each case also refits its rows with an eval pass (an EvalCase) on all
+  // three paths, which must agree on trees, bestScore and bestIteration.
   test("property: a single-node fit equals DistTrainer on one partition, with and without " +
     "histogram subtraction: K = 1-3, depth 1-6, missing values, weights, colsample_bylevel/" +
     "bynode, max_leaves, monotone constraints") {
@@ -225,8 +233,15 @@ class DistTrainerSpec extends AnyFunSuite {
       flags(4))).pureApply(Gen.Parameters.default, Seed(20261019L))
     assert(cases.map(_.k).toSet == Set(1, 2, 3) && cases.exists(_.bylevel) &&
       cases.exists(c => !c.bylevel && c.depth > 1), "the cases must cover every branch")
+    val evals = Gen.listOfN(cases.length, for {
+      flags <- Gen.listOfN(3, Gen.oneOf(false, true))
+      esr <- Gen.oneOf(0, 2)
+    } yield EvalCase(flags(0), esr, flags(1), flags(2)))
+      .pureApply(Gen.Parameters.default, Seed(20261020L))
     var split = 0
-    cases.foreach { c =>
+    var stopped = 0
+    val metricsRun = mutable.ArrayBuffer.empty[String]
+    cases.zip(evals).foreach { case (c, e) =>
       val rng = new java.util.Random(c.seed)
       // at most 8 distinct values per feature over <= 250 rows: the sketch's
       // 254 quantiles hit every rank, so both paths get the exact cuts
@@ -271,7 +286,65 @@ class DistTrainerSpec extends AnyFunSuite {
         sameTrees(s"$c: subtracted vs accumulated siblings", single, direct)
       }
       split += single.count(t => t.numNodes > 3)
+
+      // the same rows with an eval pass, on all three paths
+      val erng = new java.util.Random(c.seed ^ 0x5eedL)
+      val binary = c.k == 1 && e.binary
+      val median = data.map(_._2).sorted.apply(data.length / 2)
+      def label(y: Double) = if (binary) (if (y > median) 1.0 else 0.0) else y
+      // validation labels that follow the training signal with noise, or
+      // (adverse) go against it, so the eval score worsens and stops the fit
+      val adverse = erng.nextBoolean()
+      def valLabel(y: Double) =
+        if (c.k > 1) (if (adverse || erng.nextInt(4) == 0) (y + 1) % c.k else y)
+        else if (binary) (if (adverse || erng.nextInt(4) == 0) 1 - label(y) else label(y))
+        else if (adverse) -y
+        else y + erng.nextGaussian()
+      val trainRows = data.map { case (f, y, w) => (f, label(y), w, false) }
+      // validation features copied from training rows keep the exact and
+      // sketched cuts equal
+      val valRows = if (!e.valRows) Nil else Seq.fill(1 + erng.nextInt(c.rows / 2)) {
+        val (f, y, w) = data(erng.nextInt(data.length))
+        (f, valLabel(y), w, true)
+      }
+      val withWV = spark.createDataFrame(trainRows ++ valRows)
+        .toDF("features", "label", "weight", "isVal").coalesce(1)
+      val edf = if (c.weighted) withWV else withWV.drop("weight")
+      val metrics =
+        if (c.k > 1) Seq("mlogloss", "merror")
+        else if (binary) Seq("logloss", "error", "auc")
+        else Seq("rmse", "mae")
+      val ebp = bp.copy(numRounds = 4, objective = if (binary) "binary:logistic" else bp.objective,
+        earlyStoppingRounds = e.esr,
+        evalMetric = Some(metrics(metricsRun.count(metrics.contains) % metrics.length)))
+      metricsRun ++= ebp.evalMetric
+      val (emat, evalMat) = TrainMatrix.fromRows(edf.collect().iterator, c.weighted, true, false)
+      assert(evalMat.isDefined == e.valRows)
+      assert(BinCuts.fromMatrix(emat, Float.NaN).cuts.map(_.toSeq).toSeq ==
+        QuantileCuts.fromRdd(edf.rdd, Float.NaN).cuts.map(_.toSeq).toSeq,
+        s"$c, $e: exact and sketched cuts differ, so the paths cannot agree")
+      val init =
+        if (e.warm) Trainer.train(emat, None, ebp.copy(numRounds = 1, earlyStoppingRounds = 0)).trees
+        else Array.empty[Tree]
+      val erule = ObjectiveRule(false, "label", Some(ebp.objective), ebp.numClass, None, None)
+      val base = Trainer.train(emat, evalMat, ebp, init)
+      assert(base.bestScore.isDefined == e.valRows && base.trees.startsWith(init),
+        s"$c, $e: bestScore ${base.bestScore}")
+      if (base.trees.length < init.length + 4 * c.k) stopped += 1
+      Seq(
+        "DistTrainer" -> DistTrainer.train(edf, c.weighted, hasV = true, hasM = false, ebp, erule,
+          1, forceRepartition = false, initTrees = init),
+        "BarrierTrainer" -> BarrierTrainer.train(edf, c.weighted, hasV = true, hasM = false, ebp,
+          erule, 1, forceRepartition = false, initTrees = init)).foreach { case (path, fit) =>
+        sameTrees(s"$c, $e: single-node vs $path", base.trees, fit.trees)
+        assert(fit.bestScore == base.bestScore && fit.bestIteration == base.bestIteration,
+          s"$c, $e: $path bestScore ${fit.bestScore}, bestIteration ${fit.bestIteration} vs " +
+            s"single-node ${base.bestScore}, ${base.bestIteration}")
+      }
     }
     assert(split > 0, "some trees must grow past depth 1")
+    assert(evals.exists(!_.valRows) && evals.exists(e => e.valRows && e.esr > 0) &&
+      evals.exists(_.warm) && stopped > 0 && metricsRun.toSet.size == 7,
+      s"the eval cases must cover every branch: $evals, metrics $metricsRun")
   }
 }

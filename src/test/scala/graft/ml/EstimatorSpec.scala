@@ -798,6 +798,32 @@ class EstimatorSpec extends AnyFunSuite {
     assert(model.booster.bestScore.exists(_ < 0.5))
   }
 
+  test("a validation column that marks no row means no validation set on every training " +
+    "path: all rounds run, no best_score or best_iteration (regressor and classifier)") {
+    val rng = new scala.util.Random(13)
+    val rows = Seq.fill(2000)({
+      val f = Array.fill(3)(rng.nextDouble() * 2)
+      (Vectors.dense(f), f(0) + f(1), if (f(0) > 1.0) 1.0 else 0.0, false)
+    })
+    val df = spark.createDataFrame(rows).toDF("features", "y", "cls", "isVal")
+    Seq((1, false), (2, false), (2, true)).foreach { case (workers, barrier) =>
+      Seq(new XgboostRegressor().setLabelCol("y"), new XgboostClassifier().setLabelCol("cls"))
+        .foreach { est =>
+        est.set(est.numWorkers, workers).set(est.useBarrierMode, barrier)
+          .set(est.validationIndicatorCol, "isVal").set(est.earlyStoppingRounds, 2)
+          .set(est.nEstimators, 10)
+        val b = est match {
+          case r: XgboostRegressor => r.fit(df).booster
+          case c: XgboostClassifier => c.fit(df).booster
+        }
+        val what = s"${est.getClass.getSimpleName}, $workers workers, barrier $barrier"
+        assert(b.trees.length == 10, s"$what: ${b.trees.length} trees")
+        assert(b.bestScore.isEmpty && b.bestIteration.isEmpty,
+          s"$what: bestScore ${b.bestScore}, bestIteration ${b.bestIteration}")
+      }
+    }
+  }
+
   test("arbitraryParams objective overrides the explicit param (reference: " +
       "arbitrary keys reach xgboost last) and changes the trained model") {
     val df = spark.createDataFrame(Seq(

@@ -25,7 +25,7 @@ import org.apache.spark.sql.DataFrame
   *
   * This object holds only what differs from the single-node path: the
   * sketched cuts, the per-task matrix build and the collective's
-  * bootstrap. Trees grow depthwise, as on [[DistTrainer]].
+  * bootstrap.
   */
 object BarrierTrainer {
 
@@ -44,7 +44,7 @@ object BarrierTrainer {
     // it gathers the labels the objective is resolved from
     val rowsRdd = input.rdd
     val (sketches, labels) = QuantileCuts.sketch(rowsRdd, p0.missing, rule.countsClasses)
-    val p = ObjectiveRule.orThrow(rule.params(p0, labels)).resolved.copy(growPolicy = "depthwise")
+    val p = ObjectiveRule.orThrow(rule.params(p0, labels)).resolved
     val cutsBc = sc.broadcast(QuantileCuts.cuts(sketches, BinCuts.cutBudget(p.maxBin)))
 
     val models = rowsRdd.barrier().mapPartitions { it =>

@@ -18,6 +18,8 @@ final class BinCuts(val cuts: Array[Array[Float]]) extends Serializable {
 object BinCuts {
   val MaxCuts = 254
   val MissingBin = 255
+  /** Histogram slots per feature, one per byte bin; the missing bin's stays empty. */
+  private[ml] val MaxBins = 256
 
   /** Cut budget for a user max_bin: bins = cuts + 1, and the byte bin
     * layout (255 = missing) caps cuts at [[MaxCuts]]. */

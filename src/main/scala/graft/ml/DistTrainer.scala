@@ -55,7 +55,6 @@ import org.apache.spark.storage.StorageLevel
   * row count, the property that makes histogram GBT viable at 100 TB.
   */
 object DistTrainer {
-  private[ml] val MaxBins = 256
 
   /** C7: skip the shuffle iff the optimized plan already ends in a
     * round-robin Repartition with the target partition count — a direct
@@ -237,24 +236,4 @@ object DistTrainer {
       a
     }
   }
-
-  /** The row-subsampling draw of all three training paths (the
-    * single-node `Trainer` is partition 0): a deterministic
-    * Bernoulli(subsample) keyed by (seed, partition, round, row within the
-    * partition), so recomputed partitions and retried barrier stages
-    * sample identically, and row i of each partition draws its own coin. */
-  private[ml] def sampledRow(seed: Long, partitionId: Int, round: Int, i: Int,
-      subsample: Double): Boolean = {
-    var x = seed * 6364136223846793005L + partitionId.toLong * 9632455465461L +
-      round.toLong * 1442695040888963407L + i.toLong * 2862933555777941757L
-    x ^= (x >>> 33); x *= 0xff51afd7ed558ccdL; x ^= (x >>> 33)
-    ((x >>> 11).toDouble / (1L << 53).toDouble) < subsample
-  }
-
-  /** One partition's [[sampledRow]] draws for a round, or null when every
-    * row is used. */
-  private[ml] def sampleMask(p: BoosterParams, partitionId: Int, round: Int,
-      n: Int): Array[Boolean] =
-    if (p.subsample >= 1.0) null
-    else Array.tabulate(n)(i => sampledRow(p.seed, partitionId, round, i, p.subsample))
 }

@@ -140,9 +140,6 @@ private[ml] object FitSupport extends org.apache.spark.internal.Logging {
     val n = est.getOrDefault(est.numWorkers)
     val useExt = est.getOrDefault(est.useExternalStorage)
     val esp = est.getOrDefault(est.externalStoragePrecision)
-    if (bp.growPolicy == "lossguide" && n > 1)
-      logWarning("grow_policy=lossguide is single-node only in this build; " +
-        "distributed training grows depthwise honoring the max_leaves cap")
     val model =
       if (n <= 1) trainSingleNode(projected, hasW, hasV, hasM, bp, rule, useExt, esp, initTrees)
       else if (est.getOrDefault(est.useBarrierMode))

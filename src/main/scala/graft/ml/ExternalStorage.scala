@@ -15,9 +15,10 @@ import org.apache.spark.sql.Row
   * Peak memory during conversion is one row + the final matrix, the
   * property the reference buys with its external-memory DMatrix. Format
   * matches the reference dump: `label[:weight] idx:val idx:val …`, every
-  * number printed with `%.{precision}g` (weights ride piggybacked on the
-  * label field, `data.py:15-21`); base margins are NOT carried — the
-  * reference's spill path drops them too (`data.py:64-72`).
+  * value printed with `%.{precision}g` and every index as an integer
+  * (weights ride piggybacked on the label field, `data.py:15-21`); base
+  * margins are NOT carried — the reference's spill path drops them too
+  * (`data.py:64-72`).
   */
 object ExternalStorage {
 
@@ -51,7 +52,7 @@ object ExternalStorage {
       // branch (data.py:35-38) — densified zeros are VALUES (§1.2)
       var j = 0
       while (j < features.size) {
-        sb.append(' '); sb.append(pyG(j.toDouble, esp))
+        sb.append(' '); sb.append(j)
         sb.append(':'); sb.append(pyG(features(j), esp))
         j += 1
       }
@@ -120,7 +121,7 @@ object ExternalStorage {
           var f = 1
           while (f < fields.length) {
             val c = fields(f).indexOf(':')
-            val idx = fields(f).substring(0, c).toDouble.toInt // idx printed via %g
+            val idx = fields(f).substring(0, c).toInt
             val v = fields(f).substring(c + 1).toFloat
             if (idx >= row.length) throw new IllegalArgumentException(
               s"ragged libsvm row: index $idx, expected dim $dim")

@@ -3,8 +3,8 @@ package graft.ml
 import scala.collection.mutable.ArrayBuffer
 
 /** Split search over accumulated histograms — called by [[LevelGrower]],
-  * the depth-wise grower of all three training paths, and by `Trainer`'s
-  * lossguide growth. All math is XGBoost-style second-order:
+  * the grower of both growth policies on all three training paths. All
+  * math is XGBoost-style second-order:
   * score(G,H) = T(G)²/(H+λ) with T the L1 soft-threshold, leaf weight
   * −T(G)/(H+λ), split gain ½(scoreL+scoreR−scoreP) − γ.
   */
@@ -59,14 +59,14 @@ object SplitFinder {
     * [[childBounds]] for how bounds propagate.
     *
     * @param hist a level's histograms; this node's starts at `off`, where
-    *             off + (f * maxBins + b) * 2 holds Σg and +1 holds Σh over
+    *             off + (f * MaxBins + b) * 2 holds Σg and +1 holds Σh over
     *             its non-missing rows with bin b (read in place, not copied)
     * @param features candidate feature indices (colsample subset)
     * @param lo lower weight bound inherited from monotone ancestors
     * @param hi upper weight bound
     */
   def findBest(
-      hist: Array[Double], off: Int, maxBins: Int, cuts: BinCuts,
+      hist: Array[Double], off: Int, cuts: BinCuts,
       features: Array[Int], gNode: Double, hNode: Double,
       p: BoosterParams, lo: Double = Double.NegativeInfinity,
       hi: Double = Double.PositiveInfinity,
@@ -79,7 +79,7 @@ object SplitFinder {
       val cons = if (mono != null && f < mono.length) mono(f) else 0
       val nCuts = cuts.cuts(f).length
       if (nCuts > 0 && (allowed == null || Interactions.bit(allowed, f))) {
-        val base = off + f * maxBins * 2
+        val base = off + f * BinCuts.MaxBins * 2
         // non-missing totals for this feature → derive missing-row stats
         var gSum = 0.0
         var hSum = 0.0
@@ -218,7 +218,7 @@ object SplitFinder {
   *
   * A derived sibling is only right when parent and child accumulated the
   * same feature columns. colsample_bylevel < 1 draws a new set per level,
-  * so then every node accumulates (`subtract = false`).
+  * so then every node accumulates (`subtract = false`), as under lossguide.
   */
 private[ml] final class LevelHistograms(unit: Int) {
   private var cur = Array.empty[Double]
@@ -303,9 +303,9 @@ private[ml] final class LevelHistograms(unit: Int) {
   }
 }
 
-/** A tree's nodes in growth order, the one node table of both growers
-  * ([[LevelGrower]] and `Trainer`'s lossguide): per node its split, g/h
-  * sums, monotone weight bounds and interaction mask (null = all allowed). */
+/** A tree's nodes in growth order, [[LevelGrower]]'s node table: per node
+  * its split, g/h sums, depth, monotone weight bounds and interaction mask
+  * (null = all allowed). */
 private[ml] final class NodeTable(p: BoosterParams, m: Int) {
   val feature = new ArrayBuffer[Int]
   val binIdx = new ArrayBuffer[Int]
@@ -383,7 +383,7 @@ private[ml] final class TreeLevel(m: Int, feature: Array[Int], binIdx: Array[Int
     * g and h sums. */
   def accumulate(binned: Array[Byte], g: Array[Float], h: Array[Float], k: Int, cls: Int,
       pos: Array[Int], out: Array[Double]): Unit = {
-    val unit = m * DistTrainer.MaxBins * 2
+    val unit = m * BinCuts.MaxBins * 2
     var i = 0
     while (i < pos.length) {
       var node = pos(i)
@@ -408,7 +408,7 @@ private[ml] final class TreeLevel(m: Int, feature: Array[Int], binIdx: Array[Int
               val f = features(fi)
               val b = binned(i * m + f) & 0xff
               if (b != BinCuts.MissingBin) {
-                val idx = histBase + (f * DistTrainer.MaxBins + b) * 2
+                val idx = histBase + (f * BinCuts.MaxBins + b) * 2
                 out(idx) += gi
                 out(idx + 1) += hi
               }
@@ -432,10 +432,10 @@ private[ml] object TreeLevel {
   }
 }
 
-/** Depth-wise tree growth, the one grower of all three training paths;
-  * only the histogram source differs: a local pass summed through a
-  * [[Collective]] in [[Trainer.boost]] (the identity on one node, the
-  * socket allreduce in each barrier task), a level job in
+/** Tree growth under both growth policies, the one grower of all three
+  * training paths; only the histogram source differs: a local pass summed
+  * through a [[Collective]] in [[Trainer.boost]] (the identity on one
+  * node, the socket allreduce in each barrier task), a level job in
   * [[DistTrainer]]. Each of the two runs the level loop:
   * {{{
   * grower.beginTree(features, round, cls)
@@ -443,21 +443,33 @@ private[ml] object TreeLevel {
   * val tree = grower.tree
   * }}}
   * where `histogramsOf` sums [[TreeLevel.accumulate]] over every row.
-  * Per level the grower draws colsample_bylevel's features, picks the
-  * computed nodes ([[LevelHistograms]]), searches each node's split over
-  * its colsample_bynode subset, and appends the children; max_leaves
-  * (when > 0) caps the leaves, nodes past the budget stay leaves. Level 0
-  * always runs, as it brings the root's g/h sums: with max_depth = 0 it
-  * computes no histogram and the tree is the root leaf. */
+  * [[endLevel]] searches each node of the level over its colsample_bynode
+  * subset of the level's colsample_bylevel draw and puts the accepted
+  * splits into a frontier; [[beginLevel]] expands frontier nodes, and the
+  * children it appends are the next level. The policy picks the nodes it
+  * expands, while the leaves stay within max_leaves (when > 0):
+  *   - depthwise: every frontier node, in node order, so a level is a
+  *     depth of the tree and only the lighter child of each split
+  *     accumulates ([[LevelHistograms]]); levels stop at max_depth.
+  *   - lossguide: the frontier node of highest gain (the lower node id on
+  *     ties), so a level is one split's two children, both accumulated;
+  *     depth stops at max_depth, or 64 when max_depth is 0.
+  * Level 0 always runs, as it brings the root's g/h sums: with depthwise
+  * max_depth = 0 it computes no histogram and the tree is the root leaf. */
 private[ml] final class LevelGrower(m: Int, cuts: BinCuts, p: BoosterParams) {
-  private val unit = m * DistTrainer.MaxBins * 2
+  private val unit = m * BinCuts.MaxBins * 2
+  private val lossguide = p.growPolicy == "lossguide"
+  // lossguide's max_depth = 0 is unbounded (xgboost), capped so row walks stay bounded
+  private val maxDepth = if (lossguide && p.maxDepth <= 0) 64 else p.maxDepth
+  private val maxLeaves = if (p.maxLeaves > 0) p.maxLeaves else Int.MaxValue
   private val levels = new LevelHistograms(unit)
+  // the searched nodes' accepted splits, not yet expanded, in node order
+  private val frontier = new ArrayBuffer[(Int, SplitFinder.Split)]
   private var nodes: NodeTable = _
   private var features: Array[Int] = _
   private var levelFeats: Array[Int] = _
   private var round = 0
   private var cls = 0
-  private var depth = 0
   private var levelStart = 0 // nodes [levelStart, levelEnd) are the current level
   private var levelEnd = 0
   private var leaves = 0
@@ -465,24 +477,27 @@ private[ml] final class LevelGrower(m: Int, cuts: BinCuts, p: BoosterParams) {
 
   def beginTree(features: Array[Int], round: Int, cls: Int): Unit = {
     nodes = new NodeTable(p, m)
+    frontier.clear()
     this.features = features
     this.round = round
     this.cls = cls
-    depth = 0
     levelStart = 0
     levelEnd = 1
     leaves = 1
+    current = null
   }
 
   /** Starts the next level, or returns false when the tree is grown. */
   def beginLevel(): Boolean =
-    if (depth > 0 && (depth >= p.maxDepth || levelStart >= levelEnd)) false
+    if (current != null && !expand()) false
     else {
+      val depth = nodes.depth(levelStart)
       levelFeats = FeatureSampling.subsample(features, p.colsampleBylevel,
         FeatureSampling.levelKey(p.seed, round, cls, depth))
-      val search = depth < p.maxDepth
+      val search = depth < maxDepth
       val computeOf =
-        if (search) levels.begin(depth, levelEnd - levelStart, subtract = p.colsampleBylevel >= 1.0)
+        if (search) levels.begin(depth, levelEnd - levelStart,
+          subtract = !lossguide && p.colsampleBylevel >= 1.0)
         else Array(-1)
       current = new TreeLevel(m, nodes.feature.toArray, nodes.binIdx.toArray,
         nodes.defaultLeft.toArray, nodes.left.toArray, nodes.right.toArray, computeOf,
@@ -494,34 +509,60 @@ private[ml] final class LevelGrower(m: Int, cuts: BinCuts, p: BoosterParams) {
   def level: TreeLevel = current
 
   /** Ends the level with its histograms summed over every row, in
-    * [[TreeLevel.accumulate]]'s layout: splits each node it can and
-    * appends the children as the next level. */
+    * [[TreeLevel.accumulate]]'s layout: puts each node's best split, if
+    * any, into the frontier. */
   def endLevel(sums: Array[Double]): Unit = {
-    if (depth == 0) {
+    if (levelStart == 0) {
       nodes.gSum(0) = sums(current.histLen)
       nodes.hSum(0) = sums(current.histLen + 1)
     }
-    if (depth < p.maxDepth) {
+    if (nodes.depth(levelStart) < maxDepth) {
       levels.fill(sums)
       var s = 0
       while (s < levelEnd - levelStart) {
         val node = levelStart + s
         val nodeFeats = FeatureSampling.subsample(levelFeats, p.colsampleBynode,
           FeatureSampling.nodeKey(p.seed, round, cls, node))
-        if (p.maxLeaves <= 0 || leaves < p.maxLeaves)
-          SplitFinder.findBest(levels.hist, s * unit, DistTrainer.MaxBins, cuts, nodeFeats,
-            nodes.gSum(node), nodes.hSum(node), p, nodes.lo(node), nodes.hi(node),
-            nodes.allowed(node)).foreach { sp =>
-            nodes.split(node, sp)
-            levels.split(s, sp.hl, sp.hr)
-            leaves += 1
-          }
+        SplitFinder.findBest(levels.hist, s * unit, cuts, nodeFeats,
+          nodes.gSum(node), nodes.hSum(node), p, nodes.lo(node), nodes.hi(node),
+          nodes.allowed(node)).foreach(sp => frontier += (node -> sp))
         s += 1
       }
     }
-    levelStart = levelEnd
-    levelEnd = nodes.size
-    depth += 1
+  }
+
+  /** Expands the policy's frontier nodes and makes their children the
+    * level; false when none of them is searched. */
+  private def expand(): Boolean =
+    if (lossguide) {
+      while (leaves < maxLeaves && frontier.nonEmpty) {
+        var best = 0
+        var i = 1
+        while (i < frontier.length) {
+          if (java.lang.Double.compare(frontier(i)._2.gain, frontier(best)._2.gain) > 0) best = i
+          i += 1
+        }
+        val (node, sp) = frontier.remove(best)
+        levelStart = nodes.size
+        split(node, sp)
+        levelEnd = nodes.size
+        if (leaves < maxLeaves && nodes.depth(levelStart) < maxDepth) return true
+      }
+      false
+    } else {
+      val searched = levelStart
+      levelStart = nodes.size
+      frontier.foreach { case (node, sp) =>
+        if (leaves < maxLeaves) { split(node, sp); levels.split(node - searched, sp.hl, sp.hr) }
+      }
+      frontier.clear()
+      levelEnd = nodes.size
+      levelStart < levelEnd && nodes.depth(levelStart) < maxDepth
+    }
+
+  private def split(node: Int, sp: SplitFinder.Split): Unit = {
+    nodes.split(node, sp)
+    leaves += 1
   }
 
   def tree: Tree = nodes.toTree
@@ -568,6 +609,28 @@ object FeatureSampling {
       out
     }
   }
+}
+
+private[ml] object RowSampling {
+  /** The row-subsampling draw of all three training paths (the
+    * single-node `Trainer` is partition 0): a deterministic
+    * Bernoulli(subsample) keyed by (seed, partition, round, row within the
+    * partition), so recomputed partitions and retried barrier stages
+    * sample identically, and row i of each partition draws its own coin. */
+  def sampledRow(seed: Long, partitionId: Int, round: Int, i: Int,
+      subsample: Double): Boolean = {
+    var x = seed * 6364136223846793005L + partitionId.toLong * 9632455465461L +
+      round.toLong * 1442695040888963407L + i.toLong * 2862933555777941757L
+    x ^= (x >>> 33); x *= 0xff51afd7ed558ccdL; x ^= (x >>> 33)
+    ((x >>> 11).toDouble / (1L << 53).toDouble) < subsample
+  }
+
+  /** One partition's [[sampledRow]] draws for a round, or null when every
+    * row is used. */
+  def sampleMask(p: BoosterParams, partitionId: Int, round: Int,
+      n: Int): Array[Boolean] =
+    if (p.subsample >= 1.0) null
+    else Array.tabulate(n)(i => sampledRow(p.seed, partitionId, round, i, p.subsample))
 }
 
 /** One worker's rows and their per-round state, the same on every
@@ -634,7 +697,7 @@ private[ml] final class PartState(
   def positions(pid: Int, round: Int, cls: Int, p: BoosterParams): Array[Int] = {
     if (pos == null || posRound != round || posCls != cls) {
       if (pos == null) pos = new Array[Int](train.numRows)
-      TreeLevel.resetPositions(pos, DistTrainer.sampleMask(p, pid, round, train.numRows))
+      TreeLevel.resetPositions(pos, RowSampling.sampleMask(p, pid, round, train.numRows))
       posRound = round
       posCls = cls
     }
@@ -704,11 +767,10 @@ private[ml] final class Rounds(p: BoosterParams, obj: Objective, initTrees: Arra
   * computes the gradients from the round-start margins, grows K trees
   * with [[LevelGrower]] over the allreduced level histograms, folds them
   * into the margins and allreduces the eval parts. [[DistTrainer]] drives
-  * the same [[Rounds]] from the driver with a level job per level.
-  * Lossguide growth is the single-node path's alone.
+  * the same [[Rounds]] from the driver with a level job per level. Both
+  * growth policies run on every path.
   */
 object Trainer {
-  import DistTrainer.MaxBins
 
   /** The single-node fit: exact cuts, no communication. Runs inside the one
     * task of `FitSupport.trainSingleNode`, after `repartition(1)`. */
@@ -731,7 +793,6 @@ object Trainer {
       p: BoosterParams, initTrees: Array[Tree]): BoosterModel = {
     val obj = Objective.fromName(p.objective)
     val r = new Rounds(p, obj, initTrees)
-    val n = part.train.numRows
     val m = cuts.numFeatures
     val grower = new LevelGrower(m, cuts, p)
     var sums = Array.empty[Double] // a level's histograms, reused from level to level
@@ -739,23 +800,16 @@ object Trainer {
       part.gradients(r.trees, r.round, p, obj)
       var cls = 0
       while (cls < r.k) {
-        val features = r.features(m)
-        r.trees +=
-          (if (p.growPolicy == "lossguide")
-            buildTreeLossGuide(part.binned, n, m, cuts, part.g, part.h, r.k, cls,
-              DistTrainer.sampleMask(p, pid, r.round, n), features, p, r.round)
-          else {
-            grower.beginTree(features, r.round, cls)
-            val pos = part.positions(pid, r.round, cls, p)
-            while (grower.beginLevel()) {
-              val len = grower.level.histLen + 2
-              if (sums.length < len) sums = new Array[Double](len)
-              else java.util.Arrays.fill(sums, 0, len, 0.0)
-              grower.level.accumulate(part.binned, part.g, part.h, r.k, cls, pos, sums)
-              grower.endLevel(coll.allreduce(sums, len))
-            }
-            grower.tree
-          })
+        grower.beginTree(r.features(m), r.round, cls)
+        val pos = part.positions(pid, r.round, cls, p)
+        while (grower.beginLevel()) {
+          val len = grower.level.histLen + 2
+          if (sums.length < len) sums = new Array[Double](len)
+          else java.util.Arrays.fill(sums, 0, len, 0.0)
+          grower.level.accumulate(part.binned, part.g, part.h, r.k, cls, pos, sums)
+          grower.endLevel(coll.allreduce(sums, len))
+        }
+        r.trees += grower.tree
         cls += 1
       }
       part.replay(r.trees, p, obj)
@@ -828,95 +882,5 @@ object Trainer {
       java.util.Arrays.sort(idx, 0, take)
       idx.take(take)
     }
-  }
-
-  /** Best-first (lossguide) growth: repeatedly expand the frontier leaf
-    * with the highest split gain until max_leaves (or no positive gain
-    * remains). Per-node histograms come from a scan over the node's rows;
-    * with max_depth > 0 the depth bound still applies (xgboost treats
-    * max_depth=0 as unbounded under lossguide — capped at 64 here so row
-    * routing stays bounded). Single-node path only: the distributed
-    * trainers run depthwise with the max_leaves cap and FitSupport warns
-    * on the combination. */
-  private def buildTreeLossGuide(
-      binned: Array[Byte], n: Int, m: Int, cuts: BinCuts,
-      g: Array[Float], h: Array[Float], k: Int, cls: Int, sampled: Array[Boolean],
-      features: Array[Int], p: BoosterParams, round: Int): Tree = {
-
-    val nodes = new NodeTable(p, m)
-    val positions = new Array[Int](n)
-    TreeLevel.resetPositions(positions, sampled)
-    var gRoot = 0.0
-    var hRoot = 0.0
-    var i = 0
-    while (i < n) {
-      if (positions(i) == 0) { gRoot += g(i * k + cls); hRoot += h(i * k + cls) }
-      i += 1
-    }
-    nodes.gSum(0) = gRoot
-    nodes.hSum(0) = hRoot
-    val maxLeaves = if (p.maxLeaves > 0) p.maxLeaves else Int.MaxValue
-    val depthCap = if (p.maxDepth > 0) p.maxDepth else 64
-
-    def nodeHist(node: Int, feats: Array[Int]): Array[Double] = {
-      val hist = new Array[Double](m * MaxBins * 2)
-      var r = 0
-      while (r < n) {
-        if (positions(r) == node) {
-          val rowBase = r * m
-          var fi = 0
-          while (fi < feats.length) {
-            val f = feats(fi)
-            val b = binned(rowBase + f) & 0xff
-            if (b != BinCuts.MissingBin) {
-              val idx = (f * MaxBins + b) * 2
-              hist(idx) += g(r * k + cls)
-              hist(idx + 1) += h(r * k + cls)
-            }
-            fi += 1
-          }
-        }
-        r += 1
-      }
-      hist
-    }
-
-    def candidate(node: Int): Option[(Double, Int, SplitFinder.Split)] = {
-      if (nodes.depth(node) >= depthCap) return None
-      val levelFeats = FeatureSampling.subsample(features, p.colsampleBylevel,
-        FeatureSampling.levelKey(p.seed, round, cls, nodes.depth(node)))
-      val nodeFeats = FeatureSampling.subsample(levelFeats, p.colsampleBynode,
-        FeatureSampling.nodeKey(p.seed, round, cls, node))
-      SplitFinder.findBest(nodeHist(node, levelFeats), 0, MaxBins, cuts, nodeFeats,
-        nodes.gSum(node), nodes.hSum(node), p,
-        nodes.lo(node), nodes.hi(node), nodes.allowed(node)).map(sp => (sp.gain, node, sp))
-    }
-
-    // highest gain expands first; lower node id breaks ties deterministically
-    val queue = scala.collection.mutable.PriorityQueue.empty[(Double, Int, SplitFinder.Split)](
-      Ordering.by(t => (t._1, -t._2)))
-    candidate(0).foreach(queue.enqueue(_))
-    var leaves = 1
-    while (queue.nonEmpty && leaves < maxLeaves) {
-      val (_, node, sp) = queue.dequeue()
-      nodes.split(node, sp)
-      val l = nodes.left(node)
-      val r = nodes.right(node)
-      i = 0
-      while (i < n) {
-        if (positions(i) == node) {
-          val b = binned(i * m + sp.feature) & 0xff
-          val goLeft = if (b == BinCuts.MissingBin) sp.defaultLeft else b <= sp.binIdx
-          positions(i) = if (goLeft) l else r
-        }
-        i += 1
-      }
-      leaves += 1
-      if (leaves < maxLeaves) {
-        candidate(l).foreach(queue.enqueue(_))
-        candidate(r).foreach(queue.enqueue(_))
-      }
-    }
-    nodes.toTree
   }
 }

@@ -118,8 +118,8 @@ trait XGBoostParams extends Params with org.apache.spark.internal.Logging {
     "effective value at 255 (values above are clamped with a warning)",
     ParamValidators.gtEq(2))
   final val growPolicy = new Param[String](this, "growPolicy",
-    "depthwise | lossguide (lossguide = best-gain-first growth; " +
-    "distributed training runs depthwise with the maxLeaves cap and warns)",
+    "depthwise | lossguide (lossguide = best-gain-first growth, one split per " +
+    "histogram pass; maxDepth 0 = depth 64), the same on every training path",
     ParamValidators.inArray(Array("depthwise", "lossguide")))
   final val maxLeaves = new IntParam(this, "maxLeaves",
     "max leaves per tree (0 = unlimited)", ParamValidators.gtEq(0))

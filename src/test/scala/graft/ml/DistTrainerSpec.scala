@@ -217,7 +217,8 @@ class DistTrainerSpec extends AnyFunSuite {
   }
 
   // Each case also refits its rows with an eval pass (an EvalCase) on all
-  // three paths, which must agree on trees, bestScore and bestIteration.
+  // three paths, which must agree on trees, bestScore and bestIteration, and
+  // draws its grow policy (depthwise or lossguide).
   test("property: a single-node fit equals DistTrainer on one partition, with and without " +
     "histogram subtraction: K = 1-3, depth 1-6, missing values, weights, colsample_bylevel/" +
     "bynode, max_leaves, monotone constraints") {
@@ -238,10 +239,13 @@ class DistTrainerSpec extends AnyFunSuite {
       esr <- Gen.oneOf(0, 2)
     } yield EvalCase(flags(0), esr, flags(1), flags(2)))
       .pureApply(Gen.Parameters.default, Seed(20261020L))
+    val policies = Gen.listOfN(cases.length, Gen.oneOf("depthwise", "lossguide"))
+      .pureApply(Gen.Parameters.default, Seed(20261021L))
+    assert(policies.toSet == Set("depthwise", "lossguide"), s"both policies must run: $policies")
     var split = 0
     var stopped = 0
     val metricsRun = mutable.ArrayBuffer.empty[String]
-    cases.zip(evals).foreach { case (c, e) =>
+    cases.zip(evals).zip(policies).foreach { case ((c, e), policy) =>
       val rng = new java.util.Random(c.seed)
       // at most 8 distinct values per feature over <= 250 rows: the sketch's
       // 254 quantiles hit every rank, so both paths get the exact cuts
@@ -264,7 +268,7 @@ class DistTrainerSpec extends AnyFunSuite {
         numClass = if (c.k == 1) 0 else c.k,
         colsampleBylevel = if (c.bylevel) 0.5 else 1.0,
         colsampleBynode = if (c.bynode) 0.5 else 1.0,
-        maxLeaves = c.maxLeaves,
+        maxLeaves = c.maxLeaves, growPolicy = policy,
         monotoneConstraints = if (c.monotone) Array.fill(c.m)(rng.nextInt(3) - 1) else null)
       val (mat, _) = TrainMatrix.fromRows(df.collect().iterator, c.weighted, false, false)
       val cuts = BinCuts.fromMatrix(mat, Float.NaN)

@@ -339,6 +339,10 @@ class EstimatorSpec extends AnyFunSuite {
     loss.booster.trees.foreach(t => assert(t.left.count(_ < 0) <= 6))
     val lp = loss.transform(df).select("prediction").collect().map(_.getDouble(0))
     assert(lp.forall(p => !p.isNaN))
+    // distributed lossguide grows best-first under the same cap
+    val dist = new XgboostRegressor().setNEstimators(10).setNumWorkers(2)
+      .setGrowPolicy("lossguide").setMaxLeaves(6).setMaxDepth(20).fit(df)
+    dist.booster.trees.foreach(t => assert(t.left.count(_ < 0) <= 6))
   }
 
   test("arbitraryParams honors the newly implemented xgboost keys") {

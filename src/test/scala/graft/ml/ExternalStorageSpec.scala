@@ -65,6 +65,25 @@ class ExternalStorageSpec extends AnyFunSuite {
     }
   }
 
+  test("spill → reload keeps feature indices at or past 10^precision: 102 and 150 " +
+      "features at precision 2") {
+    Seq(102, 150).foreach { m =>
+      // one- and two-digit values: exact at 2 significant digits
+      val rows = (0 until 3).map { i =>
+        org.apache.spark.sql.Row(Vectors.dense(Array.tabulate(m)(j => ((i + j) % 90 + 1).toDouble)),
+          i.toDouble)
+      }
+      val (train, _) = ExternalStorage.buildMatrices(
+        rows.iterator, hasWeight = false, hasValidation = false, hasMargin = false, esp = 2)
+      assert(train.numRows == 3 && train.numCols == m, s"$m features: ${train.numCols} columns")
+      (0 until 3).foreach { i =>
+        (0 until m).foreach { j =>
+          assert(train(i, j) == ((i + j) % 90 + 1).toFloat, s"$m features: row $i, feature $j")
+        }
+      }
+    }
+  }
+
   test("end-to-end: external-storage training matches in-memory exactly when " +
       "values round-trip at the spill precision (reference data_test.py:84-122 " +
       "uses short-decimal fixtures for the same reason)") {
